@@ -314,13 +314,6 @@ def deserialize(df, fmt: str, payload_col: str = "payload", keep_cols: list[str]
     return df.mapInPandas(_parse, out_schema)
 
 
-def sample_df_from_payloads(spark, payloads: list[str], fmt: str):
-    """Convenience for tests: parse payload strings into a sample DataFrame."""
-    df = spark.createDataFrame([(p,) for p in payloads], "payload string")
-    parsed = deserialize(df, fmt)
-    return parsed.filter(F.col("timestamp").isNotNull())
-
-
 # ---------------------------------------------------------------------------
 # expression tier (JVM-side; for catalog queries with bounded-precision data)
 # ---------------------------------------------------------------------------

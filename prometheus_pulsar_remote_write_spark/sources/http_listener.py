@@ -12,9 +12,10 @@ are invisible to the source's listing), which is exactly the layout
 remote-write at this listener and the Spark pipeline consumes it with no
 format shim.
 
-Stdlib-only (http.server) and validation-first: the body must snappy-
-decompress and proto-parse before it is spooled, so poison never enters
-the stream (the reference's 400 path). The listener is a dev/test-scale
+Built on the stdlib's http.server, it never imports Spark, and it is
+validation-first: the body must decode whole (``prompb.decode_body``)
+before it is spooled, so poison never enters the stream (the
+reference's 400 path). The listener is a dev/test-scale
 receiver; a production deployment would terminate HTTP at any
 load-balanced fleet writing the same spool (or object store) layout.
 """
@@ -29,7 +30,7 @@ import time
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from . import prompb, snappy_codec
+from . import prompb
 
 
 class SystemClock:
@@ -203,10 +204,7 @@ class RemoteWriteListener:
                 n = int(self.headers.get("Content-Length", "0"))
                 body = self.rfile.read(n)
                 try:
-                    raw = snappy_codec.decompress(body)
-                    req = prompb.decode_write_request(raw)
-                    if req is None:
-                        raise ValueError("not a WriteRequest")
+                    prompb.decode_body(body)
                 except Exception:
                     with outer._lock:
                         outer.rejected += 1

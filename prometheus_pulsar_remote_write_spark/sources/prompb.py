@@ -1,4 +1,4 @@
-"""Dependency-free codec for the Prometheus remote-write protobuf.
+"""Codec for the Prometheus remote-write protobuf and its HTTP body.
 
 The wire schema (public prometheus/prompb/types.proto + remote.proto):
 
@@ -16,13 +16,19 @@ still decode. The decoded Python shape matches WRITE_REQUEST_SCHEMA:
     {"timeseries": [{"labels": [{"name":..., "value":...}, ...],
                      "samples": [{"value":..., "timestamp":...}, ...]}]}
 
-This mirrors what the reference decodes at pkg/app/produce.go:139-140 and
-re-encodes at pkg/remote/write.go:184-192.
+An HTTP body is snappy(proto(WriteRequest)): the reference decodes it at
+pkg/app/produce.go:132-140 and re-encodes it at pkg/remote/write.go:184-192.
+``decode_body`` and ``encode_body`` are the one place that format is
+spelled out; every edge (listener, source, sink) calls them. They live
+here, not next to the Spark operators, so that the listener never
+imports Spark.
 """
 
 from __future__ import annotations
 
 import struct
+
+from . import snappy_codec
 
 
 # --- low-level wire helpers -------------------------------------------------
@@ -70,22 +76,14 @@ def _int64_to_varint(n: int) -> bytes:
     return _write_varint(n)
 
 
-def _skip_field(data: bytes, pos: int, wire_type: int) -> int:
-    if wire_type == 0:  # varint
-        _, pos = _read_varint(data, pos)
-        return pos
-    if wire_type == 1:  # fixed64
-        return pos + 8
-    if wire_type == 2:  # length-delimited
-        length, pos = _read_varint(data, pos)
-        return pos + length
-    if wire_type == 5:  # fixed32
-        return pos + 4
-    raise ValueError(f"prompb: unsupported wire type {wire_type}")
+_FIXED_WIDTH = {1: 8, 5: 4}  # wire type -> bytes (fixed64, fixed32)
 
 
 def _fields(data: bytes):
-    """Yield (field_number, wire_type, value_bytes_or_int) over a message."""
+    """Yield (field_number, wire_type, value_bytes_or_int) over a message.
+
+    A field that runs past the end of its message raises ``ValueError``:
+    a truncated body is refused whole, never half-decoded."""
     pos = 0
     n = len(data)
     while pos < n:
@@ -93,18 +91,17 @@ def _fields(data: bytes):
         field, wire = key >> 3, key & 0x07
         if wire == 0:
             value, pos = _read_varint(data, pos)
-        elif wire == 1:
-            value = data[pos : pos + 8]
-            pos += 8
-        elif wire == 2:
-            length, pos = _read_varint(data, pos)
-            value = data[pos : pos + length]
-            pos += length
-        elif wire == 5:
-            value = data[pos : pos + 4]
-            pos += 4
         else:
-            raise ValueError(f"prompb: unsupported wire type {wire}")
+            if wire == 2:  # length-delimited
+                length, pos = _read_varint(data, pos)
+            elif wire in _FIXED_WIDTH:
+                length = _FIXED_WIDTH[wire]
+            else:
+                raise ValueError(f"prompb: unsupported wire type {wire}")
+            end = pos + length
+            if end > n:
+                raise ValueError(f"prompb: field {field} runs past its message")
+            value, pos = data[pos:end], end
         yield field, wire, value
 
 
@@ -178,15 +175,31 @@ def _encode_sample(sample: dict) -> bytes:
 
 def _encode_timeseries(ts: dict) -> bytes:
     out = bytearray()
-    for label in ts.get("labels") or []:
+    for label in ts["labels"]:
         out += _len_delimited(1, _encode_label(label))
-    for sample in ts.get("samples") or []:
+    for sample in ts["samples"]:
         out += _len_delimited(2, _encode_sample(sample))
     return bytes(out)
 
 
 def encode_write_request(req: dict) -> bytes:
     out = bytearray()
-    for ts in req.get("timeseries") or []:
+    for ts in req["timeseries"]:
         out += _len_delimited(1, _encode_timeseries(ts))
     return bytes(out)
+
+
+# --- the HTTP body: snappy(proto(WriteRequest)) ---------------------------
+
+
+def decode_body(body: bytes) -> dict:
+    """A remote-write HTTP body -> the WriteRequest dict. Raises
+    ``ValueError`` when either layer is malformed (the reference's 400)."""
+    return decode_write_request(snappy_codec.decompress(body))
+
+
+def encode_body(timeseries) -> bytes:
+    """Time series -> a remote-write HTTP body. Each series and each of
+    its labels and samples may be a dict or a Spark Row: only item access
+    (``ts["labels"]``, ``label["name"]``, ...) is used."""
+    return snappy_codec.compress(encode_write_request({"timeseries": timeseries}))

@@ -11,9 +11,10 @@ Egress (A4, reference pkg/remote/write.go:184-196): ``encode_remote_write``
 renders nested WriteRequest rows back to snappy(proto) bodies ready to POST.
 
 Both are Arrow-batched mapInPandas stages: narrow, no shuffle, scale with
-input partitions. The heavy lifting per row is pure-Python codec work,
-which is exactly the kind of per-record transcoding the reference also
-does once per request.
+input partitions. Per row they call ``prompb.decode_body`` /
+``prompb.encode_body``, the one spelling of the body format: protobuf in
+Python, snappy in pyarrow. That is the per-request transcoding the
+reference also does.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..schema import TIMESERIES_SCHEMA
-from . import prompb, snappy_codec
+from . import prompb
 
 
 def _decoded_schema(keep_fields: list[T.StructField]) -> T.StructType:
@@ -52,8 +53,7 @@ def decode_remote_write(
             for i, body in enumerate(pdf[body_col]):
                 base = {c: pdf[c].iloc[i] for c in keep_cols}
                 try:
-                    raw = snappy_codec.decompress(bytes(body))
-                    req = prompb.decode_write_request(raw)
+                    req = prompb.decode_body(bytes(body))
                     base.update(timeseries=req["timeseries"], decode_error=None)
                 except Exception as exc:  # 400-path: keep the poison visible
                     base.update(timeseries=None, decode_error=str(exc))
@@ -79,16 +79,7 @@ def encode_remote_write(
             rows = []
             for i, ts_list in enumerate(pdf[timeseries_col]):
                 base = {c: pdf[c].iloc[i] for c in keep_cols}
-                req = {
-                    "timeseries": [
-                        {
-                            "labels": [dict(l) for l in ts["labels"]],
-                            "samples": [dict(s) for s in ts["samples"]],
-                        }
-                        for ts in ts_list
-                    ]
-                }
-                base["body"] = snappy_codec.compress(prompb.encode_write_request(req))
+                base["body"] = prompb.encode_body(ts_list)
                 rows.append(base)
             yield pd.DataFrame(rows, columns=names)
 

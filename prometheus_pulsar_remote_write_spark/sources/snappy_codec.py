@@ -1,24 +1,22 @@
-"""Dependency-free snappy block-format codec.
+"""Snappy block-format codec for the remote-write HTTP bodies, on pyarrow.
 
 The reference's HTTP edges are snappy-framed (decode on ingest:
 pkg/app/produce.go:132; encode on egress: pkg/remote/write.go:190-192).
-python-snappy is not in this environment, so this implements the public
-snappy *block* format (google/snappy format_description.txt):
+A block (google/snappy format_description.txt) opens with its
+uncompressed length as a little-endian varint, then copy and literal
+elements; ``pyarrow.Codec("snappy")`` reads and writes that format.
 
-  preamble: uncompressed length, little-endian varint
-  elements: tag byte, low 2 bits select
-    00 literal  (len-1 in tag>>2, or 60..63 => next 1..4 LE bytes)
-    01 copy, 1-byte offset (len = ((tag>>2)&7)+4, off = (tag>>5)<<8 | byte)
-    10 copy, 2-byte offset (len = (tag>>2)+1, off = 2 LE bytes)
-    11 copy, 4-byte offset (len = (tag>>2)+1, off = 4 LE bytes)
-
-``decompress`` handles the full element set (so real Prometheus senders
-work). ``compress`` emits literal-only output -- valid snappy that any
-decoder accepts, traded for zero match-search cost in Python; byte-level
-compression ratio is not a correctness property of the reference.
+pyarrow wants the uncompressed size from the caller, and zero-pads the
+output when it is given a larger one. So ``decompress`` reads the
+preamble itself, refuses a claim that no body of this length can
+decode to, and passes pyarrow exactly the claimed size.
 """
 
 from __future__ import annotations
+
+import pyarrow as pa
+
+_CODEC = pa.Codec("snappy")
 
 
 def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
@@ -37,96 +35,21 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
             raise ValueError("snappy: varint too long")
 
 
-def _write_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def decompress(data: bytes) -> bytes:
-    expected_len, pos = _read_varint(data, 0)
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 0x03
-        if kind == 0:  # literal
-            length = tag >> 2
-            if length >= 60:
-                extra = length - 59
-                if pos + extra > n:
-                    raise ValueError("snappy: truncated literal length")
-                length = int.from_bytes(data[pos : pos + extra], "little")
-                pos += extra
-            length += 1
-            if pos + length > n:
-                raise ValueError("snappy: truncated literal")
-            out += data[pos : pos + length]
-            pos += length
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            length = ((tag >> 2) & 0x07) + 4
-            if pos >= n:
-                raise ValueError("snappy: truncated copy-1")
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            length = (tag >> 2) + 1
-            if pos + 2 > n:
-                raise ValueError("snappy: truncated copy-2")
-            offset = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            length = (tag >> 2) + 1
-            if pos + 4 > n:
-                raise ValueError("snappy: truncated copy-4")
-            offset = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("snappy: bad copy offset")
-        # overlapping copies are legal and must be applied byte-serially
-        start = len(out) - offset
-        for i in range(length):
-            out.append(out[start + i])
-    if len(out) != expected_len:
-        raise ValueError(f"snappy: length mismatch {len(out)} != {expected_len}")
-    return bytes(out)
-
-
-_MAX_LITERAL = (1 << 32) - 1
+    """One snappy block -> its bytes; ``ValueError`` on any malformed block."""
+    size, pos = _read_varint(data, 0)
+    # No element expands more than a 3-byte copy writing 64 bytes, so a
+    # larger claim is forged: refuse it before allocating anything for it.
+    if size * 3 > (len(data) - pos) * 64:
+        raise ValueError(
+            f"snappy: preamble claims {size} bytes from {len(data) - pos} input bytes"
+        )
+    try:
+        return _CODEC.decompress(data, decompressed_size=size, asbytes=True)
+    except OSError as exc:
+        raise ValueError(f"snappy: {exc}") from exc
 
 
 def compress(data: bytes) -> bytes:
-    """Literal-only snappy encoding (valid per spec, no back-references)."""
-    out = bytearray(_write_varint(len(data)))
-    pos = 0
-    n = len(data)
-    if n == 0:
-        return bytes(out)
-    while pos < n:
-        chunk = min(n - pos, _MAX_LITERAL)
-        length = chunk - 1
-        if length < 60:
-            out.append(length << 2)
-        elif length < (1 << 8):
-            out.append(60 << 2)
-            out += length.to_bytes(1, "little")
-        elif length < (1 << 16):
-            out.append(61 << 2)
-            out += length.to_bytes(2, "little")
-        elif length < (1 << 24):
-            out.append(62 << 2)
-            out += length.to_bytes(3, "little")
-        else:
-            out.append(63 << 2)
-            out += length.to_bytes(4, "little")
-        out += data[pos : pos + chunk]
-        pos += chunk
-    return bytes(out)
+    """Bytes -> one snappy block (preamble, then copy and literal elements)."""
+    return _CODEC.compress(data, asbytes=True)

@@ -11,21 +11,25 @@ Spark mapping:
     -> deserialize (C4)            # poison -> DLQ, stream continues (B9)
     -> batching                    # D1 (see batcher.py)
     -> foreachBatch(RemoteWriteSink)
-         nest_samples + encode     # B2/B3 + proto+snappy (A4)
-         POST per (tenant, batch)  # D2 fan-out
+         post_batches_distributed  # on the executors, per (tenant, batch):
+           nest_samples + encode   #   B2/B3 + prompb.encode_body (A4)
+           POST                    #   D2 fan-out
          recoverable error  -> raise => micro-batch replayed (D5):
                                checkpoint does not advance, intake halts
-         unrecoverable      -> DLQ file + continue (D6): ack-and-drop
+         unrecoverable      -> the rejected body to a DLQ file + continue
+                               (D6): ack-and-drop
 
-Per-tenant requests within a micro-batch are independent HTTP calls, so a
-1000-executor cluster fans out exactly like the reference's per-tenant
-goroutines -- but partitioned, not single-threaded.
+There is one delivery path. Per-tenant requests within a micro-batch are
+independent HTTP calls made where the data is, so a 1000-executor cluster
+fans out exactly like the reference's per-tenant goroutines -- but
+partitioned, not single-threaded. Only small status rows (plus the body of
+a rejected batch) come back to the driver.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import time
 import uuid
 from dataclasses import dataclass, field
 
@@ -34,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.serializers import deserialize
 from ..operators.flatten import nest_samples
-from ..sources import prompb, snappy_codec
+from ..sources import prompb
 
 
 class RecoverableError(Exception):
@@ -62,48 +66,6 @@ def parse_samples(messages: DataFrame, fmt: str = "json") -> DataFrame:
     )
 
 
-def split_poison(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
-    good = parsed.filter(F.col("timestamp").isNotNull()).drop("payload")
-    poison = parsed.filter(F.col("timestamp").isNull()).select("payload")
-    return good, poison
-
-
-def build_write_request_bodies(batch_df: DataFrame) -> list:
-    """B2/B3 + A4 encode: one WriteRequest body per (tenant, batch_seq).
-
-    Returns [(tenant_id, batch_seq, body_bytes, n_samples)]; the nest and
-    label sort run distributed, only the final bodies come to the driver
-    (bounded: batch_size samples per body).
-    """
-    from ..operators.flatten import sorted_label_entries
-
-    with_labels = batch_df.withColumn(
-        "labels", F.from_json("labels_json", "map<string,string>")
-    )
-    nested = nest_samples(with_labels, ["tenant_id", "batch_seq"])
-    rows = nested.collect()
-    out = []
-    for row in rows:
-        req = {
-            "timeseries": [
-                {
-                    "labels": [{"name": l["name"], "value": l["value"]} for l in ts["labels"]],
-                    "samples": [
-                        {"value": s["value"], "timestamp": s["timestamp"]}
-                        for s in ts["samples"]
-                    ],
-                }
-                for ts in row.timeseries
-            ]
-        }
-        body = snappy_codec.compress(prompb.encode_write_request(req))
-        out.append((row.tenant_id, row.batch_seq, body, len(row.timeseries)))
-    # deterministic POST order so a partially-failed attempt settles the
-    # same prefix on every replay
-    out.sort(key=lambda t: (t[0], t[1]))
-    return out
-
-
 @dataclass
 class RemoteWriteSink:
     """A4 + D2/D5/D6: per-tenant POST with retry/DLQ semantics.
@@ -112,20 +74,17 @@ class RemoteWriteSink:
     for a real `requests.post` in production. 5xx/exception => Recoverable
     (raise, batch replays); 4xx => unrecoverable (DLQ, continue).
 
-    Default delivery is EXECUTOR-SIDE (``post_batches_distributed``): each
+    Delivery is EXECUTOR-SIDE (``post_batches_distributed``): each
     (tenant, batch) encodes and POSTs inside the partition that holds it,
     and only small status rows return to the driver -- the shape that
-    survives 1000 executors. ``distributed=False`` keeps the serial
-    driver-side loop for debugging (bounded but driver-resident).
-    ``post_fn`` must be picklable in distributed mode (cloudpickle ships
-    lambdas/closures fine; closure *mutations* stay on the executor).
+    survives 1000 executors. ``post_fn`` must be picklable (cloudpickle
+    ships lambdas/closures fine; closure *mutations* stay on the executor).
     """
 
     url: str
     dlq_dir: str
     post_fn: object = None
     batch_size: int = 100
-    distributed: bool = True
     send_timeout_s: float = 30.0  # reference --send-timeout (consume.go:40-41)
     user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0"
     sent: dict = field(default_factory=dict)   # tenant -> samples sent
@@ -144,22 +103,6 @@ class RemoteWriteSink:
         os.makedirs(self._ledger(), exist_ok=True)
         with open(self._marker(epoch_id, tenant_id, batch_seq), "w"):
             pass
-
-    def _post(self, tenant_id: str, body: bytes) -> int:
-        headers = {
-            "Content-Encoding": "snappy",
-            "Content-Type": "application/x-protobuf",
-            "User-Agent": self.user_agent,
-        }
-        if tenant_id:
-            headers["X-Scope-OrgID"] = tenant_id  # reference write.go:83-94
-        if self.post_fn is not None:
-            return self.post_fn(self.url, body, headers)
-        import requests
-
-        return requests.post(
-            self.url, data=body, headers=headers, timeout=self.send_timeout_s
-        ).status_code
 
     def _settled_pairs(self, epoch_id: int) -> set:
         """(tenant_id, batch_seq) pairs already 2xx'd or DLQ'd in a prior
@@ -184,68 +127,32 @@ class RemoteWriteSink:
             fh.write(body)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        """Encode+POST on the executors (``post_batches_distributed``), then
+        apply the reference's D5/D6 policy on the returned status rows.
+
+        A replayed micro-batch (after a RecoverableError aborted a previous
+        attempt) must not re-POST batches that already got a 2xx or were
+        DLQ'd: the reference only retains un-acked samples
+        (write.go:208-236). batch_seq is deterministic per epoch
+        (row_number over a stable sort), so settled batches are filtered
+        out before the POST wave, and successes/DLQs settle before any
+        RecoverableError raises."""
         from .batcher import microbatch_batches
 
-        batched = microbatch_batches(batch_df, self.batch_size)
-        if self.distributed:
-            return self._deliver_distributed(batched, epoch_id)
-        for tenant_id, batch_seq, body, n in build_write_request_bodies(batched):
-            # A replayed micro-batch (after a RecoverableError aborted a
-            # previous attempt) must not re-POST batches that already got a
-            # 2xx or were DLQ'd: the reference only retains un-acked samples
-            # (write.go:208-236). batch_seq is deterministic per epoch
-            # (row_number over a stable sort), so the marker identifies the
-            # same batch across attempts.
-            if os.path.exists(self._marker(epoch_id, tenant_id, batch_seq)):
-                continue
-            if self.metrics is not None:
-                self.metrics.count_received(tenant_id, n)
-            try:
-                if self.metrics is not None:
-                    with self.metrics.time_send(tenant_id):
-                        status = self._post(tenant_id, body)
-                else:
-                    status = self._post(tenant_id, body)
-            except Exception as exc:  # transport error: recoverable
-                if self.metrics is not None:
-                    self.metrics.count_retry(tenant_id)
-                raise RecoverableError(str(exc))
-            if status >= 500:  # D5: recoverable -> replay micro-batch
-                if self.metrics is not None:
-                    self.metrics.count_retry(tenant_id)
-                raise RecoverableError(f"HTTP {status} for tenant {tenant_id!r}")
-            if status >= 400:  # D6: unrecoverable -> DLQ + continue
-                self._dlq_write(epoch_id, tenant_id, batch_seq, body)
-                self.failed[tenant_id] = self.failed.get(tenant_id, 0) + n
-                if self.metrics is not None:
-                    self.metrics.count_failed(tenant_id, n)
-                self._settle(epoch_id, tenant_id, batch_seq)  # ack-and-drop
-                continue
-            self.sent[tenant_id] = self.sent.get(tenant_id, 0) + n
-            if self.metrics is not None:
-                self.metrics.count_sent(tenant_id, n)
-            self._settle(epoch_id, tenant_id, batch_seq)
-
-    def _key_expr(self):
-        return F.concat_ws(
-            "\x00", F.col("tenant_id"), F.col("batch_seq").cast("string")
-        )
-
-    def _deliver_distributed(self, batched: DataFrame, epoch_id: int) -> None:
-        """The default delivery path: encode+POST on the executors
-        (``post_batches_distributed``), then apply the reference's D5/D6
-        policy on the returned status rows. Ledger semantics match the
-        driver loop: settled batches are filtered out BEFORE the POST wave,
-        successes/DLQs settle before any RecoverableError raises, so a
-        replayed micro-batch re-POSTs only un-acked batches
-        (write.go:208-236)."""
-        batched = batched.persist()
+        # Cached, the batches keep the window's partitioning: one delivery
+        # task per tenant hash bucket. Uncached, adaptive execution
+        # coalesces that small shuffle into one partition, and every POST
+        # of the micro-batch runs in one task, one after another.
+        batched = microbatch_batches(batch_df, self.batch_size).persist()
         try:
-            settled = self._settled_pairs(epoch_id)
             todo = batched
+            settled = self._settled_pairs(epoch_id)
             if settled:
                 keys = [f"{t}\x00{b}" for t, b in settled]
-                todo = batched.filter(~self._key_expr().isin(keys))
+                key = F.concat_ws(
+                    "\x00", F.col("tenant_id"), F.col("batch_seq").cast("string")
+                )
+                todo = batched.filter(~key.isin(keys))
             statuses = post_batches_distributed(
                 todo,
                 self.url,
@@ -253,41 +160,31 @@ class RemoteWriteSink:
                 post_fn=self.post_fn,
                 send_timeout_s=self.send_timeout_s,
             )
-            recoverable, dlq_pairs = [], []
-            for tenant_id, batch_seq, status, n, elapsed in statuses:
-                if self.metrics is not None:
-                    self.metrics.count_received(tenant_id, n)
-                    self.metrics.observe_duration(elapsed, tenant_id)
-                if status >= 500:  # D5 (599 = transport error)
-                    recoverable.append((tenant_id, batch_seq, status))
-                elif status >= 400:  # D6
-                    dlq_pairs.append((tenant_id, batch_seq))
-                else:
-                    self.sent[tenant_id] = self.sent.get(tenant_id, 0) + n
-                    if self.metrics is not None:
-                        self.metrics.count_sent(tenant_id, n)
-                    self._settle(epoch_id, tenant_id, batch_seq)
-            if dlq_pairs:
-                # Re-encode ONLY the rejected batches for the DLQ files --
-                # bounded driver work (4xx is the exception path, each body
-                # <= batch_size samples).
-                keys = [f"{t}\x00{b}" for t, b in dlq_pairs]
-                failed_df = batched.filter(self._key_expr().isin(keys))
-                for tenant_id, batch_seq, body, n in build_write_request_bodies(
-                    failed_df
-                ):
-                    self._dlq_write(epoch_id, tenant_id, batch_seq, body)
-                    self.failed[tenant_id] = self.failed.get(tenant_id, 0) + n
-                    if self.metrics is not None:
-                        self.metrics.count_failed(tenant_id, n)
-                    self._settle(epoch_id, tenant_id, batch_seq)
-            if recoverable:
-                t, b, code = recoverable[0]
-                if self.metrics is not None:
-                    self.metrics.count_retry(t)
-                raise RecoverableError(f"HTTP {code} for tenant {t!r} batch {b}")
         finally:
             batched.unpersist()
+        recoverable = []
+        for tenant_id, batch_seq, status, n, elapsed, body in statuses:
+            if self.metrics is not None:
+                self.metrics.count_received(tenant_id, n)
+                self.metrics.observe_duration(elapsed, tenant_id)
+            if status >= 500:  # D5 (599 = transport error)
+                recoverable.append((tenant_id, batch_seq, status))
+                continue
+            if status >= 400:  # D6: the rejected body itself goes to the DLQ
+                self._dlq_write(epoch_id, tenant_id, batch_seq, body)
+                self.failed[tenant_id] = self.failed.get(tenant_id, 0) + n
+                if self.metrics is not None:
+                    self.metrics.count_failed(tenant_id, n)
+            else:
+                self.sent[tenant_id] = self.sent.get(tenant_id, 0) + n
+                if self.metrics is not None:
+                    self.metrics.count_sent(tenant_id, n)
+            self._settle(epoch_id, tenant_id, batch_seq)
+        if recoverable:
+            t, b, code = recoverable[0]
+            if self.metrics is not None:
+                self.metrics.count_retry(t)
+            raise RecoverableError(f"HTTP {code} for tenant {t!r} batch {b}")
 
 
 def run_consume_pipeline(
@@ -452,36 +349,29 @@ def post_batches_distributed(
     url: str,
     user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0",
     post_fn=None,
-    batch_size: int = 100,
     send_timeout_s: float = 30.0,
 ) -> list:
     """D2 fan-out on EXECUTORS: encode + POST each (tenant, batch) inside
     the partition that holds it; only small per-batch status rows return
-    to the driver.
-
-    This is the scale path: the driver-side ``RemoteWriteSink.__call__``
-    collects bodies (fine at batch_size x tenants, the reference's own
-    working set), but at 1000-executor scale delivery must happen where
-    the data is. ``post_fn`` must be picklable; default is a per-worker
+    to the driver. ``post_fn`` must be picklable; default is a per-worker
     singleton ``requests.Session`` (A5 connection reuse).
 
-    Returns [(tenant_id, batch_seq, status, n_samples, elapsed_s)] sorted;
-    callers apply the same D5/D6 policy as the driver-side sink and feed
-    elapsed_s to the send-duration histogram.
+    Returns [(tenant_id, batch_seq, status, n_samples, elapsed_s, body)]
+    sorted, so a partially-failed attempt settles the same prefix on every
+    replay. ``body`` is the exact bytes POSTed when the receiver answered
+    4xx (the DLQ copy) and None otherwise; ``elapsed_s`` feeds the
+    send-duration histogram.
     """
-    from ..operators.flatten import sorted_label_entries  # noqa: F401 (doc xref)
-
     import pandas as pd
 
     from pyspark.sql import types as T
-
-    from ..operators.flatten import nest_samples
 
     with_labels = batch_df.withColumn(
         "labels", F.from_json("labels_json", "map<string,string>")
     )
     nested = nest_samples(with_labels, ["tenant_id", "batch_seq"])
 
+    columns = ["tenant_id", "batch_seq", "status", "n_samples", "elapsed_s", "body"]
     out_schema = T.StructType(
         [
             T.StructField("tenant_id", T.StringType()),
@@ -489,6 +379,7 @@ def post_batches_distributed(
             T.StructField("status", T.IntegerType()),
             T.StructField("n_samples", T.IntegerType()),
             T.StructField("elapsed_s", T.DoubleType()),
+            T.StructField("body", T.BinaryType()),
         ]
     )
 
@@ -498,32 +389,15 @@ def post_batches_distributed(
             for tenant_id, batch_seq, timeseries in zip(
                 pdf["tenant_id"], pdf["batch_seq"], pdf["timeseries"]
             ):
-                req = {
-                    "timeseries": [
-                        {
-                            "labels": [
-                                {"name": l["name"], "value": l["value"]}
-                                for l in ts["labels"]
-                            ],
-                            "samples": [
-                                {"value": s["value"], "timestamp": s["timestamp"]}
-                                for s in ts["samples"]
-                            ],
-                        }
-                        for ts in timeseries
-                    ]
-                }
-                body = snappy_codec.compress(prompb.encode_write_request(req))
+                body = prompb.encode_body(timeseries)
                 headers = {
                     "Content-Encoding": "snappy",
                     "Content-Type": "application/x-protobuf",
                     "User-Agent": user_agent,
                 }
                 if tenant_id:
-                    headers["X-Scope-OrgID"] = tenant_id
-                import time as _time
-
-                t0 = _time.perf_counter()
+                    headers["X-Scope-OrgID"] = tenant_id  # reference write.go:83-94
+                t0 = time.perf_counter()
                 try:
                     if post_fn is not None:
                         status = post_fn(url, body, headers)
@@ -533,30 +407,18 @@ def post_batches_distributed(
                         ).status_code
                 except Exception:
                     status = 599  # transport error -> recoverable
-                elapsed = _time.perf_counter() - t0
+                elapsed = time.perf_counter() - t0
                 rows.append(
-                    (tenant_id, int(batch_seq), int(status), len(timeseries), elapsed)
+                    (
+                        tenant_id,
+                        int(batch_seq),
+                        int(status),
+                        len(timeseries),
+                        elapsed,
+                        body if 400 <= status < 500 else None,
+                    )
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=["tenant_id", "batch_seq", "status", "n_samples", "elapsed_s"],
-            )
+            yield pd.DataFrame(rows, columns=columns)
 
     statuses = nested.mapInPandas(_post_partition, out_schema).collect()
-    return sorted(
-        (r.tenant_id, r.batch_seq, r.status, r.n_samples, r.elapsed_s)
-        for r in statuses
-    )
-
-
-def apply_delivery_policy(statuses: list) -> tuple[int, list]:
-    """D5/D6 on distributed-post results: raise RecoverableError on any
-    5xx/transport status (micro-batch replays), return
-    (n_delivered_samples, dlq'd (tenant, batch_seq) list) otherwise."""
-    recoverable = [s for s in statuses if s[2] >= 500]
-    if recoverable:
-        t, b, code = recoverable[0][:3]
-        raise RecoverableError(f"HTTP {code} for tenant {t!r} batch {b}")
-    delivered = sum(s[3] for s in statuses if s[2] < 400)
-    dlq = [(s[0], s[1]) for s in statuses if 400 <= s[2] < 500]
-    return delivered, dlq
+    return sorted(tuple(r) for r in statuses)

@@ -5,7 +5,7 @@ The reference's two dataflows, run back-to-back through this repo's
 public API on a temp directory, with live HTTP on BOTH edges:
 
   1. PRODUCE: snappy(protobuf(WriteRequest)) bodies (built from testdata
-     events with the pure-Python wire codecs) are POSTed over HTTP to the
+     events with ``prompb.encode_body``) are POSTed over HTTP to the
      engine's remote-write listener (A1 transport, Basic Auth tenants) ->
      spool -> streaming decode (A1) -> flatten (B1) -> tenant (B4) -> FNV
      partition key (B8) -> C1 JSON payloads -> bus sink (A2).
@@ -33,7 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from prometheus_pulsar_remote_write_spark.schema import load_tables
 from prometheus_pulsar_remote_write_spark.session import get_spark
-from prometheus_pulsar_remote_write_spark.sources import prompb, snappy_codec
+from prometheus_pulsar_remote_write_spark.sources import prompb
 from prometheus_pulsar_remote_write_spark.sources.http_listener import (
     RemoteWriteListener,
 )
@@ -63,7 +63,7 @@ class _Downstream:
             def do_POST(self):
                 n = int(self.headers.get("Content-Length", "0"))
                 body = self.rfile.read(n)
-                req = prompb.decode_write_request(snappy_codec.decompress(body))
+                req = prompb.decode_body(body)
                 tenant = self.headers.get("X-Scope-OrgID", "")
                 n_samples = sum(len(ts["samples"]) for ts in req["timeseries"])
                 with outer._lock:
@@ -96,25 +96,23 @@ def main() -> None:
     ev = load_tables(spark, SF_DIR, ["events"])["events"].limit(200).collect()
     n_posted = 0
     for tenant in ("tenant-a", "tenant-b"):
-        body = {
-            "timeseries": [
-                {
-                    "labels": [
-                        {"name": "__name__", "value": r["event_type"]},
-                        {"name": "user", "value": str(r["user_id"])},
-                    ],
-                    "samples": [
-                        {
-                            "value": r["value"],
-                            "timestamp": int(r["ts"].timestamp() * 1000),
-                        }
-                    ],
-                }
-                for r in ev
-                if (r["user_id"] % 2 == 0) == (tenant == "tenant-a")
-            ]
-        }
-        wire = snappy_codec.compress(prompb.encode_write_request(body))
+        timeseries = [
+            {
+                "labels": [
+                    {"name": "__name__", "value": r["event_type"]},
+                    {"name": "user", "value": str(r["user_id"])},
+                ],
+                "samples": [
+                    {
+                        "value": r["value"],
+                        "timestamp": int(r["ts"].timestamp() * 1000),
+                    }
+                ],
+            }
+            for r in ev
+            if (r["user_id"] % 2 == 0) == (tenant == "tenant-a")
+        ]
+        wire = prompb.encode_body(timeseries)
         auth = base64.b64encode(f"{tenant}:pw".encode()).decode()
         urllib.request.urlopen(
             urllib.request.Request(

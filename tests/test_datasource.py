@@ -222,8 +222,11 @@ def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     assert post(body("m2", 2), {"X-Scope-OrgID": "tenant-b"}) == 200
     assert post(body("m3", 1)) == 200  # anonymous -> root spool
     assert post(b"not snappy at all") == 400
+    # valid snappy around a request cut short inside a sample
+    truncated = snappy_codec.decompress(body("m5", 1))[:-3]
+    assert post(snappy_codec.compress(truncated)) == 400
     assert post(body("m4", 1), path="/nope") == 404
-    assert listener.accepted == 3 and listener.rejected == 1
+    assert listener.accepted == 3 and listener.rejected == 2
     assert listener.accepted_by_tenant == {"tenant-a": 1, "tenant-b": 1, "": 1}
     listener.stop()
 

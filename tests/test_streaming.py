@@ -206,17 +206,49 @@ def test_consume_unrecoverable_goes_to_dlq(spark, tmp_path):
     msgs, n_good = _sample_messages()
     _write_messages(in_dir, msgs)
     dlq = str(tmp_path / "dlq")
+    post_dir = str(tmp_path / "posts")
+
+    def reject_post(url, body, headers):
+        import uuid as _uuid
+
+        os.makedirs(post_dir, exist_ok=True)
+        with open(os.path.join(post_dir, _uuid.uuid4().hex), "wb") as fh:
+            fh.write(body)
+        return 400
 
     sink = RemoteWriteSink(
-        url="http://sink", dlq_dir=dlq, post_fn=lambda u, b, h: 400, batch_size=100
+        url="http://sink", dlq_dir=dlq, post_fn=reject_post, batch_size=100
     )
     q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"))
     q.awaitTermination(120)  # D6: ack-and-drop -- the query completes
 
     assert sum(sink.failed.values()) == n_good
     assert not sink.sent
-    bodies = [f for f in os.listdir(dlq) if f.endswith(".bin")]
-    assert len(bodies) == 2  # one body per tenant
+    names = [f for f in os.listdir(dlq) if f.endswith(".bin")]
+    assert len(names) == 2  # one body per tenant
+
+    # each DLQ file is the exact body the receiver rejected, and holds
+    # that tenant's samples
+    received = set()
+    for name in os.listdir(post_dir):
+        with open(os.path.join(post_dir, name), "rb") as fh:
+            received.add(fh.read())
+    expected = {
+        "team-a": {(1000 + i, float(i)) for i in range(7)},
+        "_none": {(2000 + i, float(i)) for i in range(3)},
+    }
+    for name in names:
+        with open(os.path.join(dlq, name), "rb") as fh:
+            body = fh.read()
+        assert body in received
+        tenant = name[len("tenant="):].split("-epoch=")[0]
+        req = prompb.decode_body(body)
+        got = {
+            (s["timestamp"], s["value"])
+            for ts in req["timeseries"]
+            for s in ts["samples"]
+        }
+        assert got == expected[tenant]
 
 
 def test_consume_recoverable_replays_batch(spark, tmp_path):
@@ -642,7 +674,6 @@ def test_distributed_post_delivers_all_batches(spark, tmp_path, monkeypatch):
         microbatch_batches,
     )
     from prometheus_pulsar_remote_write_spark.streaming.consume import (
-        apply_delivery_policy,
         post_batches_distributed,
     )
 
@@ -671,10 +702,13 @@ def test_distributed_post_delivers_all_batches(spark, tmp_path, monkeypatch):
     statuses = post_batches_distributed(
         batched, url="http://sink", post_fn=recording_post
     )
-    delivered, dlq = apply_delivery_policy(statuses)
-    assert delivered == 10 and dlq == []
-    # team-a: 7 samples @4 -> 2 batches; "": 3 -> 1 batch
-    assert len(statuses) == 3
+    # team-a: 7 samples @4 -> 2 batches; "": 3 -> 1 batch; sorted by
+    # (tenant, batch), and a 2xx row carries no body
+    assert [(s[0], s[1], s[2], s[3], s[5]) for s in statuses] == [
+        ("", 0, 200, 3, None),
+        ("team-a", 0, 200, 4, None),
+        ("team-a", 1, 200, 3, None),
+    ]
     posts = os.listdir(post_dir)
     assert len(posts) == 3
 
@@ -682,7 +716,7 @@ def test_distributed_post_delivers_all_batches(spark, tmp_path, monkeypatch):
     total = 0
     for name in posts:
         with open(os.path.join(post_dir, name), "rb") as fh:
-            req = prompb.decode_write_request(snappy_codec.decompress(fh.read()))
+            req = prompb.decode_body(fh.read())
         for ts in req["timeseries"]:
             labels = [l["name"] for l in ts["labels"]]
             assert labels == sorted(labels)
@@ -690,13 +724,11 @@ def test_distributed_post_delivers_all_batches(spark, tmp_path, monkeypatch):
     assert total == 10
 
 
-def test_distributed_post_5xx_raises_recoverable(spark):
+def test_distributed_post_reports_5xx_status(spark):
     from prometheus_pulsar_remote_write_spark.streaming.batcher import (
         microbatch_batches,
     )
     from prometheus_pulsar_remote_write_spark.streaming.consume import (
-        RecoverableError,
-        apply_delivery_policy,
         post_batches_distributed,
     )
 
@@ -710,8 +742,9 @@ def test_distributed_post_5xx_raises_recoverable(spark):
     statuses = post_batches_distributed(
         microbatch_batches(df, 100), url="http://sink", post_fn=post_503
     )
-    with pytest.raises(RecoverableError):
-        apply_delivery_policy(statuses)
+    assert [(s[0], s[1], s[2], s[3], s[5]) for s in statuses] == [
+        ("t", 0, 503, 1, None)
+    ]
 
 
 def test_streaming_rate_matches_batch(spark, tmp_path):

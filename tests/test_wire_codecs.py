@@ -2,6 +2,7 @@
 
 import struct
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from prometheus_pulsar_remote_write_spark.sources import prompb, snappy_codec
@@ -43,6 +44,55 @@ def test_snappy_rejects_garbage():
 @given(st.binary(max_size=5000))
 def test_snappy_roundtrip_prop(payload):
     assert snappy_codec.decompress(snappy_codec.compress(payload)) == payload
+
+
+def test_snappy_forged_preamble_rejected_before_allocating(monkeypatch):
+    class _NoCodec:
+        def decompress(self, *args, **kwargs):
+            raise AssertionError("a forged preamble reached the codec")
+
+    monkeypatch.setattr(snappy_codec, "_CODEC", _NoCodec())
+    forged = prompb._write_varint(1 << 40) + bytes([3 << 2]) + b"abcd"
+    with pytest.raises(ValueError, match="preamble claims"):
+        snappy_codec.decompress(forged)
+
+
+def test_snappy_codec_error_surfaces_as_value_error():
+    # a copy whose offset reaches before the start of the output: the
+    # preamble is plausible, so only the codec itself can refuse it
+    bad_offset = bytes([8]) + bytes([3 << 2]) + b"abcd" + bytes([(3 << 2) | 2, 9, 0])
+    with pytest.raises(ValueError) as exc_info:
+        snappy_codec.decompress(bad_offset)
+    assert isinstance(exc_info.value.__cause__, OSError)
+
+
+def _element_kinds(block: bytes) -> list[int]:
+    """The low two tag bits of each element of a snappy block."""
+    _, pos = snappy_codec._read_varint(block, 0)
+    kinds = []
+    while pos < len(block):
+        tag = block[pos]
+        kind = tag & 0x03
+        kinds.append(kind)
+        if kind == 0:
+            length = tag >> 2
+            if length >= 60:
+                extra = length - 59
+                length = int.from_bytes(block[pos + 1 : pos + 1 + extra], "little")
+                pos += extra
+            pos += 1 + length + 1
+        else:
+            pos += 1 + {1: 1, 2: 2, 3: 4}[kind]
+    assert pos == len(block)
+    return kinds
+
+
+def test_snappy_compress_emits_copies():
+    payload = b"node_cpu_seconds_total{cpu=0} " * 200
+    block = snappy_codec.compress(payload)
+    assert len(block) < len(payload)
+    assert any(kind != 0 for kind in _element_kinds(block))
+    assert snappy_codec.decompress(block) == payload
 
 
 # --- prompb ------------------------------------------------------------------
@@ -141,6 +191,30 @@ def test_prompb_roundtrip_prop(series):
         ]
     }
     assert prompb.decode_write_request(prompb.encode_write_request(req)) == req
+
+
+@settings(max_examples=30)
+@given(
+    st.lists(st.tuples(st.text(max_size=8), st.text(max_size=8)), max_size=3),
+    st.lists(
+        st.tuples(st.floats(allow_nan=False), st.integers(-(2**62), 2**62)),
+        max_size=3,
+    ),
+)
+def test_prompb_truncated_request_raises(labels, samples):
+    raw = prompb.encode_write_request(
+        {
+            "timeseries": [
+                {
+                    "labels": [{"name": n, "value": v} for n, v in labels],
+                    "samples": [{"value": v, "timestamp": t} for v, t in samples],
+                }
+            ]
+        }
+    )
+    for cut in range(1, len(raw)):
+        with pytest.raises(ValueError):
+            prompb.decode_write_request(raw[:cut])
 
 
 # --- end-to-end ingest edge ---------------------------------------------------
