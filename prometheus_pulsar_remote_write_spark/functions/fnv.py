@@ -10,9 +10,10 @@ Two tiers, by design:
     zero Python cost. Partitioning only needs *consistency* (equal label
     sets -> equal key), not byte-parity with Go, so this is the hot path
     used for repartitioning inside the engine at scale.
-  - ``partition_key_col``: exact FNV-1 via an Arrow-batched pandas UDF --
-    used only at the Pulsar wire edge where byte-equality with the
-    reference's message keys matters.
+  - ``sample_partition_key``: exact FNV-1 in Python, where byte-equality
+    with the reference's message keys matters. The produce edge calls it
+    once per series; ``partition_key_col`` wraps it in an Arrow-batched
+    pandas UDF for DataFrames of flat samples.
 """
 
 from __future__ import annotations

@@ -17,7 +17,8 @@ Two tiers:
 
   * ``marshal_*`` / ``unmarshal_*`` pure-Python functions: byte-parity with
     the Go implementation (golden vectors from serializers_test.go pass
-    verbatim). Wrapped in Arrow-batched pandas UDFs for the wire edge.
+    verbatim). The produce edge calls them per sample; ``serialize_col``
+    and ``deserialize`` wrap them in Arrow-batched pandas stages.
   * ``serialize_json_expr`` and friends: pure Column expressions (JVM-side,
     codegen'd) for the analytics catalog, where both the Spark query and
     its DuckDB oracle apply the same formatting rules. These cover values
@@ -55,8 +56,10 @@ _COMPACT = {"separators": (",", ":"), "ensure_ascii": False}
 AVRO_DEFAULT_FIELDS = ("timestamp", "value", "name", "labels", "tenant_id")
 
 #: sentinel: schema field declares no default (missing datum => error,
-#: matching an Avro encoder's behavior)
-AVRO_NO_DEFAULT = object()
+#: matching an Avro encoder's behavior). Ellipsis, not object(): it
+#: unpickles as itself, so a marshaler shipped to a Python worker still
+#: finds it by identity in its parsed fields.
+AVRO_NO_DEFAULT = ...
 
 
 def parse_avro_schema(schema) -> tuple:

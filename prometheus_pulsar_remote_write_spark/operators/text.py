@@ -32,19 +32,6 @@ def tokens_col(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda t: F.length(t) > 0)
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens_col(text))
-
-
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens_col(text)))
-
-
-def stopword_count(text: Column, stopwords: list[str] | None = None) -> Column:
-    words = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS)])
-    return F.size(F.filter(tokens_col(text), lambda t: F.array_contains(words, t)))
-
-
 def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, r"[.,;:!?]", ""))
 

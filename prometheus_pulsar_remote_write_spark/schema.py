@@ -131,8 +131,3 @@ def load_tables(spark, sf_dir: str, names: list[str] | None = None) -> dict:
         out[name] = df
     return out
 
-
-def register_views(spark, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register the testdata tables as temp views for spark.sql queries."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

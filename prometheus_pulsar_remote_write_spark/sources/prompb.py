@@ -194,8 +194,15 @@ def encode_write_request(req: dict) -> bytes:
 
 def decode_body(body: bytes) -> dict:
     """A remote-write HTTP body -> the WriteRequest dict. Raises
-    ``ValueError`` when either layer is malformed (the reference's 400)."""
-    return decode_write_request(snappy_codec.decompress(body))
+    ``ValueError`` when either layer is malformed (the reference's 400),
+    or when a series repeats a label name: a label set is a map, so such
+    a series is refused rather than keeping one of the values."""
+    req = decode_write_request(snappy_codec.decompress(body))
+    for ts in req["timeseries"]:
+        names = {label["name"] for label in ts["labels"]}
+        if len(names) != len(ts["labels"]):
+            raise ValueError("prompb: a series repeats a label name")
+    return req
 
 
 def encode_body(timeseries) -> bytes:

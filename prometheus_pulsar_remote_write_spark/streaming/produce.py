@@ -6,10 +6,12 @@ tenant -> serialize -> partition key -> async Pulsar publish -> Flush.
 
 Spark shape:
     readStream(binaryFile drop-dir)        # A1: the HTTP edge lands bodies
-      -> decode_remote_write               # snappy+proto (mapInPandas)
-      -> with_tenant                       # B4 (coalesce auth columns)
-      -> flatten_write_requests            # B1 (explode, JVM-side)
-      -> serialize + partition key         # C1-C3 + B7/B8
+      -> tenant column                     # B4 (from the path or the source)
+      -> ONE mapInPandas over (content, tenant_id), per body:
+           decode_body                     # snappy+proto; poison skipped
+           -> label dict per series        # B1 flatten
+           -> partition key per series     # B7/B8 (FNV-1)
+           -> marshal per sample           # C1-C3
       -> writeStream.foreachBatch(publisher)  # A2; batch commit == Flush
 
 Delivery: foreachBatch + checkpointing give at-least-once, the same
@@ -18,23 +20,25 @@ the micro-batch is not committed, and Spark replays it -- which is also
 the backpressure story (D5): a stalled sink halts intake.
 
 At scale the drop-dir is any landing zone (object store, Kafka of blobs);
-maxFilesPerTrigger bounds per-batch work, and everything downstream of
-decode is narrow until the optional repartition on the partition key.
+maxFilesPerTrigger bounds per-batch work, and the pass is narrow: no
+shuffle between the body and the publisher.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
+from typing import Iterator
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.fnv import partition_key_col
-from ..functions.serializers import serialize_col
+from ..functions.fnv import sample_partition_key
+from ..functions.serializers import resolve_marshaler
 from ..operators.flatten import flatten_write_requests
-from ..operators.tenant import tenant_from_auth
+from ..schema import DEFAULT_REPLICA_LABELS
+from ..sources import prompb
 from ..sources.remote_write import decode_remote_write
 
 #: Tenant columns can ride next to each body file as a sidecar manifest;
@@ -69,19 +73,23 @@ def tenant_from_path(path_col):
     return F.when(parent == TENANT_DIR_NONE, F.lit("")).otherwise(parent)
 
 
+def _with_tenant(bodies: DataFrame) -> DataFrame:
+    """Keep a ``tenant_id`` column the source already carries; otherwise
+    derive the tenant from the file path."""
+    if "tenant_id" in bodies.columns:
+        return bodies
+    return bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
+
+
 def flat_sample_stream(bodies: DataFrame) -> DataFrame:
     """Body blobs -> flattened (timestamp, value, labels, tenant_id) rows.
 
-    The shared front half of the produce path (A1 decode -> B4 tenant ->
-    B1 flatten), before any serialization: the wire publisher and the
-    lake sink both consume this. Pure transformation -- works on batch or
-    streaming DataFrames alike. Bodies that already carry a ``tenant_id``
-    column (e.g. from the remote_write_blobs custom source) keep it;
-    otherwise the tenant derives from the file path."""
-    if "tenant_id" not in bodies.columns:
-        bodies = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
+    The front half of the lake sink (A1 decode -> B4 tenant -> B1
+    flatten), before any serialization; the wire publisher does the same
+    work in ``produce_transform``'s one pass. Pure transformation --
+    works on batch or streaming DataFrames alike."""
     decoded = decode_remote_write(
-        bodies,
+        _with_tenant(bodies),
         body_col="content",
         keep_cols=["tenant_id"],
     )
@@ -94,14 +102,38 @@ def produce_transform(
     serializer_format: str = "json",
     replica_labels: list[str] | None = None,
 ) -> DataFrame:
-    """Body blobs -> (key, payload, tenant_id) wire messages."""
-    flat = flat_sample_stream(bodies)
-    return flat.select(
-        partition_key_col(
-            F.col("labels"), F.col("tenant_id"), replica_labels
-        ).alias("key"),
-        serialize_col(serializer_format).alias("payload"),
-        F.col("tenant_id"),
+    """Body blobs -> (key, payload, tenant_id) wire messages, in one
+    mapInPandas: one Python worker per task decodes each body, keys each
+    series once and marshals each sample. A body that does not decode is
+    skipped (the listener's 400); a marshal error fails the batch. A null
+    tenant keys and marshals as "" and stays null in the output. One
+    frame per body: a worker never holds more than one body's messages."""
+    marshal = resolve_marshaler(serializer_format)
+    replica = DEFAULT_REPLICA_LABELS if replica_labels is None else replica_labels
+
+    def _produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for body, tenant in zip(pdf["content"], pdf["tenant_id"]):
+                try:
+                    req = prompb.decode_body(bytes(body))
+                except Exception:  # the listener's 400 test, so the same bodies
+                    continue
+                ten = tenant if tenant is not None else ""
+                keys, payloads = [], []
+                for ts in req["timeseries"]:
+                    labels = {lbl["name"]: lbl["value"] for lbl in ts["labels"]}
+                    key = sample_partition_key(labels, ten, replica)
+                    for s in ts["samples"]:
+                        keys.append(key)
+                        payloads.append(marshal(s["timestamp"], s["value"], labels, ten))
+                if keys:
+                    tenants = [tenant] * len(keys)
+                    yield pd.DataFrame({"key": keys, "payload": payloads, "tenant_id": tenants})
+
+    return (
+        _with_tenant(bodies)
+        .select("content", "tenant_id")
+        .mapInPandas(_produce, "key string, payload string, tenant_id string")
     )
 
 
@@ -248,6 +280,17 @@ class FanoutPublisher:
             batch_df.unpersist()
 
 
+def _start(writer, out_dir: str, checkpoint_dir: str | None, trigger_once: bool):
+    """Start a produce query: drain the drop dir once, or poll it every second."""
+    checkpoint_dir = checkpoint_dir or os.path.join(
+        out_dir, f"_checkpoint-{uuid.uuid4().hex[:8]}"
+    )
+    writer = writer.option("checkpointLocation", checkpoint_dir).outputMode("append")
+    if trigger_once:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime="1 second").start()
+
+
 def run_produce_pipeline(
     spark: SparkSession,
     drop_dir: str,
@@ -259,23 +302,11 @@ def run_produce_pipeline(
     replica_labels: list[str] | None = None,
 ):
     """Wire the full produce stream and start it. Returns the query."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        out_dir, f"_checkpoint-{uuid.uuid4().hex[:8]}"
-    )
     messages = produce_transform(
         read_request_stream(spark, drop_dir), serializer_format, replica_labels
     )
-    publisher = publisher or FilePublisher(out_dir)
-    writer = (
-        messages.writeStream.foreachBatch(publisher)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    writer = messages.writeStream.foreachBatch(publisher or FilePublisher(out_dir))
+    return _start(writer, out_dir, checkpoint_dir, trigger_once)
 
 
 def run_produce_pipeline_datasource(
@@ -293,9 +324,6 @@ def run_produce_pipeline_datasource(
     from ..sources import datasource as custom_ds
 
     custom_ds.register(spark)
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        out_dir, f"_checkpoint-{uuid.uuid4().hex[:8]}"
-    )
     bodies = (
         spark.readStream.format("remote_write_blobs")
         .option("path", drop_dir)
@@ -310,14 +338,5 @@ def run_produce_pipeline_datasource(
         )
     )
     messages = produce_transform(bodies, serializer_format)
-    writer = (
-        messages.writeStream.format("message_bus")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 second")
-    return writer.start()
+    writer = messages.writeStream.format("message_bus").option("path", out_dir)
+    return _start(writer, out_dir, checkpoint_dir, trigger_once)

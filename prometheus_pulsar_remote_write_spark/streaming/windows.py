@@ -99,21 +99,6 @@ def tumbling_counts(ev: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(ev: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Watermarked sliding windows (10m/5m); twin: events_sliding_10m_5m."""
-    return (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
 def session_counts(ev: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
     """Event-time session windows per user (F.session_window).
 

@@ -245,6 +245,38 @@ def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     assert by_tenant == {"tenant-a": 3, "tenant-b": 2, None: 1}
 
 
+def test_http_listener_rejects_repeated_label_name(tmp_path):
+    """A series that repeats a label name gets a 400 and is never spooled:
+    the produce edge cannot turn it into a label map."""
+    import urllib.error
+    import urllib.request
+
+    from prometheus_pulsar_remote_write_spark.sources.http_listener import (
+        RemoteWriteListener,
+    )
+
+    spool = tmp_path / "spool"
+    listener = RemoteWriteListener(str(spool))
+    host, port = listener.start()
+    dup = {
+        "labels": [{"name": "a", "value": "1"}, {"name": "a", "value": "2"}],
+        "samples": [{"value": 1.0, "timestamp": 1000}],
+    }
+    r = urllib.request.Request(
+        f"http://{host}:{port}/write",
+        data=prompb.encode_body([dup]),
+        headers={"X-Scope-OrgID": "tenant-a"},
+    )
+    try:
+        status = urllib.request.urlopen(r).status
+    except urllib.error.HTTPError as e:
+        status = e.code
+    listener.stop()
+    assert status == 400
+    assert listener.rejected == 1 and listener.accepted == 0
+    assert not any(p.is_file() for p in spool.rglob("*"))
+
+
 def test_http_listener_rejects_traversal_tenants(tmp_path):
     """A hostile tenant string (Basic Auth username or X-Scope-OrgID) must
     not escape the spool: '../..'-style and absolute-path tenants get a

@@ -81,6 +81,35 @@ def test_no_cartesian_products_in_catalog(spark):
         assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
 
 
+def test_produce_edge_is_one_python_exec(spark, tmp_path):
+    """The produce edge decodes, keys and serializes each body in one
+    mapInPandas: one Python exec, so one Python worker per task."""
+    from prometheus_pulsar_remote_write_spark.sources import prompb
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        produce_transform,
+    )
+
+    body = tmp_path / "tenant-a" / "r.bin"
+    body.parent.mkdir()
+    body.write_bytes(
+        prompb.encode_body(
+            [
+                {
+                    "labels": [{"name": "__name__", "value": "up"}],
+                    "samples": [{"value": 1.0, "timestamp": 1000}],
+                }
+            ]
+        )
+    )
+    messages = produce_transform(
+        spark.read.format("binaryFile").load(str(tmp_path / "*" / "*.bin"))
+    )
+    assert messages.count() == 1
+    plan = _plan(messages)
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
 def test_new_tpch_shapes_plan_strategies(spark):
     """Round-2 TPC-H shapes pick the intended physical strategies."""
     # q16: NOT-IN exclusion must be a broadcast anti join, and the distinct

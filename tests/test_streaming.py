@@ -35,6 +35,7 @@ from prometheus_pulsar_remote_write_spark.streaming.produce import (
 )
 
 from tests.conftest import SF_SMOKE as SF
+from tests.test_serializers import CUSTOM_AVRO_SCHEMA
 
 
 def _write_body(path: str, series: list[tuple[dict, list[tuple[float, int]]]]) -> int:
@@ -98,6 +99,146 @@ def test_produce_pipeline_end_to_end(spark, drop_dir, tmp_path):
     none_rows = [r for r in rows if r["tenant_id"] is None or r["tenant_id"] == ""]
     assert len(none_rows) == 1
     assert '"tenant_id"' not in none_rows[0]["payload"]
+
+
+def test_produce_skips_body_repeating_a_label_name(spark, drop_dir, tmp_path):
+    """A series that repeats a label name is poison: the body is skipped
+    and the query finishes. A label map cannot hold such a series, and a
+    body that failed the query would fail it again on every replay."""
+    d, n_samples = drop_dir
+    dup = {
+        "labels": [{"name": "a", "value": "1"}, {"name": "a", "value": "2"}],
+        "samples": [{"value": 1.0, "timestamp": 1000}],
+    }
+    with open(os.path.join(d, "tenant-a", "dup.bin"), "wb") as fh:
+        fh.write(prompb.encode_body([dup]))
+    out_dir = str(tmp_path / "out")
+    q = run_produce_pipeline(spark, d, out_dir, trigger_once=True)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = spark.read.json(os.path.join(out_dir, "epoch=*")).collect()
+    assert len(rows) == n_samples
+    assert all('"a":' not in r["payload"] for r in rows)
+
+
+#: label sets for the produce parity test: replica labels, a series with
+#: no labels, non-ASCII and JSON-escaped values
+_PARITY_SERIES = [
+    (
+        {"__name__": "up", "job": "api", "replica": "r1", "cluster": "c1"},
+        [(1.0, 1000), (0.0, 2000), (-0.0, 3000)],
+    ),
+    ({"__name__": "cpu", "__replica__": "b", "core": "0"}, [(0.5, 1500)]),
+    ({}, [(2.5, 1600)]),
+    ({"__name__": "t\u00e9l\u00e9", "q": 'say "hi"\n'}, [(float("inf"), -5), (-1e-7, 1)]),
+]
+
+
+def _old_produce_chain(bodies, fmt, replica_labels):
+    """The produce edge as a chain of three Python execs: decode, then
+    key and serialize over the exploded samples."""
+    from prometheus_pulsar_remote_write_spark.functions.fnv import partition_key_col
+    from prometheus_pulsar_remote_write_spark.functions.serializers import (
+        serialize_col,
+    )
+    from prometheus_pulsar_remote_write_spark.operators.flatten import (
+        flatten_write_requests,
+    )
+    from prometheus_pulsar_remote_write_spark.sources.remote_write import (
+        decode_remote_write,
+    )
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        tenant_from_path,
+    )
+
+    with_tenant = bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
+    decoded = decode_remote_write(with_tenant, keep_cols=["tenant_id"])
+    flat = flatten_write_requests(
+        decoded.filter(F.col("decode_error").isNull()), ["tenant_id"]
+    )
+    return flat.select(
+        partition_key_col(F.col("labels"), F.col("tenant_id"), replica_labels).alias(
+            "key"
+        ),
+        serialize_col(fmt).alias("payload"),
+        F.col("tenant_id"),
+    )
+
+
+@pytest.fixture()
+def parity_drop(tmp_path):
+    d = tmp_path / "drop"
+    _write_body(str(d / "tenant-a" / "r1.bin"), _PARITY_SERIES)
+    _write_body(str(d / "tenant-a" / "r2.bin"), _PARITY_SERIES[1:2])
+    _write_body(str(d / "no-tenant" / "r3.bin"), _PARITY_SERIES)
+    (d / "no-tenant" / "corrupt.bin").write_bytes(b"\xff\x00 not a body")
+    schema = tmp_path / "slim.avsc"
+    schema.write_text(CUSTOM_AVRO_SCHEMA)
+    return str(d), str(schema)
+
+
+@pytest.mark.parametrize("replica_labels", [None, ["replica", "cluster"]])
+@pytest.mark.parametrize(
+    "fmt", ["json", "json-compat", "avro-json-compat", "avro-json-compat=<file>"]
+)
+def test_produce_transform_matches_three_exec_chain(
+    spark, parity_drop, fmt, replica_labels
+):
+    """The one-pass produce edge emits the same (key, payload, tenant_id)
+    multiset as decode -> flatten -> partition key / serialize."""
+    from collections import Counter
+
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        produce_transform,
+    )
+
+    d, schema_file = parity_drop
+    fmt = fmt.replace("<file>", schema_file)
+    bodies = spark.read.format("binaryFile").load(d + "/*/*.bin")
+    got = Counter(map(tuple, produce_transform(bodies, fmt, replica_labels).collect()))
+    want = Counter(map(tuple, _old_produce_chain(bodies, fmt, replica_labels).collect()))
+    assert got == want
+    assert sum(got.values()) == 2 * 7 + 1
+    assert {t for _, _, t in got} == {"tenant-a", ""}
+
+
+def test_produce_transform_marshal_error_fails_like_three_exec_chain(
+    spark, parity_drop
+):
+    """A custom Avro field with no default fails the batch on both chains."""
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        produce_transform,
+    )
+
+    d, _ = parity_drop
+    fmt = "avro-json-compat=" + json.dumps(
+        {"type": "record", "name": "Bad", "fields": [{"name": "hostname", "type": "string"}]}
+    )
+    bodies = spark.read.format("binaryFile").load(d + "/*/*.bin")
+    for messages in (produce_transform(bodies, fmt), _old_produce_chain(bodies, fmt, None)):
+        with pytest.raises(Exception, match="no default"):
+            messages.collect()
+
+
+def test_produce_transform_publishes_nan_samples(spark, tmp_path):
+    """Prometheus marks a stale series with a NaN sample, and the produce
+    edge publishes it. (``decode_remote_write``, which the lake sink still
+    uses, turns the NaN into a null in a non-nullable field and fails the
+    task.)"""
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        produce_transform,
+    )
+
+    _write_body(
+        str(tmp_path / "tenant-a" / "r.bin"),
+        [({"__name__": "up"}, [(float("nan"), 1000), (1.0, 2000)])],
+    )
+    bodies = spark.read.format("binaryFile").load(str(tmp_path / "*" / "*.bin"))
+    payloads = sorted(r.payload for r in produce_transform(bodies).collect())
+    assert payloads == [
+        marshal_json(t, v, {"__name__": "up"}, "tenant-a")
+        for t, v in ((1000, float("nan")), (2000, 1.0))
+    ]
 
 
 def test_produce_fanout_all_writers_and_error_join(spark, drop_dir, tmp_path):
