@@ -1,16 +1,18 @@
 """A1 transport: an HTTP remote-write listener bridging real POSTs into
-the blob spool that the ``remote_write_blobs`` DataSource reads.
+the drop directory that the produce pipeline streams with Spark's
+``binaryFile`` source (``streaming.produce.read_request_stream``).
 
 This makes the sandbox analog literal: the reference runs an HTTP server
 that receives snappy(proto(WriteRequest)) bodies and answers 400 on
 undecodable input (reference pkg/app/produce.go:124-181); the tenant is
 taken from the Basic Auth username or the X-Scope-OrgID header
 (pkg/context/handlers.go:8-40). Here the accepted body is spooled as
-``<spool>/<tenant>/<blob>`` (atomic temp+rename; dot-prefixed temp names
-are invisible to the source's listing), which is exactly the layout
-``sources/datasource.py`` streams -- so a stock Prometheus can
+``<spool>/<tenant>/<blob>.bin`` (atomic temp+rename; dot-prefixed temp
+names are hidden from Spark's file listing), and a body with no tenant
+goes under ``<spool>/TENANT_DIR_NONE/``. The produce pipeline takes the
+tenant from that parent directory, so a stock Prometheus can
 remote-write at this listener and the Spark pipeline consumes it with no
-format shim.
+format shim. This module owns the spool layout.
 
 Built on the stdlib's http.server, it never imports Spark, and it is
 validation-first: the body must decode whole (``prompb.decode_body``)
@@ -31,6 +33,12 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from . import prompb
+
+#: The spool directory of a body that names no tenant; the produce
+#: pipeline maps it back to the empty tenant. It must NOT start with '_'
+#: or '.' (Spark's file index treats those as hidden metadata, e.g.
+#: _SUCCESS, and skips them).
+TENANT_DIR_NONE = "no-tenant"
 
 
 class SystemClock:
@@ -216,17 +224,16 @@ class RemoteWriteListener:
                         outer.rejected += 1
                     self._finish(400)
                     return
-                target_dir = os.path.join(spool, tenant) if tenant else spool
+                target_dir = os.path.join(spool, tenant or TENANT_DIR_NONE)
                 # belt-and-braces: the resolved dir must stay under the spool
                 spool_real = os.path.realpath(spool)
-                if not os.path.realpath(target_dir).startswith(spool_real + os.sep) and os.path.realpath(target_dir) != spool_real:
+                if not os.path.realpath(target_dir).startswith(spool_real + os.sep):
                     with outer._lock:
                         outer.rejected += 1
                     self._finish(400)
                     return
                 os.makedirs(target_dir, exist_ok=True)
-                # .bin suffix: both the binaryFile produce source
-                # (pathGlobFilter *.bin) and the blob DataSource accept it
+                # .bin suffix: the produce source's pathGlobFilter
                 name = f"{uuid.uuid4().hex}.bin"
                 tmp = os.path.join(target_dir, f".{name}")
                 with open(tmp, "wb") as fh:

@@ -8,7 +8,7 @@ The wire schema (public prometheus/prompb/types.proto + remote.proto):
     message Label        { string name = 1; string value = 2; }
     message Sample       { double value = 1; int64 timestamp = 2; }
 
-google.protobuf isn't in this environment, so this hand-rolls the proto3
+The package needs no protobuf runtime: this hand-rolls the proto3
 wire format (varint tags, length-delimited messages, fixed64 doubles).
 Unknown fields are skipped, so richer senders (exemplars, metadata fields)
 still decode. The decoded Python shape matches WRITE_REQUEST_SCHEMA:

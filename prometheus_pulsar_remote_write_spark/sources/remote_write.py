@@ -1,4 +1,4 @@
-"""A1/A4: the remote-write wire edges as DataFrame operators.
+"""A1: the remote-write ingest edge as a DataFrame operator.
 
 Ingest (A1, reference pkg/app/produce.go:124-153): a body is
 snappy(proto(WriteRequest)). ``decode_remote_write`` turns a DataFrame of
@@ -7,14 +7,12 @@ an HTTP collector drop-dir) into WRITE_REQUEST-shaped rows. Decode
 failures yield a null timeseries (the reference answers 400 and drops the
 request) -- split good/bad downstream.
 
-Egress (A4, reference pkg/remote/write.go:184-196): ``encode_remote_write``
-renders nested WriteRequest rows back to snappy(proto) bodies ready to POST.
-
-Both are Arrow-batched mapInPandas stages: narrow, no shuffle, scale with
-input partitions. Per row they call ``prompb.decode_body`` /
-``prompb.encode_body``, the one spelling of the body format: protobuf in
-Python, snappy in pyarrow. That is the per-request transcoding the
-reference also does.
+The produce pipeline and the lake sink decode inside their own one-pass
+mapInPandas (``streaming.produce``); this operator keeps the decoded
+WriteRequest shape for callers that want it. It is an Arrow-batched
+mapInPandas stage: narrow, no shuffle, scales with input partitions. Per
+row it calls ``prompb.decode_body``, the one spelling of the body format:
+protobuf in Python, snappy in pyarrow.
 """
 
 from __future__ import annotations
@@ -61,26 +59,3 @@ def decode_remote_write(
             yield pd.DataFrame(rows, columns=names)
 
     return df.mapInPandas(_decode, out_schema)
-
-
-def encode_remote_write(
-    df: DataFrame, timeseries_col: str = "timeseries", keep_cols: list[str] | None = None
-) -> DataFrame:
-    """Nested WriteRequest rows -> snappy(proto) request bodies."""
-    keep_cols = keep_cols or []
-    out_schema = T.StructType(
-        [f for f in df.schema.fields if f.name in keep_cols]
-        + [T.StructField("body", T.BinaryType(), False)]
-    )
-    names = [f.name for f in out_schema.fields]
-
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, ts_list in enumerate(pdf[timeseries_col]):
-                base = {c: pdf[c].iloc[i] for c in keep_cols}
-                base["body"] = prompb.encode_body(ts_list)
-                rows.append(base)
-            yield pd.DataFrame(rows, columns=names)
-
-    return df.mapInPandas(_encode, out_schema)

@@ -16,14 +16,16 @@ single-threaded event loop; state here is per-key across executors), with
 the same per-flush grouping and ordering guarantees. State is bounded:
 at most batch_size-1 rows per tenant.
 
-For pipelines that don't need faithful mid-batch delay semantics,
-``microbatch_batches`` groups per micro-batch in one hash-shuffle --
-simpler, and the trigger interval plays the role of max delay.
+The consume pipeline runs ``microbatch_batches``: it groups per
+micro-batch in one hash-shuffle, and the trigger interval plays the role
+of max delay. ``stateful_batches`` is the faithful mid-batch delay
+batcher, on the state API every other stateful operator here uses
+(Structured Streaming's ``GroupState``).
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -179,162 +181,4 @@ def microbatch_batches(batch_df: DataFrame, batch_size: int = DEFAULT_BATCH_SIZE
     w = Window.partitionBy("tenant_id").orderBy("timestamp", "labels_json")
     return batch_df.withColumn(
         "batch_seq", ((F.row_number().over(w) - 1) / batch_size).cast("bigint")
-    )
-
-
-# --- transformWithState variant (Spark 4 stateful-processor API) -------------
-
-
-def tws_batches(
-    samples: DataFrame,
-    batch_size: int = DEFAULT_BATCH_SIZE,
-    max_delay_ms: int = DEFAULT_MAX_DELAY_MS,
-) -> DataFrame:
-    """The same D1 size-OR-delay batcher on the Spark 4
-    ``transformWithStateInPandas`` API (StatefulProcessor + per-key
-    processing-time timers).
-
-    Semantics match ``stateful_batches`` exactly; the API differences
-    are the point of keeping both: TWS gives typed per-key state
-    variables (ListState buffer + ValueState sequence/deadline), real
-    per-key timers (the reference's deadlinePerTenantID,
-    write.go:35-43, maps 1:1 onto registerTimer), and state-schema
-    evolution -- the shape long-lived 100 TB streaming jobs need when
-    the batcher's state layout changes mid-flight.
-
-    Environment note: Spark's TWS driver-side control channel imports
-    google.protobuf (the engine itself never does -- the remote-write
-    wire codec in sources/prompb.py is pure Python precisely to avoid
-    that dependency). On clusters without protobuf, use
-    ``stateful_batches``; its semantics are identical and tested.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_cols = [f.name for f in BATCH_OUTPUT_SCHEMA.fields]
-
-    class _Batcher(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._buf = handle.getListState(
-                "buf", "timestamp long, value double, labels_json string"
-            )
-            self._meta = handle.getValueState(
-                "meta", "next_seq long, deadline_ms long"
-            )
-
-        def _flush(self, tenant_id, buf, next_seq, reason):
-            take = batch_size if reason == "size" else len(buf)
-            rows = [
-                {
-                    "tenant_id": tenant_id,
-                    "batch_seq": next_seq,
-                    "flush_reason": reason,
-                    "timestamp": ts,
-                    "value": val,
-                    "labels_json": lbl,
-                }
-                for ts, val, lbl in buf[:take]
-            ]
-            return rows, buf[take:]
-
-        def handleInputRows(self, key, rows, timerValues):
-            import numpy as np
-
-            (tenant_id,) = key
-            # the stored remainder is bounded (< batch_size rows); the
-            # incoming columns concatenate once and full batches peel off
-            # as array slices -- no per-row Python on the ingest hot path
-            stored = [tuple(r) for r in self._buf.get()]
-            meta = self._meta.get()
-            next_seq, deadline = (meta[0], meta[1]) if meta else (0, None)
-            if deadline is not None and deadline < 0:
-                deadline = None
-            entry_deadline = deadline
-            frames = list(rows)
-            ts = np.concatenate(
-                [np.asarray([t for t, _, _ in stored], np.int64)]
-                + [f["timestamp"].to_numpy(np.int64) for f in frames]
-            )
-            val = np.concatenate(
-                [np.asarray([v for _, v, _ in stored], np.float64)]
-                + [f["value"].to_numpy(np.float64) for f in frames]
-            )
-            lbl = np.concatenate(
-                [np.asarray([l for _, _, l in stored], dtype=object)]
-                + [f["labels_json"].to_numpy(dtype=object) for f in frames]
-            )
-            n_batches = len(ts) // batch_size
-            n_flush = n_batches * batch_size
-            if n_flush:
-                idx = np.arange(n_flush, dtype=np.int64)
-                out = pd.DataFrame(
-                    {
-                        "tenant_id": tenant_id,
-                        "batch_seq": next_seq + idx // batch_size,
-                        "flush_reason": "size",
-                        "timestamp": ts[:n_flush],
-                        "value": val[:n_flush],
-                        "labels_json": lbl[:n_flush],
-                    }
-                )
-                next_seq += n_batches
-                deadline = None
-            else:
-                out = pd.DataFrame([], columns=out_cols)
-            remainder = list(
-                zip(ts[n_flush:].tolist(), val[n_flush:].tolist(), lbl[n_flush:].tolist())
-            )
-            now = timerValues.getCurrentProcessingTimeInMs()
-            if remainder and deadline is None:
-                # deadline fixed when the buffer leaves empty (reference
-                # write.go:146-157) -- a trickle must not push it back
-                deadline = now + max_delay_ms
-                self._handle.registerTimer(deadline)
-            if entry_deadline is not None and entry_deadline != deadline:
-                # a size flush superseded the old deadline: delete its
-                # timer so it cannot fire later and delay-flush the new
-                # buffer's remainder early (stateful_batches gets this
-                # for free -- setTimeoutDuration REPLACES the timeout;
-                # TWS timers accumulate unless deleted)
-                self._handle.deleteTimer(entry_deadline)
-            self._buf.clear()
-            if remainder:
-                self._buf.put([list(t) for t in remainder])
-            self._meta.update(
-                (next_seq, deadline if deadline is not None else -1)
-            )
-            yield out
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (tenant_id,) = key
-            meta = self._meta.get()
-            next_seq = meta[0] if meta else 0
-            active_deadline = meta[1] if meta else -1
-            expiry = expiredTimerInfo.getExpiryTimeInMs()
-            if active_deadline < 0 or expiry != active_deadline:
-                # stale firing: this timer belonged to a buffer lifetime a
-                # size flush already ended -- ignore it (defense in depth
-                # alongside the deleteTimer in handleInputRows)
-                yield pd.DataFrame([], columns=out_cols)
-                return
-            buf = [tuple(r) for r in self._buf.get()]
-            out = []
-            if buf:  # delay trigger: flush the under-size remainder
-                out, buf = self._flush(tenant_id, buf, next_seq, "delay")
-                next_seq += 1
-            self._buf.clear()
-            self._meta.update((next_seq, -1))
-            yield pd.DataFrame(out, columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    return samples.groupBy("tenant_id").transformWithStateInPandas(
-        statefulProcessor=_Batcher(),
-        outputStructType=BATCH_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="processingTime",
     )

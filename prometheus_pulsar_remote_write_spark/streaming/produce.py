@@ -6,7 +6,7 @@ tenant -> serialize -> partition key -> async Pulsar publish -> Flush.
 
 Spark shape:
     readStream(binaryFile drop-dir)        # A1: the HTTP edge lands bodies
-      -> tenant column                     # B4 (from the path or the source)
+      -> tenant column                     # B4 (from the path)
       -> ONE mapInPandas over (content, tenant_id), per body:
            decode_body                     # snappy+proto; poison skipped
            -> label dict per series        # B1 flatten
@@ -31,22 +31,15 @@ import uuid
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.fnv import sample_partition_key
 from ..functions.serializers import resolve_marshaler
-from ..operators.flatten import flatten_write_requests
 from ..schema import DEFAULT_REPLICA_LABELS
 from ..sources import prompb
-from ..sources.remote_write import decode_remote_write
-
-#: Tenant columns can ride next to each body file as a sidecar manifest;
-#: for the file-drop source we derive them from the directory layout:
-#: <root>/<tenant>/<request>.bin. Empty-tenant requests land in a reserved
-#: directory -- it must NOT start with '_' or '.' (Spark's file index
-#: treats those as hidden metadata, e.g. _SUCCESS, and skips them).
-TENANT_DIR_NONE = "no-tenant"
+from ..sources.http_listener import TENANT_DIR_NONE
 
 
 def read_request_stream(
@@ -73,28 +66,60 @@ def tenant_from_path(path_col):
     return F.when(parent == TENANT_DIR_NONE, F.lit("")).otherwise(parent)
 
 
-def _with_tenant(bodies: DataFrame) -> DataFrame:
-    """Keep a ``tenant_id`` column the source already carries; otherwise
-    derive the tenant from the file path."""
-    if "tenant_id" in bodies.columns:
-        return bodies
-    return bodies.withColumn("tenant_id", tenant_from_path(F.col("path")))
+def _decoded_bodies(batches: Iterator[pd.DataFrame]):
+    """The per-body decode loop of both produce sinks: yields
+    ``(tenant_id, series)`` per body, ``series`` a list of (label dict,
+    samples) with each label dict built once. A body that does not
+    decode is skipped (the listener's 400 test, so the same bodies)."""
+    for pdf in batches:
+        for body, tenant in zip(pdf["content"], pdf["tenant_id"]):
+            try:
+                req = prompb.decode_body(bytes(body))
+            except Exception:
+                continue
+            yield tenant, [
+                ({lbl["name"]: lbl["value"] for lbl in ts["labels"]}, ts["samples"])
+                for ts in req["timeseries"]
+            ]
 
 
 def flat_sample_stream(bodies: DataFrame) -> DataFrame:
     """Body blobs -> flattened (timestamp, value, labels, tenant_id) rows.
 
     The front half of the lake sink (A1 decode -> B4 tenant -> B1
-    flatten), before any serialization; the wire publisher does the same
-    work in ``produce_transform``'s one pass. Pure transformation --
+    flatten), before any serialization, on ``produce_transform``'s
+    per-body decode loop. The value column is Arrow-backed so a NaN
+    staleness marker stays NaN (a plain float column would hand it to
+    Spark as null). A null tenant becomes "". Pure transformation --
     works on batch or streaming DataFrames alike."""
-    decoded = decode_remote_write(
-        _with_tenant(bodies),
-        body_col="content",
-        keep_cols=["tenant_id"],
+
+    def _flatten(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for tenant, series in _decoded_bodies(batches):
+            stamps, values, label_col = [], [], []
+            for labels, samples in series:
+                for s in samples:
+                    stamps.append(s["timestamp"])
+                    values.append(s["value"])
+                    label_col.append(labels)
+            if stamps:
+                yield pd.DataFrame(
+                    {
+                        "timestamp": stamps,
+                        "value": pd.arrays.ArrowExtensionArray(
+                            pa.array(values, pa.float64())
+                        ),
+                        "labels": label_col,
+                        "tenant_id": [tenant or ""] * len(stamps),
+                    }
+                )
+
+    return (
+        bodies.select("content", tenant_from_path(F.col("path")).alias("tenant_id"))
+        .mapInPandas(
+            _flatten,
+            "timestamp long, value double, labels map<string,string>, tenant_id string",
+        )
     )
-    good = decoded.filter(F.col("decode_error").isNull())
-    return flatten_write_requests(good, ["tenant_id"])
 
 
 def produce_transform(
@@ -112,27 +137,20 @@ def produce_transform(
     replica = DEFAULT_REPLICA_LABELS if replica_labels is None else replica_labels
 
     def _produce(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for body, tenant in zip(pdf["content"], pdf["tenant_id"]):
-                try:
-                    req = prompb.decode_body(bytes(body))
-                except Exception:  # the listener's 400 test, so the same bodies
-                    continue
-                ten = tenant if tenant is not None else ""
-                keys, payloads = [], []
-                for ts in req["timeseries"]:
-                    labels = {lbl["name"]: lbl["value"] for lbl in ts["labels"]}
-                    key = sample_partition_key(labels, ten, replica)
-                    for s in ts["samples"]:
-                        keys.append(key)
-                        payloads.append(marshal(s["timestamp"], s["value"], labels, ten))
-                if keys:
-                    tenants = [tenant] * len(keys)
-                    yield pd.DataFrame({"key": keys, "payload": payloads, "tenant_id": tenants})
+        for tenant, series in _decoded_bodies(batches):
+            ten = tenant if tenant is not None else ""
+            keys, payloads = [], []
+            for labels, samples in series:
+                key = sample_partition_key(labels, ten, replica)
+                for s in samples:
+                    keys.append(key)
+                    payloads.append(marshal(s["timestamp"], s["value"], labels, ten))
+            if keys:
+                tenants = [tenant] * len(keys)
+                yield pd.DataFrame({"key": keys, "payload": payloads, "tenant_id": tenants})
 
     return (
-        _with_tenant(bodies)
-        .select("content", "tenant_id")
+        bodies.select("content", tenant_from_path(F.col("path")).alias("tenant_id"))
         .mapInPandas(_produce, "key string, payload string, tenant_id string")
     )
 
@@ -306,37 +324,4 @@ def run_produce_pipeline(
         read_request_stream(spark, drop_dir), serializer_format, replica_labels
     )
     writer = messages.writeStream.foreachBatch(publisher or FilePublisher(out_dir))
-    return _start(writer, out_dir, checkpoint_dir, trigger_once)
-
-
-def run_produce_pipeline_datasource(
-    spark: SparkSession,
-    drop_dir: str,
-    out_dir: str,
-    checkpoint_dir: str | None = None,
-    serializer_format: str = "json",
-    trigger_once: bool = True,
-):
-    """The produce pipeline on the CUSTOM data sources end to end:
-    ``remote_write_blobs`` streaming source (A1) -> produce_transform ->
-    ``message_bus`` streaming sink (A2, staged parts made visible only on
-    epoch commit = the reference's Flush)."""
-    from ..sources import datasource as custom_ds
-
-    custom_ds.register(spark)
-    bodies = (
-        spark.readStream.format("remote_write_blobs")
-        .option("path", drop_dir)
-        .load()
-        .withColumn(
-            "tenant_id",
-            F.when(
-                F.col("tenant_dir").isNull()
-                | (F.col("tenant_dir") == TENANT_DIR_NONE),
-                F.lit(""),
-            ).otherwise(F.col("tenant_dir")),
-        )
-    )
-    messages = produce_transform(bodies, serializer_format)
-    writer = messages.writeStream.format("message_bus").option("path", out_dir)
     return _start(writer, out_dir, checkpoint_dir, trigger_once)

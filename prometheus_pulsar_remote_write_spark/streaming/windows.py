@@ -269,7 +269,7 @@ def ddsketch_tumbling_values(ev: DataFrame, watermark: str = "1 hour") -> DataFr
 
 
 def _latest_state_fold_kwargs() -> dict:
-    """Fold spec shared by ``latest_state_stream`` and its TWS twin:
+    """Fold spec for ``latest_state_stream``:
     one (ts, event_id, event_type, value) row per user -- the newest
     event seen. The batch sorts rows by (ts, event_id) already, so the
     batch-side candidate is simply the LAST sorted row (no per-row
@@ -369,20 +369,8 @@ def latest_state_stream(
     )
 
 
-def latest_state_stream_tws(
-    ev: DataFrame, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """``latest_state_stream`` on the Spark-4
-    ``transformWithStateInPandas`` API (same fold, see
-    ``_keyed_fold_stream_tws``): the newest-event row is a typed
-    ValueState; the dormant-user TTL is a per-key event-time timer."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=idle_timeout_ms, **_latest_state_fold_kwargs()
-    )
-
-
 def _scd2_fold_kwargs() -> dict:
-    """Fold spec shared by ``scd2_stream`` and its TWS twin: one OPEN
+    """Fold spec for ``scd2_stream``: one OPEN
     interval (seq, state, from_ms, last_ms, n) per user. Sequential FSM
     (a row either extends or closes the interval the previous row may
     have just opened), so the loop stays."""
@@ -485,13 +473,6 @@ def scd2_stream(ev: DataFrame) -> DataFrame:
     return _keyed_fold_stream(ev, idle_timeout_ms=None, **_scd2_fold_kwargs())
 
 
-def scd2_stream_tws(ev: DataFrame) -> DataFrame:
-    """``scd2_stream`` on the Spark-4 ``transformWithStateInPandas`` API
-    (same FSM fold, see ``_keyed_fold_stream_tws``): the open interval
-    is one typed ValueState tuple."""
-    return _keyed_fold_stream_tws(ev, idle_timeout_ms=None, **_scd2_fold_kwargs())
-
-
 def dedup_within_watermark(ev: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming exact dedup bounded by the watermark horizon.
 
@@ -559,7 +540,7 @@ def interval_join_conversions_stream(
 
 
 def _ewma_fold_kwargs() -> dict:
-    """Fold spec shared by ``ewma_stream`` and its TWS twin: a ring of
+    """Fold spec for ``ewma_stream``: a ring of
     at most 15 centi-quantized values per user. The recurrence is
     genuinely sequential (each emitted value reads the ring the
     previous row just updated), so the fold keeps its per-row loop --
@@ -643,17 +624,6 @@ def ewma_stream(ev: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
     )
 
 
-def ewma_stream_tws(
-    ev: DataFrame, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """``ewma_stream`` on the Spark-4 ``transformWithStateInPandas`` API
-    (same fold, see ``_keyed_fold_stream_tws``): the ring is a typed
-    ValueState holding one array column."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=idle_timeout_ms, **_ewma_fold_kwargs()
-    )
-
-
 def enrich_with_static_dim(ev: DataFrame, dim: DataFrame) -> DataFrame:
     """Stream-static enrichment join: the event stream joined against a
     static dimension (user -> tier). Spark re-plans the static side per
@@ -671,7 +641,7 @@ def enrich_with_static_dim(ev: DataFrame, dim: DataFrame) -> DataFrame:
 
 
 def _alert_fold_kwargs(threshold_centi: int, for_ms: int) -> dict:
-    """Fold spec shared by ``alert_stream`` and its TWS twin: per
+    """Fold spec for ``alert_stream``: per
     (tenant, series) the count of closed FIRING runs plus the single
     open above-threshold run. Sequential FSM -- the loop stays."""
     from pyspark.sql import types as T
@@ -779,16 +749,6 @@ def alert_stream(ev: DataFrame, threshold_centi: int = 10000, for_ms: int = 6000
     )
 
 
-def alert_stream_tws(
-    ev: DataFrame, threshold_centi: int = 10000, for_ms: int = 600000
-) -> DataFrame:
-    """``alert_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API (same FSM fold, see ``_keyed_fold_stream_tws``)."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=None, **_alert_fold_kwargs(threshold_centi, for_ms)
-    )
-
-
 def interval_join_conversions_outer_stream(
     ev: DataFrame, watermark: str = "1 hour", upper_s: int = 1800
 ) -> DataFrame:
@@ -866,7 +826,7 @@ def kmv_tumbling_users(ev: DataFrame, k: int = 64, watermark: str = "1 hour") ->
 
 
 def _misra_gries_fold_kwargs(capacity: int) -> dict:
-    """Fold spec shared by ``misra_gries_stream`` and its TWS twin: the
+    """Fold spec for ``misra_gries_stream``: the
     <= capacity (key, count) pairs plus the item total. Sequential by
     definition (the summary a row updates is the one the previous row
     left), so the loop stays."""
@@ -950,18 +910,8 @@ def misra_gries_stream(ev: DataFrame, capacity: int = 4) -> DataFrame:
     )
 
 
-def misra_gries_stream_tws(ev: DataFrame, capacity: int = 4) -> DataFrame:
-    """``misra_gries_stream`` on the Spark-4
-    ``transformWithStateInPandas`` API (same fold, see
-    ``_keyed_fold_stream_tws``): the summary rides a ValueState holding
-    two array columns plus the total."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=None, **_misra_gries_fold_kwargs(capacity)
-    )
-
-
 def _retention_fold_kwargs() -> dict:
-    """Fold spec shared by ``retention_stream`` and its TWS twin: per
+    """Fold spec for ``retention_stream``: per
     user, the first-seen week (the cohort) and the last week already
     emitted -- O(1) state. Under the per-key in-order delivery contract
     the twins document, a user's weeks arrive non-decreasing, so
@@ -1048,16 +998,6 @@ def retention_stream(ev: DataFrame, idle_timeout_ms: int | None = None) -> DataF
     return week (their pre-gap cohort is forgotten), the same pruning
     decision offline cohort systems make when history ages out."""
     return _keyed_fold_stream(
-        ev, idle_timeout_ms=idle_timeout_ms, **_retention_fold_kwargs()
-    )
-
-
-def retention_stream_tws(
-    ev: DataFrame, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """``retention_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API (same fold, see ``_keyed_fold_stream_tws``)."""
-    return _keyed_fold_stream_tws(
         ev, idle_timeout_ms=idle_timeout_ms, **_retention_fold_kwargs()
     )
 
@@ -1203,7 +1143,7 @@ def heatmap_stream(
 
 
 def _cusum_fold_kwargs(k2_centi: int, h_centi: int) -> dict:
-    """Fold spec shared by ``cusum_stream`` and its TWS twin: five
+    """Fold spec for ``cusum_stream``: five
     integers of state per (user, event_type). Sequential recurrence
     (each sample reads the s+/s- the previous sample set), so the loop
     stays; the trained mu2 rides each row from the broadcast join."""
@@ -1297,22 +1237,6 @@ def cusum_stream(
     per key equals the batch fold over the same data and baseline."""
     joined = ev.join(F.broadcast(baseline), ["user_id", "event_type"])
     return _keyed_fold_stream(
-        joined, idle_timeout_ms=None, **_cusum_fold_kwargs(k2_centi, h_centi)
-    )
-
-
-def cusum_stream_tws(
-    ev: DataFrame,
-    baseline: DataFrame,
-    k2_centi: int = 100,
-    h_centi: int = 4000,
-) -> DataFrame:
-    """``cusum_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API (same fold, see ``_keyed_fold_stream_tws``): the five-integer
-    detector state is one typed ValueState tuple; the trained baseline
-    still broadcasts into the stream before keying."""
-    joined = ev.join(F.broadcast(baseline), ["user_id", "event_type"])
-    return _keyed_fold_stream_tws(
         joined, idle_timeout_ms=None, **_cusum_fold_kwargs(k2_centi, h_centi)
     )
 
@@ -1439,149 +1363,8 @@ def _keyed_fold_stream(
     )
 
 
-def _keyed_fold_stream_tws(
-    ev: DataFrame,
-    *,
-    key_cols: list,
-    select_cols: list,
-    sort_cols: list,
-    fold,
-    out_schema,
-    state_schema,
-    idle_timeout_ms: int | None,
-    output_mode: str = "append",
-):
-    """``_keyed_fold_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API: the SAME fold drives both scaffolds -- the carried tuple lives
-    in a typed ValueState (the API long-lived jobs want for state-schema
-    evolution) and the idle-TTL contract is an explicit per-key
-    EVENT-TIME TIMER (registerTimer at last_ts + horizon, re-armed on
-    every arrival, expiry clears the state) -- the lifecycle
-    GroupStateTimeout folds into one enum, spelled out in the new API's
-    native vocabulary. Emissions are identical by construction and the
-    tests pin both APIs equal to the batch extraction. Requires the
-    RocksDB state store provider (typed state variables are column
-    families; the HDFS-backed provider refuses them)."""
-    from typing import Iterator
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_cols = [f.name for f in out_schema.fields]
-    n_state = len(state_schema.fields)
-
-    from pyspark.sql import types as T
-
-    timer_schema = T.StructType(
-        [T.StructField("armed_expiry_ms", T.LongType(), True)]
-    )
-
-    class _Fold(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("fold_state", state_schema)
-            if idle_timeout_ms is not None:
-                # there is at most one live timer per key; tracking its
-                # armed expiry in a ValueState makes re-arming a point
-                # delete instead of a per-key listTimers() range scan
-                # against RocksDB on every arrival (round-9 advice)
-                self._timer_meta = handle.getValueState(
-                    "timer_meta", timer_schema
-                )
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            st = self._state.get()
-            prior = tuple(st) if st is not None else (None,) * n_state
-            pdf = pd.concat(list(rows)).sort_values(sort_cols)
-            if pdf.empty:
-                yield pd.DataFrame([], columns=out_cols)
-                return
-            out, new_state, last_ts_ms = fold(key, pdf, prior)
-            self._state.update(tuple(new_state))
-            if idle_timeout_ms is not None:
-                new_expiry = int(last_ts_ms) + idle_timeout_ms
-                armed = self._timer_meta.get()
-                old_expiry = armed[0] if armed is not None else None
-                if old_expiry is None and st is not None:
-                    # legacy-checkpoint migration: fold state exists but
-                    # timer_meta doesn't, so this checkpoint was written
-                    # by the pre-timer_meta code that registered timers
-                    # without tracking them. One listTimers() sweep (only
-                    # here, once per migrated key) deletes the orphans;
-                    # otherwise the orphan would fire later and evict a
-                    # recently-active key's state prematurely.
-                    for orphan in list(self._handle.listTimers()):
-                        self._handle.deleteTimer(orphan)
-                if old_expiry != new_expiry:
-                    if old_expiry is not None:
-                        self._handle.deleteTimer(old_expiry)
-                    self._handle.registerTimer(new_expiry)
-                    self._timer_meta.update((new_expiry,))
-            if isinstance(out, pd.DataFrame):
-                yield out.loc[:, out_cols]
-            else:
-                yield pd.DataFrame(out, columns=out_cols)
-
-        def handleExpiredTimer(
-            self, key, timerValues, expiredTimerInfo
-        ) -> Iterator[pd.DataFrame]:
-            # idle past the horizon: clear the carried state (and the
-            # timer bookkeeping) so the store tracks only active keys.
-            # Guard: only the timer timer_meta says is armed may evict.
-            # An expiry MISMATCH is an orphan from a pre-timer_meta
-            # checkpoint whose key re-armed since (the handleInputRows
-            # migration sweep covers keys that arrive, but an
-            # already-queued firing can still race it); clearing on it
-            # would evict a recently-active key prematurely, so it is
-            # ignored -- firing IS the orphan's deletion. armed=None is
-            # the other legacy shape: a key that never arrived
-            # post-upgrade, for which the old timer's firing is the
-            # legitimate idle-eviction signal, so it falls through.
-            if idle_timeout_ms is not None:
-                armed = self._timer_meta.get()
-                expiry = expiredTimerInfo.getExpiryTimeInMs()
-                if armed is not None and armed[0] != expiry:
-                    yield pd.DataFrame([], columns=out_cols)
-                    return
-                self._timer_meta.clear()
-            self._state.clear()
-            yield pd.DataFrame([], columns=out_cols)
-
-        def close(self) -> None:
-            pass
-
-    # lateness tolerance == the idle horizon: a 0s watermark would
-    # silently drop any event out of order ACROSS keys (keys are skewed
-    # in time, so a global max-ts watermark guarantees cross-key drops);
-    # rows later than the horizon are exactly the ones whose key may
-    # already be evicted, so the horizon is the honest bound
-    src_df = (
-        ev
-        if idle_timeout_ms is None
-        else ev.withWatermark("ts", f"{idle_timeout_ms} milliseconds")
-    )
-    # select_cols may be a thunk: Column expressions need a live session,
-    # and the fold specs must stay importable without one (the fold
-    # micro-bench and property tests run the folds pure-pandas)
-    cols = select_cols() if callable(select_cols) else select_cols
-    keyed = src_df.select(
-        *cols, *(["ts"] if idle_timeout_ms is not None else [])
-    )
-    return keyed.groupBy(*key_cols).transformWithStateInPandas(
-        statefulProcessor=_Fold(),
-        outputStructType=out_schema,
-        outputMode=output_mode,
-        timeMode="none" if idle_timeout_ms is None else "eventTime",
-    )
-
-
 def _transition_fold_kwargs() -> dict:
-    """Fold spec shared by ``transition_stream`` and its TWS twin: each
+    """Fold spec for ``transition_stream``: each
     user's LAST event type is the only state, and every arriving event
     with a predecessor emits one (prev_type, next_type) row."""
     from pyspark.sql import types as T
@@ -1679,25 +1462,8 @@ def transition_stream(ev: DataFrame, idle_timeout_ms: int | None = None) -> Data
     )
 
 
-def transition_stream_tws(
-    ev: DataFrame, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """``transition_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API (same fold, see ``_keyed_fold_stream_tws``): kept alongside the
-    ``applyInPandasWithState`` twin the same way the D1 batcher keeps
-    both (streaming/batcher.py tws_batches) -- the two state APIs are
-    the only part that differs, and the tests pin them equal. Without a
-    TTL there are no timers (timeMode='none'); with one, a per-key
-    event-time timer re-arms on every arrival and its expiry clears the
-    ValueState. Same documented trade: the transition spanning an
-    evicted gap is not emitted."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=idle_timeout_ms, **_transition_fold_kwargs()
-    )
-
-
 def _scrape_gap_fold_kwargs() -> dict:
-    """Fold spec shared by ``scrape_gap_stream`` and its TWS twin: per
+    """Fold spec for ``scrape_gap_stream``: per
     series (tenant, metric name) the only state is the last sample's
     timestamp; every arriving sample emits one interval row."""
     from pyspark.sql import types as T
@@ -1791,21 +1557,8 @@ def scrape_gap_stream(ev: DataFrame, idle_timeout_ms: int | None = None) -> Data
     )
 
 
-def scrape_gap_stream_tws(
-    ev: DataFrame, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """``scrape_gap_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API (same fold, see ``_keyed_fold_stream_tws``): the last-sample
-    timestamp is a typed ValueState; the series-churn TTL becomes a
-    per-key event-time timer whose expiry drops the series -- the
-    Prometheus staleness lifecycle in the new API's vocabulary."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=idle_timeout_ms, **_scrape_gap_fold_kwargs()
-    )
-
-
 def _funnel_fold_kwargs() -> dict:
-    """Fold spec shared by ``funnel_stream`` and its TWS twin: three
+    """Fold spec for ``funnel_stream``: three
     stage timestamps per user; a row is emitted the moment a user newly
     reaches a stage. The fold is a genuine FSM (each row's branch
     depends on the state the previous row may have just set), so it
@@ -1902,19 +1655,8 @@ def funnel_stream(ev: DataFrame, idle_timeout_ms: int | None = None) -> DataFram
     )
 
 
-def funnel_stream_tws(ev: DataFrame, idle_timeout_ms: int | None = None) -> DataFrame:
-    """``funnel_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API (same FSM fold, see ``_keyed_fold_stream_tws``): the three
-    stage timestamps are one typed ValueState tuple; the optional TTL
-    is a per-key event-time timer with the same per-incarnation
-    re-emission trade the applyInPandasWithState knob documents."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=idle_timeout_ms, **_funnel_fold_kwargs()
-    )
-
-
 def _path_trigram_fold_kwargs() -> dict:
-    """Fold spec shared by ``path_trigram_stream`` and its TWS twin:
+    """Fold spec for ``path_trigram_stream``:
     each user's last TWO event types are the only state; every arriving
     event with two predecessors emits one 'p2>p1>current' path row."""
     from pyspark.sql import types as T
@@ -2040,14 +1782,3 @@ def path_trigram_stream(
         ev, idle_timeout_ms=idle_timeout_ms, **_path_trigram_fold_kwargs()
     )
 
-
-def path_trigram_stream_tws(
-    ev: DataFrame, idle_timeout_ms: int | None = None
-) -> DataFrame:
-    """``path_trigram_stream`` on the Spark-4 ``transformWithStateInPandas``
-    API (same fold, see ``_keyed_fold_stream_tws``): the last-two-types
-    pair is a typed ValueState; the journey TTL is a per-key event-time
-    timer with the same fresh-journey-on-return trade."""
-    return _keyed_fold_stream_tws(
-        ev, idle_timeout_ms=idle_timeout_ms, **_path_trigram_fold_kwargs()
-    )

@@ -9,7 +9,7 @@ micro-batch (default 10,000 rows -- the regime where a skewed key's
 fold cost is the twin's throughput ceiling), using the loop bodies the
 r8 twins shipped as the baseline. Runs pure-pandas (no Spark session):
 the fold is the only thing that changed, and it executes identically
-inside applyInPandasWithState / transformWithStateInPandas workers.
+inside applyInPandasWithState workers.
 
 Usage: python scripts/bench_fold.py [rows]
 """

@@ -12,10 +12,8 @@ state-store telemetry: with natural key churn (mean per-user event gap
 well under the 1,500 total users, with evictions firing continuously,
 not at drain.
 
-Usage: python scripts/soak_ttl.py [n_batches] [idle_hours] [api]
-``api`` is ``aipws`` (default, applyInPandasWithState/EventTimeTimeout)
-or ``tws`` (transformWithStateInPandas timers under the RocksDB
-provider -- the same fold, the new API's eviction lifecycle).
+Usage: python scripts/soak_ttl.py [n_batches] [idle_hours]
+The fold runs on applyInPandasWithState with an EventTimeTimeout.
 Prints per-decile numRowsTotal/numRowsRemoved and the summary line
 SCALE.md records.
 """
@@ -40,22 +38,6 @@ from prometheus_pulsar_remote_write_spark.streaming import windows
 def main() -> None:
     n_batches = int(sys.argv[1]) if len(sys.argv) > 1 else 120
     idle_hours = float(sys.argv[2]) if len(sys.argv) > 2 else 6.0
-    api = sys.argv[3] if len(sys.argv) > 3 else "aipws"
-    if api == "tws":
-        # the TWS control channel imports google.protobuf; reuse the
-        # test shim where the real package is absent (tests/_shims)
-        shims = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "tests",
-            "_shims",
-        )
-        try:
-            import google.protobuf  # noqa: F401
-        except ImportError:
-            sys.path.insert(0, shims)
-            os.environ["PYTHONPATH"] = (
-                shims + os.pathsep + os.environ.get("PYTHONPATH", "")
-            )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     # stage the history as ts-ordered micro-batch files (pyarrow: one
@@ -86,16 +68,6 @@ def main() -> None:
             "spark.sql.streaming.numRecentProgressUpdates": str(
                 n_batches + 16
             ),
-            **(
-                {
-                    "spark.sql.streaming.stateStore.providerClass": (
-                        "org.apache.spark.sql.execution.streaming.state."
-                        "RocksDBStateStoreProvider"
-                    )
-                }
-                if api == "tws"
-                else {}
-            ),
         },
     )
     schema = spark.read.parquet(os.path.join(src, "b0000.parquet")).schema
@@ -108,14 +80,11 @@ def main() -> None:
         stream = stream.withColumn(
             "ts", stream["ts"].cast("timestamp")
         )
-    make_stream = (
-        windows.transition_stream_tws if api == "tws" else windows.transition_stream
-    )
     import time
 
     t0 = time.time()
     q = (
-        make_stream(stream, idle_timeout_ms=int(idle_hours * 3_600_000))
+        windows.transition_stream(stream, idle_timeout_ms=int(idle_hours * 3_600_000))
         .writeStream.format("memory")
         .queryName("soak_ttl")
         .outputMode("append")
@@ -150,7 +119,7 @@ def main() -> None:
     steady = [c[1] for c in curve[len(curve) // 3 :]]
     print(
         f"history: {n} events, {users} users, {n_batches} micro-batches,"
-        f" idle horizon {idle_hours}h, api={api}"
+        f" idle horizon {idle_hours}h"
     )
     print("batch  state_rows  removed  updated")
     for b, tot, rem, upd in curve[:: max(1, len(curve) // 12)]:
@@ -162,8 +131,6 @@ def main() -> None:
         f" across {batches_evicting}/{len(curve)} batches;"
         f" {emitted} transitions emitted"
     )
-    # the TWS-vs-legacy overhead record (round-9 verdict task 6): same
-    # fold, same 120-batch drive -- only the state API + provider differ
     print(
         f"throughput: {n} rows in {elapsed:.1f}s ="
         f" {n / elapsed:,.0f} rows/s end-to-end ({len(curve)} batches,"

@@ -5,21 +5,6 @@ import sys
 
 import pytest
 
-# google.protobuf alias shim (tests/_shims): lets the Spark-4
-# transformWithState path run where protobuf isn't pip-installed but the
-# image ships the Cloud SDK's vendored pure-python runtime. Must be on
-# sys.path BEFORE any pyspark streaming import, and on PYTHONPATH before
-# the JVM starts so forked python workers inherit it.
-_SHIMS = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_shims")
-try:
-    import google.protobuf  # noqa: F401  (real install wins if present)
-except ImportError:
-    if os.path.isdir(os.path.join(_SHIMS, "google", "protobuf")):
-        sys.path.insert(0, _SHIMS)
-        os.environ["PYTHONPATH"] = _SHIMS + os.pathsep + os.environ.get(
-            "PYTHONPATH", ""
-        )
-
 from prometheus_pulsar_remote_write_spark.session import get_spark
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

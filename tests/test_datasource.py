@@ -1,199 +1,37 @@
-"""Custom Python DataSource tests (SURVEY.md §2.A A1/A2): the
-remote_write_blobs source and message_bus sink drive the same wire bytes
-as the file-based pipelines, via spark.read/readStream/write/writeStream.
+"""The A1 transport (SURVEY.md §2.A): the HTTP remote-write listener
+that spools real POSTs into the drop directory the produce pipeline
+reads, and its ops surface (/ready, the telemetry path, the
+max-connection-age middleware).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
-
-from pyspark.sql import functions as F
-
-from prometheus_pulsar_remote_write_spark.operators.flatten import flatten_write_requests
-from prometheus_pulsar_remote_write_spark.sources import datasource, prompb, snappy_codec
-from prometheus_pulsar_remote_write_spark.sources.remote_write import decode_remote_write
-
-
-def _spool_body(path: str, n_samples: int) -> None:
-    req = {
-        "timeseries": [
-            {
-                "labels": [{"name": "__name__", "value": "up"}, {"name": "i", "value": str(i)}],
-                "samples": [{"value": float(i), "timestamp": 1000 + i}],
-            }
-            for i in range(n_samples)
-        ]
-    }
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "wb") as fh:
-        fh.write(snappy_codec.compress(prompb.encode_write_request(req)))
-
-
-def test_blob_source_batch_read_and_decode(spark, tmp_path):
-    spool = str(tmp_path / "spool")
-    _spool_body(os.path.join(spool, "team-a", "req1.bin"), 3)
-    _spool_body(os.path.join(spool, "team-a", "req2.bin"), 2)
-    _spool_body(os.path.join(spool, "team-b", "req3.bin"), 4)
-
-    datasource.register(spark)
-    raw = spark.read.format("remote_write_blobs").option("path", spool).load()
-    assert raw.count() == 3
-    tenants = {r.tenant_dir for r in raw.select("tenant_dir").collect()}
-    assert tenants == {"team-a", "team-b"}
-
-    decoded = decode_remote_write(raw, body_col="content", keep_cols=["tenant_dir"])
-    samples = flatten_write_requests(decoded, ["tenant_dir"])
-    per_tenant = {
-        r.tenant_dir: r.n
-        for r in samples.groupBy("tenant_dir").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_tenant == {"team-a": 5, "team-b": 4}
-
-
-def test_blob_source_streaming_picks_up_new_files(spark, tmp_path):
-    spool = str(tmp_path / "spool")
-    _spool_body(os.path.join(spool, "team-a", "req1.bin"), 2)
-
-    datasource.register(spark)
-    stream = (
-        spark.readStream.format("remote_write_blobs").option("path", spool).load()
-    )
-    q = (
-        stream.select("path", "tenant_dir", F.length("content").alias("n_bytes"))
-        .writeStream.format("memory")
-        .queryName("blobs")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM blobs").count() >= 1:
-                break
-            time.sleep(0.5)
-        assert spark.sql("SELECT * FROM blobs").count() == 1
-
-        # a newly spooled body must arrive in a later micro-batch
-        _spool_body(os.path.join(spool, "team-b", "req2.bin"), 1)
-        deadline = time.time() + 60
-        while time.time() < deadline:
-            if spark.sql("SELECT * FROM blobs").count() >= 2:
-                break
-            time.sleep(0.5)
-        rows = spark.sql("SELECT * FROM blobs").collect()
-        assert len(rows) == 2
-        assert {r.tenant_dir for r in rows} == {"team-a", "team-b"}
-        assert all(r.n_bytes > 0 for r in rows)
-    finally:
-        q.stop()
-
-
-def test_message_bus_batch_write_commit_visibility(spark, tmp_path):
-    out = str(tmp_path / "bus")
-    datasource.register(spark)
-    df = spark.createDataFrame(
-        [("k1", "p1", "a"), ("k2", "p2", "b"), ("k3", "p3", "a")],
-        "key string, payload string, tenant_id string",
-    ).repartition(2)
-    df.write.format("message_bus").option("path", out).mode("append").save()
-
-    files = os.listdir(out)
-    assert files and all(not f.startswith("_staged") for f in files)
-    rows = []
-    for f in files:
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert {(r["key"], r["payload"], r["tenant_id"]) for r in rows} == {
-        ("k1", "p1", "a"),
-        ("k2", "p2", "b"),
-        ("k3", "p3", "a"),
-    }
-
-
-def test_message_bus_stream_write(spark, tmp_path):
-    out = str(tmp_path / "bus")
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-    with open(os.path.join(src, "in.jsonl"), "w") as fh:
-        for i in range(5):
-            fh.write(json.dumps({"key": f"k{i}", "payload": f"p{i}", "tenant_id": "t"}) + "\n")
-
-    datasource.register(spark)
-    stream = spark.readStream.schema("key string, payload string, tenant_id string").json(src)
-    q = (
-        stream.writeStream.format("message_bus")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = []
-    for f in os.listdir(out):
-        assert not f.startswith("_staged")
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert {r["key"] for r in rows} == {f"k{i}" for i in range(5)}
-
-
-def test_produce_pipeline_on_custom_datasources(spark, tmp_path):
-    """Full A1->A2 on the custom formats: spooled wire bodies stream in
-    through remote_write_blobs, wire messages stream out through
-    message_bus -- no file-source workarounds anywhere."""
-    from prometheus_pulsar_remote_write_spark.streaming.produce import (
-        run_produce_pipeline_datasource,
-    )
-
-    spool = str(tmp_path / "spool")
-    out = str(tmp_path / "bus")
-    _spool_body(os.path.join(spool, "team-a", "r1.bin"), 3)
-    _spool_body(os.path.join(spool, "no-tenant", "r2.bin"), 2)
-
-    q = run_produce_pipeline_datasource(
-        spark, spool, out, checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    rows = []
-    for f in os.listdir(out):
-        if f.startswith("_"):
-            continue
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert len(rows) == 5
-    tenants = {r["tenant_id"] for r in rows}
-    assert tenants == {"team-a", ""}
-    for r in rows:
-        payload = json.loads(r["payload"])
-        assert payload["metric"]["__name__"] == "up"
-        assert r["key"].startswith("hex ")
+from prometheus_pulsar_remote_write_spark.sources import prompb
 
 
 def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     """A1 transport end-to-end: real HTTP remote-write POSTs (Basic Auth /
     X-Scope-OrgID / anonymous tenants, reference handlers.go semantics)
-    land in the blob spool, the remote_write_blobs batch read decodes
-    them, and a poison body is refused with 400 and never spooled."""
+    land in the blob spool, the produce edge reads them with the drop
+    source's binaryFile options and publishes each under its tenant (an
+    anonymous POST under ""), and a poison body is refused with 400 and
+    never spooled."""
     import base64
+    import json
     import urllib.request
+    from collections import Counter
 
-    from prometheus_pulsar_remote_write_spark.sources import prompb, snappy_codec
+    from prometheus_pulsar_remote_write_spark.sources import snappy_codec
     from prometheus_pulsar_remote_write_spark.sources.http_listener import (
         RemoteWriteListener,
     )
-    from prometheus_pulsar_remote_write_spark.sources.remote_write import (
-        decode_remote_write,
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        produce_transform,
     )
 
-    datasource.register(spark)
     spool = str(tmp_path / "spool")
     listener = RemoteWriteListener(spool)
     host, port = listener.start()
-    url = f"http://{host}:{port}/write"
 
     def body(name, n):
         req = {
@@ -220,7 +58,7 @@ def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     auth = {"Authorization": "Basic " + base64.b64encode(b"tenant-a:pw").decode()}
     assert post(body("m1", 3), auth) == 200
     assert post(body("m2", 2), {"X-Scope-OrgID": "tenant-b"}) == 200
-    assert post(body("m3", 1)) == 200  # anonymous -> root spool
+    assert post(body("m3", 1)) == 200  # anonymous
     assert post(b"not snappy at all") == 400
     # valid snappy around a request cut short inside a sample
     truncated = snappy_codec.decompress(body("m5", 1))[:-3]
@@ -230,19 +68,17 @@ def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     assert listener.accepted_by_tenant == {"tenant-a": 1, "tenant-b": 1, "": 1}
     listener.stop()
 
-    blobs = (
-        spark.read.format("remote_write_blobs").option("path", spool).load()
+    bodies = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.bin")
+        .option("recursiveFileLookup", "true")
+        .load(spool)
     )
-    decoded = decode_remote_write(
-        blobs, body_col="content", keep_cols=["tenant_dir"]
-    )
-    rows = decoded.collect()
-    assert len(rows) == 3 and all(r["decode_error"] is None for r in rows)
-    by_tenant = {}
-    for r in rows:
-        n = sum(len(ts["samples"]) for ts in r["timeseries"])
-        by_tenant[r["tenant_dir"]] = by_tenant.get(r["tenant_dir"], 0) + n
-    assert by_tenant == {"tenant-a": 3, "tenant-b": 2, None: 1}
+    rows = produce_transform(bodies).collect()
+    assert {r.tenant_id for r in rows} == {"tenant-a", "tenant-b", ""}
+    assert Counter(r.tenant_id for r in rows) == {"tenant-a": 3, "tenant-b": 2, "": 1}
+    for r in rows:  # the JSON marshaler omits an empty tenant
+        assert json.loads(r.payload).get("tenant_id", "") == r.tenant_id
 
 
 def test_http_listener_rejects_repeated_label_name(tmp_path):

