@@ -35,6 +35,7 @@ import json
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -303,16 +304,22 @@ def deserialize(df, fmt: str, payload_col: str = "payload", keep_cols: list[str]
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
+            rows, values = [], []
             for i, payload in enumerate(pdf[payload_col]):
                 base = {c: pdf[c].iloc[i] for c in keep_cols}
                 try:
                     ts, val, lbl, ten = unmarshal(payload)
-                    base.update(timestamp=ts, value=val, labels=lbl, tenant_id=ten)
+                    base.update(timestamp=ts, labels=lbl, tenant_id=ten)
                 except Exception:
-                    base.update(timestamp=None, value=None, labels=None, tenant_id=None)
+                    base.update(timestamp=None, labels=None, tenant_id=None)
+                    val = None
                 rows.append(base)
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+                values.append(val)
+            out = pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+            # an Arrow-backed column keeps a NaN sample (a staleness marker)
+            # NaN; a plain float column would hand it to Spark as null
+            out["value"] = pd.arrays.ArrowExtensionArray(pa.array(values, pa.float64()))
+            yield out
 
     return df.mapInPandas(_parse, out_schema)
 

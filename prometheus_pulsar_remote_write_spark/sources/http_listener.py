@@ -209,8 +209,16 @@ class RemoteWriteListener:
                 if self.path not in ("/write", "/api/v1/push"):
                     self._finish(404)
                     return
-                n = int(self.headers.get("Content-Length", "0"))
-                body = self.rfile.read(n)
+                length = self.headers.get("Content-Length", "0").strip()
+                if not (length.isascii() and length.isdigit()):
+                    # non-numeric or negative: the body's end is unknown,
+                    # so nothing of it is read and the connection closes
+                    with outer._lock:
+                        outer.rejected += 1
+                    self.close_connection = True
+                    self._finish(400)
+                    return
+                body = self.rfile.read(int(length))
                 try:
                     prompb.decode_body(body)
                 except Exception:

@@ -16,11 +16,12 @@ single-threaded event loop; state here is per-key across executors), with
 the same per-flush grouping and ordering guarantees. State is bounded:
 at most batch_size-1 rows per tenant.
 
-The consume pipeline runs ``microbatch_batches``: it groups per
-micro-batch in one hash-shuffle, and the trigger interval plays the role
-of max delay. ``stateful_batches`` is the faithful mid-batch delay
-batcher, on the state API every other stateful operator here uses
-(Structured Streaming's ``GroupState``).
+The consume pipeline batches per micro-batch inside its per-tenant
+delivery pass (``consume.post_batches_distributed``): it cuts each
+tenant's sorted samples into ``DEFAULT_BATCH_SIZE`` chunks, and the
+trigger interval plays the role of max delay. ``stateful_batches`` is the
+faithful mid-batch delay batcher, on the state API every other stateful
+operator here uses (Structured Streaming's ``GroupState``).
 """
 
 from __future__ import annotations
@@ -173,9 +174,11 @@ def stateful_batches(
 
 
 def microbatch_batches(batch_df: DataFrame, batch_size: int = DEFAULT_BATCH_SIZE) -> DataFrame:
-    """Per-micro-batch grouping (the simpler D1 mode): deterministic batch
-    ids per tenant within one micro-batch; the trigger interval bounds
-    delay. One hash-shuffle on tenant_id."""
+    """Per-micro-batch batch ids as a window column: deterministic per
+    tenant within one micro-batch, in the order the consume pass cuts its
+    batches. Only the wire benchmark's traced prefix probe
+    (``perfbench/sut.py``) and ``scripts/bench_wire.py`` call it; it is
+    deleted once that probe times the consume pass itself (ROADMAP.md)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("tenant_id").orderBy("timestamp", "labels_json")

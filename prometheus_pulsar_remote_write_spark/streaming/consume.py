@@ -8,12 +8,13 @@ backpressure) / drop(unrecoverable).
 
 Spark mapping:
   readStream(payload files)        # A3; checkpoint == ack bookkeeping
-    -> deserialize (C4)            # poison -> DLQ, stream continues (B9)
-    -> batching                    # D1 (see batcher.py)
-    -> foreachBatch(RemoteWriteSink)
-         post_batches_distributed  # on the executors, per (tenant, batch):
-           nest_samples + encode   #   B2/B3 + prompb.encode_body (A4)
-           POST                    #   D2 fan-out
+    -> parse_samples (C4)          # poison rows keep their payload (B9)
+    -> foreachBatch(RemoteWriteSink), one Spark action per micro-batch:
+         post_batches_distributed  # repartition + groupBy(tenant_id)
+                                   # .applyInPandas; per tenant: sort,
+                                   # cut batch_size chunks (D1), sort
+                                   # labels (B3), encode (A4), POST (D2)
+         poison rows        -> <poison_dir>/epoch=<id>.json (B9)
          recoverable error  -> raise => micro-batch replayed (D5):
                                checkpoint does not advance, intake halts
          unrecoverable      -> the rejected body to a DLQ file + continue
@@ -23,11 +24,12 @@ There is one delivery path. Per-tenant requests within a micro-batch are
 independent HTTP calls made where the data is, so a 1000-executor cluster
 fans out exactly like the reference's per-tenant goroutines -- but
 partitioned, not single-threaded. Only small status rows (plus the body of
-a rejected batch) come back to the driver.
+a rejected batch, or a poison payload) come back to the driver.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -37,8 +39,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.serializers import deserialize
-from ..operators.flatten import nest_samples
 from ..sources import prompb
+from .batcher import DEFAULT_BATCH_SIZE
+
+#: ``batch_seq`` of the status row a poison sample comes back as
+POISON_SEQ = -1
 
 
 class RecoverableError(Exception):
@@ -61,9 +66,7 @@ def read_payload_stream(spark: SparkSession, in_dir: str, max_files: int = 64) -
 def parse_samples(messages: DataFrame, fmt: str = "json") -> DataFrame:
     """C4 + B9: deserialize payloads; poison rows keep payload for the DLQ."""
     parsed = deserialize(messages, fmt, keep_cols=["payload"])
-    return parsed.withColumn(
-        "labels_json", F.to_json(F.col("labels"))
-    )
+    return parsed.withColumn("labels_json", F.to_json(F.col("labels")))
 
 
 @dataclass
@@ -95,13 +98,10 @@ class RemoteWriteSink:
     def _ledger(self) -> str:
         return self.ledger_dir or os.path.join(self.dlq_dir, "_sent_ledger")
 
-    def _marker(self, epoch_id: int, tenant_id: str, batch_seq) -> str:
-        name = f"epoch={epoch_id}-tenant={tenant_id or '_none'}-batch={batch_seq}"
-        return os.path.join(self._ledger(), name)
-
     def _settle(self, epoch_id: int, tenant_id: str, batch_seq) -> None:
         os.makedirs(self._ledger(), exist_ok=True)
-        with open(self._marker(epoch_id, tenant_id, batch_seq), "w"):
+        name = f"epoch={epoch_id}-tenant={tenant_id or '_none'}-batch={batch_seq}"
+        with open(os.path.join(self._ledger(), name), "w"):
             pass
 
     def _settled_pairs(self, epoch_id: int) -> set:
@@ -126,44 +126,44 @@ class RemoteWriteSink:
         with open(os.path.join(self.dlq_dir, name), "wb") as fh:
             fh.write(body)
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def _poison_write(self, poison_dir: str, epoch_id: int, payloads: list) -> None:
+        """B9: one ``{"payload": ...}`` line per poison message, in one file
+        per epoch that a replay replaces whole."""
+        os.makedirs(poison_dir, exist_ok=True)
+        tmp = os.path.join(poison_dir, f".epoch={epoch_id}.json")
+        with open(tmp, "w", encoding="utf-8") as fh:
+            for p in payloads:
+                payload = None if p is None else p.decode()
+                fh.write(json.dumps({"payload": payload}) + "\n")
+        os.replace(tmp, os.path.join(poison_dir, f"epoch={epoch_id}.json"))
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int, poison_dir: str) -> None:
         """Encode+POST on the executors (``post_batches_distributed``), then
         apply the reference's D5/D6 policy on the returned status rows.
 
         A replayed micro-batch (after a RecoverableError aborted a previous
         attempt) must not re-POST batches that already got a 2xx or were
         DLQ'd: the reference only retains un-acked samples
-        (write.go:208-236). batch_seq is deterministic per epoch
-        (row_number over a stable sort), so settled batches are filtered
-        out before the POST wave, and successes/DLQs settle before any
+        (write.go:208-236). batch_seq is deterministic per epoch (a sort
+        within each tenant), so the pass skips settled batches; poison
+        (to ``poison_dir``), successes and DLQs all settle before any
         RecoverableError raises."""
-        from .batcher import microbatch_batches
-
-        # Cached, the batches keep the window's partitioning: one delivery
-        # task per tenant hash bucket. Uncached, adaptive execution
-        # coalesces that small shuffle into one partition, and every POST
-        # of the micro-batch runs in one task, one after another.
-        batched = microbatch_batches(batch_df, self.batch_size).persist()
-        try:
-            todo = batched
-            settled = self._settled_pairs(epoch_id)
-            if settled:
-                keys = [f"{t}\x00{b}" for t, b in settled]
-                key = F.concat_ws(
-                    "\x00", F.col("tenant_id"), F.col("batch_seq").cast("string")
-                )
-                todo = batched.filter(~key.isin(keys))
-            statuses = post_batches_distributed(
-                todo,
-                self.url,
-                user_agent=self.user_agent,
-                post_fn=self.post_fn,
-                send_timeout_s=self.send_timeout_s,
-            )
-        finally:
-            batched.unpersist()
+        statuses = post_batches_distributed(
+            batch_df,
+            self.url,
+            user_agent=self.user_agent,
+            post_fn=self.post_fn,
+            send_timeout_s=self.send_timeout_s,
+            batch_size=self.batch_size,
+            settled=self._settled_pairs(epoch_id),
+        )
+        poison = [s[5] for s in statuses if s[1] == POISON_SEQ]
+        if poison:  # B9: log+ack+skip => park the payloads, keep going
+            self._poison_write(poison_dir, epoch_id, poison)
         recoverable = []
         for tenant_id, batch_seq, status, n, elapsed, body in statuses:
+            if batch_seq == POISON_SEQ:
+                continue
             if self.metrics is not None:
                 self.metrics.count_received(tenant_id, n)
                 self.metrics.observe_duration(elapsed, tenant_id)
@@ -199,7 +199,8 @@ def run_consume_pipeline(
     source: DataFrame | None = None,
     dedup_within: str | None = None,
 ):
-    """Wire the consume stream: parse -> split poison -> sink. Returns the query.
+    """Wire the consume stream: parse -> sink, which parks poison in
+    ``poison_dir``. Returns the query.
 
     ``trigger_interval_ms`` is the Spark analog of the reference's
     consume batch-max-delay (app.go:36-38): a micro-batch closes at most
@@ -264,31 +265,15 @@ def run_consume_pipeline(
             parsed.filter(F.col("timestamp").isNotNull())
             .withColumn("event_ts", F.timestamp_millis(F.col("timestamp")))
             .withWatermark("event_ts", dedup_within)
-            .dropDuplicatesWithinWatermark(
-                ["tenant_id", "labels_json", "timestamp"]
-            )
+            .dropDuplicatesWithinWatermark(["tenant_id", "labels_json", "timestamp"])
             .drop("event_ts")
         )
-        parsed = good.unionByName(
-            parsed.filter(F.col("timestamp").isNull())
-        )
+        parsed = good.unionByName(parsed.filter(F.col("timestamp").isNull()))
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        # cache the micro-batch: the poison count and the sink's actions
-        # would otherwise each re-execute the whole upstream plan --
-        # re-scanning/re-parsing the source (and re-running the stateful
-        # dedup subtree, double-committing its store and doubling its
-        # progress counters) once per action
-        batch_df.persist()
-        try:
-            good = batch_df.filter(F.col("timestamp").isNotNull()).drop("payload")
-            poison = batch_df.filter(F.col("timestamp").isNull()).select("payload")
-            n_poison = poison.count()
-            if n_poison:  # B9: log+ack+skip => park in DLQ, keep going
-                poison.write.mode("append").json(poison_dir)
-            sink(good, epoch_id)
-        finally:
-            batch_df.unpersist()
+        # one action per micro-batch: a second one would re-run the whole
+        # upstream plan, including the stateful dedup subtree
+        sink(batch_df, epoch_id, poison_dir)
 
     writer = (
         parsed.writeStream.foreachBatch(process)
@@ -350,75 +335,87 @@ def post_batches_distributed(
     user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0",
     post_fn=None,
     send_timeout_s: float = 30.0,
+    batch_size: int = DEFAULT_BATCH_SIZE,
+    settled=frozenset(),
 ) -> list:
-    """D2 fan-out on EXECUTORS: encode + POST each (tenant, batch) inside
-    the partition that holds it; only small per-batch status rows return
-    to the driver. ``post_fn`` must be picklable; default is a per-worker
-    singleton ``requests.Session`` (A5 connection reuse).
+    """D2 fan-out on EXECUTORS, one grouped pass per micro-batch like the
+    reference's per-tenant loop (write.go:115-242). A tenant's samples are
+    one pandas frame, sorted by (timestamp, labels_json, value) and cut
+    into ``batch_size`` chunks, ``batch_seq = i // batch_size``; each chunk
+    not in ``settled`` (a set of (tenant, batch_seq)) is encoded with
+    name-sorted labels (B3) and POSTed. ``batch_df`` needs (tenant_id,
+    timestamp, value, labels_json), plus ``payload`` if it holds poison.
+    ``post_fn`` must be picklable; default is a per-worker
+    ``requests.Session`` (A5).
 
     Returns [(tenant_id, batch_seq, status, n_samples, elapsed_s, body)]
-    sorted, so a partially-failed attempt settles the same prefix on every
-    replay. ``body`` is the exact bytes POSTed when the receiver answered
-    4xx (the DLQ copy) and None otherwise; ``elapsed_s`` feeds the
-    send-duration histogram.
+    sorted by (tenant, batch), so a partially-failed attempt settles the
+    same prefix on every replay. ``body`` is the exact bytes POSTed when
+    the receiver answered 4xx (the DLQ copy), else None. A poison row
+    (null timestamp) returns ``(tenant_id, POISON_SEQ, 0, 0, 0.0,
+    payload as UTF-8 bytes)``.
     """
     import pandas as pd
 
-    from pyspark.sql import types as T
-
-    with_labels = batch_df.withColumn(
-        "labels", F.from_json("labels_json", "map<string,string>")
+    post = post_fn or (
+        lambda u, body, headers: worker_client(u)
+        .post(u, data=body, headers=headers, timeout=send_timeout_s)
+        .status_code
     )
-    nested = nest_samples(with_labels, ["tenant_id", "batch_seq"])
-
+    # only a poison row carries its payload into the shuffle
+    payload = F.col("payload") if "payload" in batch_df.columns else F.lit(None)
+    # an explicit partition count: adaptive execution would coalesce the
+    # small shuffle into one task and POST every tenant's batches in series
+    n_parts = int(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    poison_payload = F.when(F.col("timestamp").isNull(), payload).cast("string")
+    samples = batch_df.select(
+        "tenant_id", "timestamp", "value", "labels_json", poison_payload.alias("payload")
+    ).repartition(n_parts, "tenant_id")
     columns = ["tenant_id", "batch_seq", "status", "n_samples", "elapsed_s", "body"]
-    out_schema = T.StructType(
-        [
-            T.StructField("tenant_id", T.StringType()),
-            T.StructField("batch_seq", T.LongType()),
-            T.StructField("status", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-            T.StructField("elapsed_s", T.DoubleType()),
-            T.StructField("body", T.BinaryType()),
-        ]
+    out_schema = (
+        "tenant_id string, batch_seq long, status int, n_samples int, "
+        "elapsed_s double, body binary"
     )
 
-    def _post_partition(batches):
-        for pdf in batches:
-            rows = []
-            for tenant_id, batch_seq, timeseries in zip(
-                pdf["tenant_id"], pdf["batch_seq"], pdf["timeseries"]
-            ):
-                body = prompb.encode_body(timeseries)
-                headers = {
-                    "Content-Encoding": "snappy",
-                    "Content-Type": "application/x-protobuf",
-                    "User-Agent": user_agent,
-                }
-                if tenant_id:
-                    headers["X-Scope-OrgID"] = tenant_id  # reference write.go:83-94
-                t0 = time.perf_counter()
-                try:
-                    if post_fn is not None:
-                        status = post_fn(url, body, headers)
-                    else:
-                        status = worker_client(url).post(
-                            url, data=body, headers=headers, timeout=send_timeout_s
-                        ).status_code
-                except Exception:
-                    status = 599  # transport error -> recoverable
-                elapsed = time.perf_counter() - t0
-                rows.append(
-                    (
-                        tenant_id,
-                        int(batch_seq),
-                        int(status),
-                        len(timeseries),
-                        elapsed,
-                        body if 400 <= status < 500 else None,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=columns)
+    def _tenant(pdf: pd.DataFrame) -> pd.DataFrame:
+        tenant_id = pdf["tenant_id"].iloc[0]
+        is_poison = pdf["timestamp"].isna()
+        rows = [
+            (tenant_id, POISON_SEQ, 0, 0, 0.0, None if p is None else p.encode())
+            for p in pdf["payload"][is_poison]
+        ]
+        good = pdf[~is_poison].sort_values(["timestamp", "labels_json", "value"])
+        labels = {
+            lj: [{"name": k, "value": v} for k, v in sorted(json.loads(lj).items())]
+            for lj in set(good["labels_json"])
+        }
+        stamps = good["timestamp"].astype("int64").tolist()
+        series = [
+            {"labels": labels[lj], "samples": [{"value": v, "timestamp": t}]}
+            for t, v, lj in zip(stamps, good["value"], good["labels_json"])
+        ]
+        headers = {
+            "Content-Encoding": "snappy",
+            "Content-Type": "application/x-protobuf",
+            "User-Agent": user_agent,
+        }
+        if tenant_id:
+            headers["X-Scope-OrgID"] = tenant_id  # reference write.go:83-94
+        for start in range(0, len(series), batch_size):
+            batch_seq = start // batch_size
+            if (tenant_id or "", batch_seq) in settled:
+                continue
+            chunk = series[start : start + batch_size]
+            body = prompb.encode_body(chunk)
+            t0 = time.perf_counter()
+            try:
+                status = int(post(url, body, headers))
+            except Exception:
+                status = 599  # transport error -> recoverable
+            elapsed = time.perf_counter() - t0
+            rejected = body if 400 <= status < 500 else None
+            rows.append((tenant_id, batch_seq, status, len(chunk), elapsed, rejected))
+        return pd.DataFrame(rows, columns=columns)
 
-    statuses = nested.mapInPandas(_post_partition, out_schema).collect()
-    return sorted(tuple(r) for r in statuses)
+    statuses = samples.groupBy("tenant_id").applyInPandas(_tenant, out_schema).collect()
+    return sorted(map(tuple, statuses), key=lambda r: (r[0] or "", r[1]))

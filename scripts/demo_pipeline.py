@@ -9,11 +9,12 @@ public API on a temp directory, with live HTTP on BOTH edges:
      engine's remote-write listener (A1 transport, Basic Auth tenants) ->
      spool -> streaming decode (A1) -> flatten (B1) -> tenant (B4) -> FNV
      partition key (B8) -> C1 JSON payloads -> bus sink (A2).
-  2. CONSUME: the produced messages -> deserialize (C4) -> poison split
-     (B9) -> per-tenant batches (D1/D2) -> re-nest + label sort (B2/B3)
-     -> snappy(prompb) POSTs (A4, executor-side, REAL urllib over a
-     socket) to a local downstream remote-write receiver that decodes
-     each body and counts delivered samples per X-Scope-OrgID tenant.
+  2. CONSUME: the produced messages -> deserialize (C4) -> one per-tenant
+     pass that parks poison (B9), cuts batches (D1/D2), sorts labels
+     (B3) and POSTs snappy(prompb) bodies (A4, executor-side, REAL
+     urllib over a socket) to a local downstream remote-write receiver
+     that decodes each body and counts delivered samples per
+     X-Scope-OrgID tenant.
 
 Usage: python scripts/demo_pipeline.py
 """

@@ -6,6 +6,8 @@ max-connection-age middleware).
 
 from __future__ import annotations
 
+import pytest
+
 from prometheus_pulsar_remote_write_spark.sources import prompb
 
 
@@ -109,6 +111,39 @@ def test_http_listener_rejects_repeated_label_name(tmp_path):
         status = e.code
     listener.stop()
     assert status == 400
+    assert listener.rejected == 1 and listener.accepted == 0
+    assert not any(p.is_file() for p in spool.rglob("*"))
+
+
+@pytest.mark.parametrize("length", ["abc", "-1"])
+def test_http_listener_rejects_bad_content_length(tmp_path, length):
+    """A non-numeric or negative Content-Length gets a 400 at once, not a
+    dropped connection or a read that waits for the client to close, and
+    nothing is spooled."""
+    import socket
+
+    from prometheus_pulsar_remote_write_spark.sources.http_listener import (
+        RemoteWriteListener,
+    )
+
+    spool = tmp_path / "spool"
+    listener = RemoteWriteListener(str(spool))
+    host, port = listener.start()
+    try:
+        with socket.create_connection((host, port), timeout=10) as sock:
+            sock.sendall(
+                (
+                    "POST /write HTTP/1.1\r\n"
+                    f"Host: {host}\r\n"
+                    "X-Scope-OrgID: tenant-a\r\n"
+                    f"Content-Length: {length}\r\n\r\n"
+                    "junk"
+                ).encode()
+            )
+            status_line = sock.makefile("rb").readline()
+    finally:
+        listener.stop()
+    assert status_line.split()[:2] == [b"HTTP/1.1", b"400"]
     assert listener.rejected == 1 and listener.accepted == 0
     assert not any(p.is_file() for p in spool.rglob("*"))
 

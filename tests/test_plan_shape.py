@@ -9,6 +9,8 @@ stay correct (SURVEY.md §4).
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -108,6 +110,53 @@ def test_produce_edge_is_one_python_exec(spark, tmp_path):
     plan = _plan(messages)
     assert plan.count("MapInPandas") == 1, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def test_consume_delivery_is_one_grouped_pass(spark, tmp_path):
+    """Consume delivery is one Spark action: one exchange on tenant_id into
+    one grouped pandas pass that batches, encodes and POSTs. No window, no
+    collect_list re-nest and no cached relation."""
+    import re
+
+    from prometheus_pulsar_remote_write_spark.functions.serializers import (
+        marshal_json,
+    )
+    from prometheus_pulsar_remote_write_spark.streaming.consume import (
+        parse_samples,
+        post_batches_distributed,
+    )
+
+    lines = [
+        {"payload": marshal_json(1000 + i, 1.0, {"__name__": "up"}, t), "tenant_id": t}
+        for i in range(5)
+        for t in ("a", "b")
+    ] + [{"payload": "not json", "tenant_id": "a"}]
+    (tmp_path / "m.json").write_text("\n".join(json.dumps(x) for x in lines))
+    messages = spark.read.schema("payload string, tenant_id string").json(str(tmp_path))
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsList().size()
+    statuses = post_batches_distributed(
+        parse_samples(messages), "http://sink", post_fn=lambda u, b, h: 200
+    )
+    assert sorted(s[3] for s in statuses) == [0, 5, 5]
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = store.executionsList()
+    assert executions.size() == before + 1  # one action
+    described = executions.apply(before).physicalPlanDescription()
+    # the adaptive plan tree as run ("Final", or "Current" until the
+    # final-plan event lands), without its initial plan or node details
+    final = re.split(r"== (?:Final|Current) Plan ==", described)[1]
+    final = final.split("== Initial Plan ==")[0]
+    assert final.count("Exchange") == 1, final
+    assert re.search(
+        r"\(\d+\) Exchange\nInput \[\d+\]: [^\n]*\nArguments: "
+        r"hashpartitioning\(tenant_id#",
+        described,
+    ), described
+    assert final.count("FlatMapGroupsInPandas") == 1, final
+    for absent in ("Window", "Aggregate", "InMemory"):
+        assert absent not in final, final
 
 
 def test_new_tpch_shapes_plan_strategies(spark):

@@ -153,6 +153,24 @@ def test_serialize_col_spark(spark):
     assert got == {(0, ""), (10001, ""), (0, "fake")}
 
 
+def test_deserialize_keeps_nan_sample_nan(spark):
+    """A staleness marker is marshalled as "NaN". deserialize must hand it
+    to Spark as a NaN double, not a null, while a poison row's value stays
+    null."""
+    from prometheus_pulsar_remote_write_spark.functions.serializers import deserialize
+
+    payloads = [
+        (marshal_json(1000, math.nan, {"__name__": "up"}, "t"),),
+        (marshal_json(2000, 1.5, {"__name__": "up"}, "t"),),
+        ("{not json",),
+    ]
+    parsed = deserialize(spark.createDataFrame(payloads, "payload string"), "json")
+    rows = {r.timestamp: r.value for r in parsed.collect()}
+    assert rows[1000] is not None and math.isnan(rows[1000])
+    assert rows[2000] == 1.5
+    assert rows[None] is None
+
+
 def test_serialize_json_expr_matches_udf(spark):
     """The JVM expression tier agrees with the byte-parity tier on
     bounded-precision data (the catalog's operating envelope)."""

@@ -809,9 +809,6 @@ def test_sink_replay_skips_settled_batches(spark, tmp_path):
 
 
 def test_distributed_post_delivers_all_batches(spark, tmp_path, monkeypatch):
-    from prometheus_pulsar_remote_write_spark.streaming.batcher import (
-        microbatch_batches,
-    )
     from prometheus_pulsar_remote_write_spark.streaming.consume import (
         post_batches_distributed,
     )
@@ -837,9 +834,8 @@ def test_distributed_post_delivers_all_batches(spark, tmp_path, monkeypatch):
     df = spark.createDataFrame(
         rows, "tenant_id string, timestamp long, value double, labels_json string"
     )
-    batched = microbatch_batches(df, batch_size=4)
     statuses = post_batches_distributed(
-        batched, url="http://sink", post_fn=recording_post
+        df, url="http://sink", post_fn=recording_post, batch_size=4
     )
     # team-a: 7 samples @4 -> 2 batches; "": 3 -> 1 batch; sorted by
     # (tenant, batch), and a 2xx row carries no body
@@ -864,9 +860,6 @@ def test_distributed_post_delivers_all_batches(spark, tmp_path, monkeypatch):
 
 
 def test_distributed_post_reports_5xx_status(spark):
-    from prometheus_pulsar_remote_write_spark.streaming.batcher import (
-        microbatch_batches,
-    )
     from prometheus_pulsar_remote_write_spark.streaming.consume import (
         post_batches_distributed,
     )
@@ -879,11 +872,145 @@ def test_distributed_post_reports_5xx_status(spark):
         "tenant_id string, timestamp long, value double, labels_json string",
     )
     statuses = post_batches_distributed(
-        microbatch_batches(df, 100), url="http://sink", post_fn=post_503
+        df, url="http://sink", post_fn=post_503, batch_size=100
     )
     assert [(s[0], s[1], s[2], s[3], s[5]) for s in statuses] == [
         ("t", 0, 503, 1, None)
     ]
+
+
+def _recording_post(post_dir: str, status: int = 200):
+    """A picklable post_fn that keeps each POSTed body as a file and
+    answers ``status``."""
+
+    def post(url, body, headers):
+        import os as _os
+        import uuid as _uuid
+
+        _os.makedirs(post_dir, exist_ok=True)
+        org = headers.get("X-Scope-OrgID", "") or "_none"
+        with open(_os.path.join(post_dir, f"{org}-{_uuid.uuid4().hex}"), "wb") as fh:
+            fh.write(body)
+        return status
+
+    return post
+
+
+def _posted_bodies(post_dir: str) -> list:
+    out = []
+    for name in sorted(os.listdir(post_dir)):
+        with open(os.path.join(post_dir, name), "rb") as fh:
+            out.append(fh.read())
+    return out
+
+
+@pytest.mark.parametrize("batch_size", [4, 100])
+def test_distributed_post_bodies_match_reference_chain(spark, tmp_path, batch_size):
+    """The grouped pass POSTs exactly the bytes of the reference chain:
+    a row_number window over (timestamp, labels_json) per tenant, labels
+    re-nested through from_json and sorted by name, encoded per batch.
+    Series share timestamps, and label values hold non-ASCII and
+    JSON-escaped characters."""
+    from prometheus_pulsar_remote_write_spark.operators.flatten import nest_samples
+    from prometheus_pulsar_remote_write_spark.streaming.batcher import (
+        microbatch_batches,
+    )
+    from prometheus_pulsar_remote_write_spark.streaming.consume import (
+        parse_samples,
+        post_batches_distributed,
+    )
+
+    odd_values = ["plain", "zürich", "東京", 'quo"te', "back\\slash", "new\nline"]
+    msgs = []
+    for tenant, n_series in (("team-a", 6), ("team-b", 2), ("", 1)):
+        for s_i in range(n_series):
+            labels = {
+                "__name__": "up",
+                "job": odd_values[s_i % len(odd_values)],
+                "instance": f"i{s_i}",
+            }
+            for t in range(25):
+                msgs.append((marshal_json(1000 * t, float(s_i * 100 + t), labels, tenant), tenant))
+    in_dir = str(tmp_path / "in")
+    _write_messages(in_dir, msgs)
+    messages = spark.read.schema("key string, payload string, tenant_id string").json(in_dir)
+    parsed = parse_samples(messages).filter(F.col("timestamp").isNotNull()).drop("payload")
+
+    nested = nest_samples(
+        microbatch_batches(parsed, batch_size).withColumn(
+            "labels", F.from_json("labels_json", "map<string,string>")
+        ),
+        ["tenant_id", "batch_seq"],
+    )
+    expected = sorted(prompb.encode_body(r.timeseries) for r in nested.collect())
+
+    post_dir = str(tmp_path / "posts")
+    statuses = post_batches_distributed(
+        parsed, "http://sink", post_fn=_recording_post(post_dir), batch_size=batch_size
+    )
+    assert sum(s[3] for s in statuses) == len(msgs)
+    assert len(statuses) == len(expected)
+    assert sorted(_posted_bodies(post_dir)) == expected
+
+
+def test_consume_delivers_nan_sample(spark, tmp_path):
+    """A NaN sample (a Prometheus staleness marker) is delivered as NaN,
+    and the query finishes cleanly."""
+    import math
+
+    in_dir = str(tmp_path / "in")
+    labels = {"__name__": "up"}
+    _write_messages(
+        in_dir,
+        [
+            (marshal_json(1000, math.nan, labels, "team-a"), "team-a"),
+            (marshal_json(2000, 2.0, labels, "team-a"), "team-a"),
+        ],
+    )
+    post_dir = str(tmp_path / "posts")
+    sink = RemoteWriteSink(
+        url="http://sink", dlq_dir=str(tmp_path / "dlq"), post_fn=_recording_post(post_dir)
+    )
+    q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sink.sent == {"team-a": 2}
+    (body,) = _posted_bodies(post_dir)
+    samples = [s for ts in prompb.decode_body(body)["timeseries"] for s in ts["samples"]]
+    assert [s["timestamp"] for s in samples] == [1000, 2000]
+    assert math.isnan(samples[0]["value"]) and samples[1]["value"] == 2.0
+
+
+def test_consume_poison_written_once_across_replay(spark, tmp_path):
+    """A micro-batch that fails with a 5xx and then replays with a 2xx
+    leaves one poison line per poison message, not one per attempt."""
+    in_dir = str(tmp_path / "in")
+    msgs, n_good = _sample_messages()
+    _write_messages(in_dir, msgs)
+    checkpoint = str(tmp_path / "ckpt")
+    poison_dir = str(tmp_path / "poison")
+    dlq = str(tmp_path / "dlq")
+
+    bad = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=lambda u, b, h: 503)
+    q = run_consume_pipeline(spark, in_dir, bad, poison_dir, checkpoint_dir=checkpoint)
+    with pytest.raises(Exception):
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise q.exception()
+
+    good = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=lambda u, b, h: 200)
+    q2 = run_consume_pipeline(spark, in_dir, good, poison_dir, checkpoint_dir=checkpoint)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    assert sum(good.sent.values()) == n_good
+
+    lines = []
+    for name in os.listdir(poison_dir):
+        path = os.path.join(poison_dir, name)
+        if os.path.isfile(path) and not name.startswith(("_", ".")):
+            with open(path) as fh:
+                lines += [json.loads(line) for line in fh if line.strip()]
+    assert lines == [{"payload": "this is not json {"}]
 
 
 def test_streaming_rate_matches_batch(spark, tmp_path):
