@@ -27,7 +27,9 @@ The reference's process model maps onto Spark like this:
   pulsar.subscription                  -> subscription (consume.go:42-43;
                                           names the checkpoint, so consumers
                                           sharing it share progress)
-  batch max delay (app.go:36-38)       -> batch_max_delay_ms
+  batch max delay (app.go:36-38)       -> batch_max_delay_ms (an upper
+                                          bound: continuous consume
+                                          triggers every min(this, 1 s))
   batch size 100 (write.go:20-24)      -> batch_size
   send-timeout                         -> send_timeout_s
   log.level / log.format (app.go:61,   -> log_level / log_format
@@ -345,6 +347,7 @@ def run(spark: SparkSession, cfg: AppConfig):
         return query, listener
 
     from .operators.metrics import DeliveryMetrics
+    from .streaming import TRIGGER_INTERVAL_MS
     from .streaming.consume import RemoteWriteSink, run_consume_pipeline
 
     sink = RemoteWriteSink(
@@ -363,7 +366,7 @@ def run(spark: SparkSession, cfg: AppConfig):
         checkpoint_dir=cfg._work(f"ckpt-consume-{cfg.subscription}"),
         fmt=cfg.serializer,
         trigger_once=cfg.trigger_once,
-        trigger_interval_ms=cfg.batch_max_delay_ms,
+        trigger_interval_ms=min(cfg.batch_max_delay_ms, TRIGGER_INTERVAL_MS),
         source=cfg.bus().source(spark),
         dedup_within=(
             f"{cfg.dedup_within_ms} milliseconds"

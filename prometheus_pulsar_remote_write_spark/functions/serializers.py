@@ -178,12 +178,27 @@ def make_avro_marshaler(schema):
     return _marshal
 
 
+def _sample(ts_ms: int, value: float, labels, tenant_id) -> tuple[int, float, dict, str]:
+    """The unmarshalled sample, or ValueError when the wire cannot carry it:
+    a timestamp outside int64, or a label map or tenant that is not all
+    strings. Raising here makes such a payload poison (B9); past this
+    point Arrow or the protobuf encoder would fail the whole task."""
+    if not (
+        -(1 << 63) <= ts_ms < 1 << 63
+        and isinstance(tenant_id, str)
+        and isinstance(labels, dict)
+        and all(isinstance(v, str) for v in labels.values())
+    ):
+        raise ValueError("payload is not a sample")
+    return ts_ms, value, labels, tenant_id
+
+
 def unmarshal_json(payload: str) -> tuple[int, float, dict, str]:
     """Inverse of C1."""
     data = json.loads(payload)
     sec, val_str = data["value"]
     ts_ms = int(round(float(sec) * 1000))
-    return (
+    return _sample(
         ts_ms,
         parse_go_float(str(val_str)),
         data.get("metric") or {},
@@ -198,7 +213,7 @@ def unmarshal_compat(payload: str) -> tuple[int, float, dict, str]:
     name = data.get("name") or ""
     if "__name__" not in labels and name:
         labels["__name__"] = name
-    return (
+    return _sample(
         ms_from_rfc3339(data["timestamp"]),
         parse_go_float(str(data["value"])),
         labels,

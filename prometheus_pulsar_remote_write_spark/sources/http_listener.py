@@ -209,10 +209,12 @@ class RemoteWriteListener:
                 if self.path not in ("/write", "/api/v1/push"):
                     self._finish(404)
                     return
-                length = self.headers.get("Content-Length", "0").strip()
+                length = self.headers.get("Content-Length", "").strip()
                 if not (length.isascii() and length.isdigit()):
-                    # non-numeric or negative: the body's end is unknown,
-                    # so nothing of it is read and the connection closes
+                    # missing, non-numeric or negative: the body's end is
+                    # unknown, so nothing of it is read (its bytes must not
+                    # be served as the next request) and the connection
+                    # closes
                     with outer._lock:
                         outer.rejected += 1
                     self.close_connection = True

@@ -40,6 +40,7 @@ from ..functions.serializers import resolve_marshaler
 from ..schema import DEFAULT_REPLICA_LABELS
 from ..sources import prompb
 from ..sources.http_listener import TENANT_DIR_NONE
+from . import TRIGGER_INTERVAL_MS
 
 
 def read_request_stream(
@@ -299,14 +300,15 @@ class FanoutPublisher:
 
 
 def _start(writer, out_dir: str, checkpoint_dir: str | None, trigger_once: bool):
-    """Start a produce query: drain the drop dir once, or poll it every second."""
+    """Start a produce query: drain the drop dir once, or poll it every
+    ``TRIGGER_INTERVAL_MS``."""
     checkpoint_dir = checkpoint_dir or os.path.join(
         out_dir, f"_checkpoint-{uuid.uuid4().hex[:8]}"
     )
     writer = writer.option("checkpointLocation", checkpoint_dir).outputMode("append")
     if trigger_once:
         return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime="1 second").start()
+    return writer.trigger(processingTime=f"{TRIGGER_INTERVAL_MS} milliseconds").start()
 
 
 def run_produce_pipeline(

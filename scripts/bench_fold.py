@@ -1,8 +1,7 @@
 #!/usr/bin/env python
 """Micro-bench for the per-key fold twins' per-batch cost (round 9).
 
-The shift-shaped folds (transition, scrape gap, trigram) and the D1
-batcher ingest were rewritten
+The shift-shaped folds (transition, scrape gap, trigram) were rewritten
 from a per-row Python loop to vectorized pandas column ops seeded by
 the carried state row. This measures both on a single hot key's
 micro-batch (default 10,000 rows -- the regime where a skewed key's
@@ -90,124 +89,6 @@ def _loop_trigram(key, pdf, prior):
     return out, (p1, p2), last_ts // 1000
 
 
-class _FakeBatchState:
-    """Just enough GroupState for driving the batcher fold directly."""
-
-    def __init__(self):
-        self.exists = False
-        self.hasTimedOut = False
-        self._v = None
-        self.timeout_set = None
-        self.now_ms = 0
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-    def setTimeoutDuration(self, d):
-        self.timeout_set = d
-
-    def getCurrentProcessingTimeMs(self):
-        return self.now_ms
-
-
-def _loop_batcher(batch_size, max_delay_ms):
-    """The r8 per-row D1 batcher (baseline)."""
-
-    def batch_fn(key, pdfs, state):
-        (tenant_id,) = key
-        if state.exists:
-            ts_buf, val_buf, lbl_buf, next_seq, deadline = state.get
-            ts_buf, val_buf, lbl_buf = list(ts_buf), list(val_buf), list(lbl_buf)
-        else:
-            ts_buf, val_buf, lbl_buf, next_seq, deadline = [], [], [], 0, None
-        out_rows = []
-
-        def flush(reason):
-            nonlocal ts_buf, val_buf, lbl_buf, next_seq, deadline
-            take = batch_size if reason == "size" else len(ts_buf)
-            for i in range(take):
-                out_rows.append(
-                    {
-                        "tenant_id": tenant_id,
-                        "batch_seq": next_seq,
-                        "flush_reason": reason,
-                        "timestamp": ts_buf[i],
-                        "value": val_buf[i],
-                        "labels_json": lbl_buf[i],
-                    }
-                )
-            ts_buf, val_buf, lbl_buf = ts_buf[take:], val_buf[take:], lbl_buf[take:]
-            next_seq += 1
-            deadline = None
-
-        for p in pdfs:
-            ts_buf.extend(int(x) for x in p["timestamp"])
-            val_buf.extend(float(x) for x in p["value"])
-            lbl_buf.extend(str(x) for x in p["labels_json"])
-            while len(ts_buf) >= batch_size:
-                flush("size")
-        now = state.getCurrentProcessingTimeMs()
-        if ts_buf and deadline is None:
-            deadline = now + max_delay_ms
-        state.update((ts_buf, val_buf, lbl_buf, next_seq, deadline))
-        if ts_buf:
-            state.setTimeoutDuration(max(int(deadline - now), 1))
-        yield pd.DataFrame(
-            out_rows,
-            columns=[
-                "tenant_id",
-                "batch_seq",
-                "flush_reason",
-                "timestamp",
-                "value",
-                "labels_json",
-            ],
-        )
-
-    return batch_fn
-
-
-def _bench_batcher(n):
-    from prometheus_pulsar_remote_write_spark.streaming.batcher import (
-        _make_batch_fn,
-    )
-
-    rng = np.random.default_rng(7)
-    pdf = pd.DataFrame(
-        {
-            "timestamp": np.arange(n, dtype=np.int64),
-            "value": rng.random(n),
-            "labels_json": np.asarray(
-                ['{"__name__":"up","job":"node"}'] * n, dtype=object
-            ),
-        }
-    )
-
-    def run(factory):
-        fn = factory(100, 5000)
-        runs, res = [], None
-        for _ in range(5):
-            st = _FakeBatchState()
-            t0 = time.perf_counter()
-            res = pd.concat(list(fn(("t",), iter([pdf]), st)), ignore_index=True)
-            runs.append(time.perf_counter() - t0)
-        return sorted(runs)[len(runs) // 2], res
-
-    t_loop, r_loop = run(_loop_batcher)
-    t_vec, r_vec = run(_make_batch_fn)
-    pd.testing.assert_frame_equal(r_loop, r_vec, check_dtype=False)
-    print(
-        f"  {'d1_batcher':<11} loop {t_loop * 1000:8.2f} ms   "
-        f"vectorized {t_vec * 1000:7.2f} ms   "
-        f"speedup {t_loop / t_vec:6.1f}x   ({len(r_vec)} rows out)"
-    )
-
-
 def _time(fn, key, pdf, prior, out_cols, reps=5):
     """Median seconds for fold + DataFrame materialization (the loop
     baseline pays pd.DataFrame(list-of-dicts) exactly as the r8
@@ -278,7 +159,6 @@ def main() -> None:
             f"vectorized {t_vec * 1000:7.2f} ms   "
             f"speedup {t_loop / t_vec:6.1f}x   ({len(f_vec)} rows out)"
         )
-    _bench_batcher(n)
 
 
 if __name__ == "__main__":

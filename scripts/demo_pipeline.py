@@ -9,8 +9,8 @@ public API on a temp directory, with live HTTP on BOTH edges:
      engine's remote-write listener (A1 transport, Basic Auth tenants) ->
      spool -> streaming decode (A1) -> flatten (B1) -> tenant (B4) -> FNV
      partition key (B8) -> C1 JSON payloads -> bus sink (A2).
-  2. CONSUME: the produced messages -> deserialize (C4) -> one per-tenant
-     pass that parks poison (B9), cuts batches (D1/D2), sorts labels
+  2. CONSUME: the produced messages -> one per-tenant pass that
+     deserializes (C4), parks poison (B9), cuts batches (D1/D2), sorts labels
      (B3) and POSTs snappy(prompb) bodies (A4, executor-side, REAL
      urllib over a socket) to a local downstream remote-write receiver
      that decodes each body and counts delivered samples per

@@ -115,11 +115,12 @@ def test_http_listener_rejects_repeated_label_name(tmp_path):
     assert not any(p.is_file() for p in spool.rglob("*"))
 
 
-@pytest.mark.parametrize("length", ["abc", "-1"])
+@pytest.mark.parametrize("length", ["abc", "-1", "missing"])
 def test_http_listener_rejects_bad_content_length(tmp_path, length):
-    """A non-numeric or negative Content-Length gets a 400 at once, not a
-    dropped connection or a read that waits for the client to close, and
-    nothing is spooled."""
+    """A missing, non-numeric or negative Content-Length gets a 400 at once,
+    not a dropped connection or a read that waits for the client to close.
+    Nothing is spooled, and the connection closes: the bytes after the
+    headers (here a whole second request) are never served."""
     import socket
 
     from prometheus_pulsar_remote_write_spark.sources.http_listener import (
@@ -129,6 +130,7 @@ def test_http_listener_rejects_bad_content_length(tmp_path, length):
     spool = tmp_path / "spool"
     listener = RemoteWriteListener(str(spool))
     host, port = listener.start()
+    header = "" if length == "missing" else f"Content-Length: {length}\r\n"
     try:
         with socket.create_connection((host, port), timeout=10) as sock:
             sock.sendall(
@@ -136,14 +138,17 @@ def test_http_listener_rejects_bad_content_length(tmp_path, length):
                     "POST /write HTTP/1.1\r\n"
                     f"Host: {host}\r\n"
                     "X-Scope-OrgID: tenant-a\r\n"
-                    f"Content-Length: {length}\r\n\r\n"
-                    "junk"
+                    f"{header}\r\n"
+                    f"GET /metrics HTTP/1.1\r\nHost: {host}\r\n\r\n"
                 ).encode()
             )
-            status_line = sock.makefile("rb").readline()
+            received = b""
+            while chunk := sock.recv(65536):  # until the listener closes
+                received += chunk
     finally:
         listener.stop()
-    assert status_line.split()[:2] == [b"HTTP/1.1", b"400"]
+    status_lines = [l for l in received.split(b"\r\n") if l.startswith(b"HTTP/1.")]
+    assert [l.split()[:2] for l in status_lines] == [[b"HTTP/1.1", b"400"]]
     assert listener.rejected == 1 and listener.accepted == 0
     assert not any(p.is_file() for p in spool.rglob("*"))
 

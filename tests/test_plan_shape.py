@@ -113,8 +113,10 @@ def test_produce_edge_is_one_python_exec(spark, tmp_path):
 
 
 def test_consume_delivery_is_one_grouped_pass(spark, tmp_path):
-    """Consume delivery is one Spark action: one exchange on tenant_id into
-    one grouped pandas pass that batches, encodes and POSTs. No window, no
+    """The frame run_consume_pipeline hands its sink is delivered in one
+    Spark action: one exchange on the payload's tenant into one grouped
+    pandas pass that parses, batches, encodes and POSTs. No upstream
+    Python exec (MapInPandas, BatchEvalPython), no window, no
     collect_list re-nest and no cached relation."""
     import re
 
@@ -122,8 +124,8 @@ def test_consume_delivery_is_one_grouped_pass(spark, tmp_path):
         marshal_json,
     )
     from prometheus_pulsar_remote_write_spark.streaming.consume import (
-        parse_samples,
-        post_batches_distributed,
+        RemoteWriteSink,
+        run_consume_pipeline,
     )
 
     lines = [
@@ -131,19 +133,39 @@ def test_consume_delivery_is_one_grouped_pass(spark, tmp_path):
         for i in range(5)
         for t in ("a", "b")
     ] + [{"payload": "not json", "tenant_id": "a"}]
-    (tmp_path / "m.json").write_text("\n".join(json.dumps(x) for x in lines))
-    messages = spark.read.schema("payload string, tenant_id string").json(str(tmp_path))
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    (in_dir / "m.json").write_text("\n".join(json.dumps(x) for x in lines))
 
     store = spark._jsparkSession.sharedState().statusStore()
-    before = store.executionsList().size()
-    statuses = post_batches_distributed(
-        parse_samples(messages), "http://sink", post_fn=lambda u, b, h: 200
+    listener_bus = spark.sparkContext._jsc.sc().listenerBus()
+    real = RemoteWriteSink(
+        url="http://sink", dlq_dir=str(tmp_path / "dlq"), post_fn=lambda u, b, h: 200
     )
-    assert sorted(s[3] for s in statuses) == [0, 5, 5]
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    executions = store.executionsList()
-    assert executions.size() == before + 1  # one action
-    described = executions.apply(before).physicalPlanDescription()
+    plans = []
+
+    def sink(*args):
+        listener_bus.waitUntilEmpty()
+        before = store.executionsList().size()
+        real(*args)
+        listener_bus.waitUntilEmpty()
+        executions = store.executionsList()
+        plans.extend(
+            executions.apply(i).physicalPlanDescription()
+            for i in range(before, executions.size())
+        )
+
+    q = run_consume_pipeline(spark, str(in_dir), sink, str(tmp_path / "poison"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert real.sent == {"a": 5, "b": 5}
+    # the micro-batch plan up to the sink: foreachBatch hands the sink a
+    # scan over it, so its Python execs do not show in the action's plan
+    upstream = q._jsq.streamingQuery().lastExecution().executedPlan().toString()
+    for absent in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
+        assert absent not in upstream, upstream
+    assert len(plans) == 1  # one action
+    (described,) = plans
     # the adaptive plan tree as run ("Final", or "Current" until the
     # final-plan event lands), without its initial plan or node details
     final = re.split(r"== (?:Final|Current) Plan ==", described)[1]
@@ -155,7 +177,7 @@ def test_consume_delivery_is_one_grouped_pass(spark, tmp_path):
         described,
     ), described
     assert final.count("FlatMapGroupsInPandas") == 1, final
-    for absent in ("Window", "Aggregate", "InMemory"):
+    for absent in ("MapInPandas", "BatchEvalPython", "Window", "Aggregate", "InMemory"):
         assert absent not in final, final
 
 

@@ -10,6 +10,8 @@ bytes, which is strictly stronger than the reference's own check.
 import json
 import math
 
+import pytest
+
 from prometheus_pulsar_remote_write_spark.functions.serializers import (
     marshal_avro_json,
     marshal_json,
@@ -112,6 +114,27 @@ def test_unmarshal_compat_legacy_vectors():
         assert _freeze((ts, val, labels, tenant)) == _freeze(
             (expected[0], expected[1], dict(expected[2]), expected[3])
         )
+
+
+def test_unmarshal_rejects_payloads_the_wire_cannot_carry():
+    """Valid JSON that is not a sample -- a timestamp past int64, a
+    non-string tenant or label value, a label list -- raises ValueError in
+    both unmarshalers, so consume parks it as poison instead of failing
+    the task when the value reaches Arrow or the protobuf encoder."""
+    for bad in (
+        '{"value":[1e300,"2"],"metric":{"a":"b"}}',
+        '{"value":[1,"2"],"metric":{"a":"b"},"tenant_id":7}',
+        '{"value":[1,"2"],"metric":{"a":3}}',
+        '{"value":[1,"2"],"metric":["a"]}',
+    ):
+        with pytest.raises(ValueError):
+            unmarshal_json(bad)
+    for bad in (
+        '{"timestamp":"1970-01-01T00:00:00Z","value":"1","labels":{"a":3}}',
+        '{"timestamp":"1970-01-01T00:00:00Z","value":"1","tenant_id":true}',
+    ):
+        with pytest.raises(ValueError):
+            unmarshal_compat(bad)
 
 
 def test_empty_metric_and_tenant_omitted():

@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -22,7 +21,6 @@ from prometheus_pulsar_remote_write_spark.functions.serializers import (
 )
 from prometheus_pulsar_remote_write_spark.sources import prompb, snappy_codec
 from prometheus_pulsar_remote_write_spark.streaming import windows
-from prometheus_pulsar_remote_write_spark.streaming.batcher import stateful_batches
 from prometheus_pulsar_remote_write_spark.streaming.consume import (
     RemoteWriteSink,
     run_consume_pipeline,
@@ -421,91 +419,6 @@ def test_consume_recoverable_replays_batch(spark, tmp_path):
     assert sum(good.sent.values()) == n_good
 
 
-def _samples_stream(spark, tmp_path, rows):
-    in_dir = str(tmp_path / "samples")
-    os.makedirs(in_dir, exist_ok=True)
-    with open(os.path.join(in_dir, "part0.jsonl"), "w") as fh:
-        for r in rows:
-            fh.write(json.dumps(r) + "\n")
-    schema = "tenant_id string, timestamp long, value double, labels_json string"
-    return spark.readStream.schema(schema).json(in_dir)
-
-
-@pytest.mark.slow
-def test_stateful_batcher_size_and_delay_triggers(spark, tmp_path):
-    """D1 dual trigger: full batches flush on size; the under-size remainder
-    flushes on delay. availableNow keeps running micro-batches until pending
-    processing-time timers fire, so both paths complete in one run."""
-    rows = [
-        {"tenant_id": "a", "timestamp": i, "value": float(i), "labels_json": "{}"}
-        for i in range(250)
-    ] + [
-        {"tenant_id": "b", "timestamp": i, "value": float(i), "labels_json": "{}"}
-        for i in range(30)
-    ]
-    stream = _samples_stream(spark, tmp_path, rows)
-    batched = stateful_batches(stream, batch_size=100, max_delay_ms=3_000)
-    q = (
-        batched.writeStream.format("memory")
-        .queryName("batcher_size")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    out = spark.sql("SELECT * FROM batcher_size").collect()
-    by_tenant = {}
-    for r in out:
-        by_tenant.setdefault(r["tenant_id"], []).append(r)
-    a_rows = by_tenant.get("a", [])
-    assert len(a_rows) == 250
-    reasons = {r["batch_seq"]: r["flush_reason"] for r in a_rows}
-    assert reasons == {0: "size", 1: "size", 2: "delay"}
-    sizes = {}
-    for r in a_rows:
-        sizes[r["batch_seq"]] = sizes.get(r["batch_seq"], 0) + 1
-    assert sizes == {0: 100, 1: 100, 2: 50}
-    # batches preserve arrival order per tenant
-    seq0 = sorted(r["timestamp"] for r in a_rows if r["batch_seq"] == 0)
-    assert seq0 == list(range(100))
-    # tenant b never reached batch_size: one delay flush with all 30
-    b_rows = by_tenant.get("b", [])
-    assert len(b_rows) == 30
-    assert all(r["flush_reason"] == "delay" and r["batch_seq"] == 0 for r in b_rows)
-
-
-def test_stateful_batcher_delay_trigger(spark, tmp_path):
-    """D1 delay trigger: an under-size buffer flushes after max_delay."""
-    rows = [
-        {"tenant_id": "a", "timestamp": i, "value": float(i), "labels_json": "{}"}
-        for i in range(30)
-    ]
-    stream = _samples_stream(spark, tmp_path, rows)
-    batched = stateful_batches(stream, batch_size=100, max_delay_ms=2_000)
-    q = (
-        batched.writeStream.format("memory")
-        .queryName("batcher_delay")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="500 milliseconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        out = []
-        while time.time() < deadline:
-            out = spark.sql("SELECT * FROM batcher_delay").collect()
-            if out:
-                break
-            time.sleep(1)
-        assert len(out) == 30
-        assert all(r["flush_reason"] == "delay" for r in out)
-        assert {r["batch_seq"] for r in out} == {0}
-    finally:
-        q.stop()
-
-
 def _run_to_memory(df, name, tmp_path):
     q = (
         df.writeStream.format("memory")
@@ -661,104 +574,6 @@ def test_streaming_session_windows(spark, tmp_path):
         assert b_rows[k] == v
 
 
-# --- batcher deadline semantics (fake state; no streaming machinery) ---------
-
-
-class _FakeState:
-    """Just enough of GroupState for _make_batch_fn: injectable clock."""
-
-    def __init__(self, now_ms: int = 0):
-        self.exists = False
-        self._val = None
-        self.hasTimedOut = False
-        self.now_ms = now_ms
-        self.timeout_set = None
-
-    @property
-    def get(self):
-        return self._val
-
-    def update(self, v):
-        self._val = tuple(v)
-        self.exists = True
-
-    def remove(self):
-        self._val = None
-        self.exists = False
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_set = ms
-
-    def getCurrentProcessingTimeMs(self):
-        return self.now_ms
-
-
-def _feed(fn, state, n, t0=0):
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        {
-            "timestamp": [t0 + i for i in range(n)],
-            "value": [float(i) for i in range(n)],
-            "labels_json": ["{}"] * n,
-        }
-    )
-    return pd.concat(list(fn(("team-a",), iter([pdf]), state)), ignore_index=True)
-
-
-def test_batcher_trickle_does_not_postpone_deadline():
-    """Reference fixes the flush deadline when the buffer is first created
-    (write.go deadlinePerTenantID); a steady sub-batch-size trickle must not
-    re-arm the full delay on every arrival."""
-    from prometheus_pulsar_remote_write_spark.streaming.batcher import _make_batch_fn
-
-    fn = _make_batch_fn(batch_size=100, max_delay_ms=5000)
-    state = _FakeState(now_ms=0)
-    _feed(fn, state, 1)
-    assert state.timeout_set == 5000  # first sample: full delay
-
-    state.now_ms = 3000
-    _feed(fn, state, 1)
-    assert state.timeout_set == 2000  # NOT re-armed to 5000
-
-    state.now_ms = 4900
-    _feed(fn, state, 1)
-    assert state.timeout_set == 100
-
-    # past-due deadline still arms a positive (immediate) timeout
-    state.now_ms = 6000
-    _feed(fn, state, 1)
-    assert state.timeout_set == 1
-
-
-def test_batcher_seq_survives_delay_flush():
-    """state.remove() after a delay flush would restart batch_seq at 0; the
-    seq must keep increasing across buffer lifetimes."""
-    import pandas as pd
-
-    from prometheus_pulsar_remote_write_spark.streaming.batcher import _make_batch_fn
-
-    fn = _make_batch_fn(batch_size=10, max_delay_ms=5000)
-    state = _FakeState(now_ms=0)
-    _feed(fn, state, 3)
-
-    state.hasTimedOut = True
-    out = pd.concat(list(fn(("team-a",), iter([]), state)), ignore_index=True)
-    assert list(out["batch_seq"].unique()) == [0]
-    assert set(out["flush_reason"]) == {"delay"}
-    assert state.exists  # kept, not removed
-
-    state.hasTimedOut = False
-    state.now_ms = 10_000
-    out2 = _feed(fn, state, 10)
-    assert list(out2["batch_seq"].unique()) == [1]  # continues, not reset
-    assert state.timeout_set is not None  # empty buffer after size flush
-    # new buffer lifetime: deadline re-initialized from now
-    _, _, _, next_seq, deadline = state.get
-    assert next_seq == 2
-    assert deadline is None  # size flush emptied the buffer
-
-
 def test_sink_replay_skips_settled_batches(spark, tmp_path):
     """D5 replay must not re-POST tenant batches that already got a 2xx in a
     failed attempt of the same epoch (reference write.go:208-236 keeps only
@@ -909,8 +724,11 @@ def test_distributed_post_bodies_match_reference_chain(spark, tmp_path, batch_si
     """The grouped pass POSTs exactly the bytes of the reference chain:
     a row_number window over (timestamp, labels_json) per tenant, labels
     re-nested through from_json and sorted by name, encoded per batch.
-    Series share timestamps, and label values hold non-ASCII and
-    JSON-escaped characters."""
+    Series share timestamps, and label values hold non-ASCII, JSON-escaped
+    and control characters (Spark writes a control character's escape in
+    uppercase hex, json.dumps in lowercase). The pass gives the same bodies
+    from the raw messages, which it parses itself, and from the parsed
+    frame the traced benchmark probe hands it."""
     from prometheus_pulsar_remote_write_spark.operators.flatten import nest_samples
     from prometheus_pulsar_remote_write_spark.streaming.batcher import (
         microbatch_batches,
@@ -920,9 +738,12 @@ def test_distributed_post_bodies_match_reference_chain(spark, tmp_path, batch_si
         post_batches_distributed,
     )
 
-    odd_values = ["plain", "zürich", "東京", 'quo"te', "back\\slash", "new\nline"]
+    odd_values = [
+        "plain", "zürich", "東京", 'quo"te', "back\\slash", "new\nline",
+        "ctl\x1f", "ctl\x01", "ctl\x1a", "back\\u001f",
+    ]
     msgs = []
-    for tenant, n_series in (("team-a", 6), ("team-b", 2), ("", 1)):
+    for tenant, n_series in (("team-a", len(odd_values)), ("team-b", 2), ("", 1)):
         for s_i in range(n_series):
             labels = {
                 "__name__": "up",
@@ -944,13 +765,14 @@ def test_distributed_post_bodies_match_reference_chain(spark, tmp_path, batch_si
     )
     expected = sorted(prompb.encode_body(r.timeseries) for r in nested.collect())
 
-    post_dir = str(tmp_path / "posts")
-    statuses = post_batches_distributed(
-        parsed, "http://sink", post_fn=_recording_post(post_dir), batch_size=batch_size
-    )
-    assert sum(s[3] for s in statuses) == len(msgs)
-    assert len(statuses) == len(expected)
-    assert sorted(_posted_bodies(post_dir)) == expected
+    for name, frame in (("raw", messages), ("parsed", parsed)):
+        post_dir = str(tmp_path / f"posts-{name}")
+        statuses = post_batches_distributed(
+            frame, "http://sink", post_fn=_recording_post(post_dir), batch_size=batch_size
+        )
+        assert sum(s[3] for s in statuses) == len(msgs), name
+        assert len(statuses) == len(expected), name
+        assert sorted(_posted_bodies(post_dir)) == expected, name
 
 
 def test_consume_delivers_nan_sample(spark, tmp_path):
@@ -1011,6 +833,72 @@ def test_consume_poison_written_once_across_replay(spark, tmp_path):
             with open(path) as fh:
                 lines += [json.loads(line) for line in fh if line.strip()]
     assert lines == [{"payload": "this is not json {"}]
+
+
+@pytest.mark.parametrize("dedup_within", [None, "10 minutes"])
+def test_consume_parks_mistyped_payloads_as_poison(spark, tmp_path, dedup_within):
+    """A payload that parses as JSON but cannot be a sample -- a numeric
+    tenant_id, a numeric label value, a timestamp past int64, a repeated
+    tenant_id key (the shuffle reads the first, json.loads keeps the last)
+    -- is poison like unparseable JSON: it is parked and the tenant's good
+    samples are delivered, and the query finishes, with or without the
+    dedup stage's upstream parse."""
+    in_dir = str(tmp_path / "in")
+    good = marshal_json(1000, 1.0, {"__name__": "up"}, "team-a")
+    bad = [
+        '{"value":[1,"2"],"metric":{"__name__":"up"},"tenant_id":7}',
+        '{"value":[1,"2"],"metric":{"__name__":"up","n":3},"tenant_id":"team-a"}',
+        '{"value":[1e300,"2"],"metric":{"__name__":"up"},"tenant_id":"team-a"}',
+        '{"value":[1,"2"],"metric":{"__name__":"up"},"tenant_id":"team-a","tenant_id":"x"}',
+    ]
+    _write_messages(in_dir, [(good, "team-a")] + [(p, "team-a") for p in bad])
+    post_dir = str(tmp_path / "posts")
+    poison_dir = str(tmp_path / "poison")
+    sink = RemoteWriteSink(
+        url="http://sink", dlq_dir=str(tmp_path / "dlq"), post_fn=_recording_post(post_dir)
+    )
+    q = run_consume_pipeline(spark, in_dir, sink, poison_dir, dedup_within=dedup_within)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sink.sent == {"team-a": 1}
+    (body,) = _posted_bodies(post_dir)
+    (series,) = prompb.decode_body(body)["timeseries"]
+    assert series["samples"] == [{"value": 1.0, "timestamp": 1000}]
+    lines = []
+    for name in os.listdir(poison_dir):
+        if name.startswith("epoch="):
+            with open(os.path.join(poison_dir, name)) as fh:
+                lines += [json.loads(line)["payload"] for line in fh]
+    assert sorted(lines) == sorted(bad)
+
+
+def test_app_continuous_consume_triggers_every_second(spark, tmp_path):
+    """Continuous consume runs on the 1 s cadence produce polls at, read
+    from the started query's trigger: the batch max delay (5 s by default)
+    is an upper bound on it, not the interval."""
+    from prometheus_pulsar_remote_write_spark.app import parse_args, run
+
+    bus = str(tmp_path / "bus")
+    os.makedirs(bus, exist_ok=True)
+    for extra, interval_ms in (([], 1000), (["--batch-max-delay=250ms"], 250)):
+        cfg = parse_args(
+            [
+                "consume",
+                f"--pulsar.topic={bus}",
+                "--remote-write.url=http://downstream/api/v1/push",
+                "--continuous=true",
+                f"--work-dir={tmp_path / 'work'}",
+            ]
+            + extra
+        )
+        cfg.post_fn = lambda u, b, h: 200
+        q, _ = run(spark, cfg)
+        try:
+            trigger = q._jsq.streamingQuery().trigger()
+            assert trigger.getClass().getSimpleName() == "ProcessingTimeTrigger"
+            assert trigger.intervalMs() == interval_ms
+        finally:
+            q.stop()
 
 
 def test_streaming_rate_matches_batch(spark, tmp_path):
