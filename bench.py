@@ -57,12 +57,13 @@ HEADLINE = [
 #: top item): one warmup + min-of-N with the same N everywhere, so no
 #: per-query methodology can flatter any row round-over-round. N=6 was
 #: already validated for the deepest-warming queries (the r14 drift A/B,
-#: scripts/drift_ab_r14.py / SCALE.md §12: the wire queries' JIT keeps
-#: warming ~6 runs deep and min-of-6 lands within ~5% of the 12-run
-#: floor), and the r14 driver run showed best-of-2 is not noise-robust
-#: on a contended host (noise_ratio 1.328 got recorded as ground truth:
-#: 19 plan-identical queries "regressed" 30-60%). min-of-6 gives every
-#: query six chances to land a clean run between contention bursts.
+#: `git show 758e961:scripts/drift_ab_r14.py` / SCALE.md §12: the wire
+#: queries' JIT keeps warming ~6 runs deep and min-of-6 lands within
+#: ~5% of the 12-run floor), and the r14 driver run showed best-of-2
+#: is not noise-robust on a contended host (noise_ratio 1.328 got
+#: recorded as ground truth: 19 plan-identical queries "regressed"
+#: 30-60%). min-of-6 gives every query six chances to land a clean run
+#: between contention bursts.
 #: The r14 per-query values remain comparable: min over MORE runs of
 #: the same plan can only be <= the old statistic, and the two queries
 #: that were already min-of-6 are measured identically.

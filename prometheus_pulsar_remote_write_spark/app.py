@@ -346,7 +346,6 @@ def run(spark: SparkSession, cfg: AppConfig):
         )
         return query, listener
 
-    from .operators.metrics import DeliveryMetrics
     from .streaming import TRIGGER_INTERVAL_MS
     from .streaming.consume import RemoteWriteSink, run_consume_pipeline
 
@@ -356,7 +355,6 @@ def run(spark: SparkSession, cfg: AppConfig):
         post_fn=cfg.post_fn,
         batch_size=cfg.batch_size,
         send_timeout_s=cfg.send_timeout_s,
-        metrics=DeliveryMetrics(),
     )
     query = run_consume_pipeline(
         spark,

@@ -7,8 +7,9 @@ histogram. The Spark-native mapping:
   - per-batch dataflow counts ride the query itself via ``observe()``
     (no extra action, no second scan): ``Observation`` for batch jobs,
     ``StreamingQueryListener`` + named observations for streams;
-  - per-tenant delivery counters live in the sink (RemoteWriteSink.sent /
-    .failed -- D2/D6 bookkeeping), aggregated here into snapshots;
+  - per-tenant delivery counters are a DeliveryMetrics, the consume
+    sink's ``RemoteWriteSink.metrics`` (D2/D6 bookkeeping), read as
+    snapshots or a Prometheus exposition;
   - send-duration histogram: fixed buckets accumulated in the sink
     (driver-side, one value per HTTP POST -- bounded cardinality).
 

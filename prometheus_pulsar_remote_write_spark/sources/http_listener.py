@@ -65,22 +65,21 @@ def max_connection_age_headers(
     return []
 
 # Tenant names become one path component under the spool, so the charset is
-# restricted the same way Cortex/Mimir restrict tenant IDs: a bare token, no
-# separators, never "." or "..".  Anything else is a 400 (never a silent
-# rewrite -- a client must not discover that "../../x" mapped somewhere).
+# restricted the same way Cortex/Mimir restrict tenant IDs: a bare token with
+# no separators.  It may not start with "_" or "." either: Spark's file
+# listing hides such a directory, so its bodies would be acknowledged and
+# never published (this also rules out "." and "..").  Anything else is a
+# 400 (never a silent rewrite -- a client must not discover that "../../x"
+# mapped somewhere).
 # \Z, not $: Python's $ also matches just before a trailing newline, so
 # "$" would accept "abc\n" and create a spool dir with an embedded \n
 # (Hypothesis-found; pinned in test_properties.py).
-_TENANT_RE = re.compile(r"[A-Za-z0-9_.\-]{1,128}\Z")
+_TENANT_RE = re.compile(r"[A-Za-z0-9\-][A-Za-z0-9_.\-]{0,127}\Z")
 
 
 def tenant_is_safe(tenant: str) -> bool:
     """True iff ``tenant`` is safe to use as a single spool path component."""
-    if not _TENANT_RE.fullmatch(tenant):
-        return False
-    if tenant in (".", ".."):
-        return False
-    return True
+    return _TENANT_RE.fullmatch(tenant) is not None
 
 
 def _tenant_from_headers(headers) -> str:

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.serializers import deserialize, resolve_unmarshaler
+from ..operators.metrics import DeliveryMetrics
 from ..sources import prompb
 from . import TRIGGER_INTERVAL_MS
 from .batcher import DEFAULT_BATCH_SIZE
@@ -82,6 +83,17 @@ def parse_samples(messages: DataFrame, fmt: str = "json") -> DataFrame:
     return parsed.withColumn("labels_json", F.to_json(F.col("labels")))
 
 
+def _replace_file(path: str, text: str) -> None:
+    """Replace ``path`` whole: write a dot-named sibling (hidden from
+    Spark's file listing), then rename it over ``path``."""
+    folder, name = os.path.split(path)
+    os.makedirs(folder, exist_ok=True)
+    tmp = os.path.join(folder, "." + name)
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(text)
+    os.replace(tmp, path)
+
+
 @dataclass
 class RemoteWriteSink:
     """A4 + D2/D5/D6: per-tenant POST with retry/DLQ semantics.
@@ -95,6 +107,12 @@ class RemoteWriteSink:
     and only small status rows return to the driver -- the shape that
     survives 1000 executors. ``post_fn`` must be picklable (cloudpickle
     ships lambdas/closures fine; closure *mutations* stay on the executor).
+
+    ``metrics`` holds the delivery counters (received/sent/failed samples
+    per tenant, retries, POST durations). The replay ledger is one file
+    per streaming query, ``<dlq_dir>/_sent_ledger/<query id>.json``,
+    holding the (tenant, batch_seq) pairs the query's latest epoch
+    settled.
     """
 
     url: str
@@ -103,35 +121,7 @@ class RemoteWriteSink:
     batch_size: int = 100
     send_timeout_s: float = 30.0  # reference --send-timeout (consume.go:40-41)
     user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0"
-    sent: dict = field(default_factory=dict)   # tenant -> samples sent
-    failed: dict = field(default_factory=dict)  # tenant -> samples dropped
-    metrics: object = None  # optional operators.metrics.DeliveryMetrics
-    ledger_dir: str | None = None  # settled-batch markers; default under dlq_dir
-
-    def _ledger(self) -> str:
-        return self.ledger_dir or os.path.join(self.dlq_dir, "_sent_ledger")
-
-    def _settle(self, epoch_id: int, tenant_id: str, batch_seq) -> None:
-        os.makedirs(self._ledger(), exist_ok=True)
-        name = f"epoch={epoch_id}-tenant={tenant_id or '_none'}-batch={batch_seq}"
-        with open(os.path.join(self._ledger(), name), "w"):
-            pass
-
-    def _settled_pairs(self, epoch_id: int) -> set:
-        """(tenant_id, batch_seq) pairs already 2xx'd or DLQ'd in a prior
-        attempt of this epoch (marker files written by ``_settle``)."""
-        ledger = self._ledger()
-        if not os.path.isdir(ledger):
-            return set()
-        prefix = f"epoch={epoch_id}-tenant="
-        out = set()
-        for name in os.listdir(ledger):
-            if not name.startswith(prefix):
-                continue
-            rest, _, seq = name[len(prefix):].rpartition("-batch=")
-            tenant = "" if rest == "_none" else rest
-            out.add((tenant, int(seq)))
-        return out
+    metrics: DeliveryMetrics = field(default_factory=DeliveryMetrics)
 
     def _dlq_write(self, epoch_id: int, tenant_id: str, batch_seq, body: bytes) -> None:
         os.makedirs(self.dlq_dir, exist_ok=True)
@@ -142,13 +132,11 @@ class RemoteWriteSink:
     def _poison_write(self, poison_dir: str, epoch_id: int, payloads: list) -> None:
         """B9: one ``{"payload": ...}`` line per poison message, in one file
         per epoch that a replay replaces whole."""
-        os.makedirs(poison_dir, exist_ok=True)
-        tmp = os.path.join(poison_dir, f".epoch={epoch_id}.json")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            for p in payloads:
-                payload = None if p is None else p.decode()
-                fh.write(json.dumps({"payload": payload}) + "\n")
-        os.replace(tmp, os.path.join(poison_dir, f"epoch={epoch_id}.json"))
+        lines = (
+            json.dumps({"payload": None if p is None else p.decode()}) + "\n"
+            for p in payloads
+        )
+        _replace_file(os.path.join(poison_dir, f"epoch={epoch_id}.json"), "".join(lines))
 
     def __call__(
         self, batch_df: DataFrame, epoch_id: int, poison_dir: str, fmt: str = "json"
@@ -161,9 +149,24 @@ class RemoteWriteSink:
         attempt) must not re-POST batches that already got a 2xx or were
         DLQ'd: the reference only retains un-acked samples
         (write.go:208-236). batch_seq is deterministic per epoch (a sort
-        within each tenant), so the pass skips settled batches; poison
-        (to ``poison_dir``), successes and DLQs all settle before any
-        RecoverableError raises."""
+        within each tenant), so the pass skips the pairs this query's
+        ledger file settled, and only when the file's epoch is this one:
+        Spark commits epoch N before it starts N+1. Poison (to
+        ``poison_dir``) is written first; then the ledger file is replaced
+        once with every pair settled so far, successes and DLQs alike,
+        before any RecoverableError raises."""
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+        if query_id is None:
+            raise ValueError("RemoteWriteSink must run inside a streaming query")
+        ledger = os.path.join(self.dlq_dir, "_sent_ledger", f"{query_id}.json")
+        settled = set()
+        if os.path.exists(ledger):
+            with open(ledger, encoding="utf-8") as fh:
+                prior = json.load(fh)
+            if prior["epoch"] == epoch_id:
+                settled = {(t, b) for t, b in prior["settled"]}
         statuses = post_batches_distributed(
             batch_df,
             self.url,
@@ -172,7 +175,7 @@ class RemoteWriteSink:
             post_fn=self.post_fn,
             send_timeout_s=self.send_timeout_s,
             batch_size=self.batch_size,
-            settled=self._settled_pairs(epoch_id),
+            settled=settled,
         )
         poison = [s[5] for s in statuses if s[1] == POISON_SEQ]
         if poison:  # B9: log+ack+skip => park the payloads, keep going
@@ -181,26 +184,21 @@ class RemoteWriteSink:
         for tenant_id, batch_seq, status, n, elapsed, body in statuses:
             if batch_seq == POISON_SEQ:
                 continue
-            if self.metrics is not None:
-                self.metrics.count_received(tenant_id, n)
-                self.metrics.observe_duration(elapsed, tenant_id)
+            self.metrics.count_received(tenant_id, n)
+            self.metrics.observe_duration(elapsed, tenant_id)
             if status >= 500:  # D5 (599 = transport error)
                 recoverable.append((tenant_id, batch_seq, status))
                 continue
             if status >= 400:  # D6: the rejected body itself goes to the DLQ
                 self._dlq_write(epoch_id, tenant_id, batch_seq, body)
-                self.failed[tenant_id] = self.failed.get(tenant_id, 0) + n
-                if self.metrics is not None:
-                    self.metrics.count_failed(tenant_id, n)
+                self.metrics.count_failed(tenant_id, n)
             else:
-                self.sent[tenant_id] = self.sent.get(tenant_id, 0) + n
-                if self.metrics is not None:
-                    self.metrics.count_sent(tenant_id, n)
-            self._settle(epoch_id, tenant_id, batch_seq)
+                self.metrics.count_sent(tenant_id, n)
+            settled.add((tenant_id, batch_seq))
+        _replace_file(ledger, json.dumps({"epoch": epoch_id, "settled": sorted(settled)}))
         if recoverable:
             t, b, code = recoverable[0]
-            if self.metrics is not None:
-                self.metrics.count_retry(t)
+            self.metrics.count_retry(t)
             raise RecoverableError(f"HTTP {code} for tenant {t!r} batch {b}")
 
 

@@ -133,18 +133,9 @@ def main() -> None:
     print("  " + produced.select("payload").first()["payload"][:120])
 
     # --- consume ------------------------------------------------------------
-    from prometheus_pulsar_remote_write_spark.operators.metrics import DeliveryMetrics
-
     downstream = _Downstream()
-    metrics = DeliveryMetrics()
     # post_fn=None -> the REAL urllib POST path, executed on the executors
-    sink = RemoteWriteSink(
-        url=downstream.url,
-        dlq_dir=dlq,
-        post_fn=None,
-        batch_size=50,
-        metrics=metrics,
-    )
+    sink = RemoteWriteSink(url=downstream.url, dlq_dir=dlq, post_fn=None, batch_size=50)
     run_consume_pipeline(
         spark, os.path.join(bus, "epoch=0"), sink, poison
     ).awaitTermination(120)

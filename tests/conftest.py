@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import logging
 import os
 import sys
 
@@ -60,6 +61,19 @@ def _resolve_testdata_root() -> str:
 _TESTDATA_ROOT = _resolve_testdata_root()
 SF_SMOKE = os.path.join(_TESTDATA_ROOT, "sf0.001")
 SF_CORRECTNESS = os.path.join(_TESTDATA_ROOT, "sf0.01")
+
+
+@pytest.fixture(autouse=True)
+def _restore_package_logger():
+    """``app.apply_logging`` gives the package logger its own handler and
+    turns ``propagate`` off, which would hide later tests' records from
+    pytest's log capture: put the logger back as each test found it."""
+    logger = logging.getLogger("prometheus_pulsar_remote_write_spark")
+    handlers, level, propagate = list(logger.handlers), logger.level, logger.propagate
+    yield
+    logger.handlers[:] = handlers
+    logger.setLevel(level)  # setLevel, not .level: it clears the level cache
+    logger.propagate = propagate
 
 
 @pytest.fixture(scope="session")

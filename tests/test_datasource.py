@@ -168,7 +168,8 @@ def test_http_listener_rejects_traversal_tenants(tmp_path):
     )
 
     assert tenant_is_safe("tenant-a") and tenant_is_safe("T_1.x")
-    for bad in ("../../x", "a/b", "a\\b", "..", ".", "/abs", "", "x" * 129):
+    bad_tenants = ("../../x", "a/b", "a\\b", "..", ".", "/abs", "", "x" * 129, "_foo", ".bar")
+    for bad in bad_tenants:
         assert not tenant_is_safe(bad)
 
     spool = tmp_path / "nested" / "spool"
@@ -199,6 +200,8 @@ def test_http_listener_rejects_traversal_tenants(tmp_path):
 
     assert post({"X-Scope-OrgID": "../escaped"}) == 400
     assert post({"X-Scope-OrgID": "/tmp/escaped"}) == 400
+    # a name Spark's file listing hides would be acked and never published
+    assert post({"X-Scope-OrgID": "_foo"}) == 400
     assert (
         post(
             {"Authorization": "Basic " + base64.b64encode(b"../escaped:pw").decode()}
@@ -209,8 +212,8 @@ def test_http_listener_rejects_traversal_tenants(tmp_path):
     listener.stop()
 
     assert not outside.exists()
-    assert listener.rejected == 3 and listener.accepted == 1
-    assert (spool / "tenant-ok").is_dir()
+    assert listener.rejected == 4 and listener.accepted == 1
+    assert [p.name for p in spool.iterdir()] == ["tenant-ok"]
 
 
 def test_http_listener_ops_endpoints(tmp_path):

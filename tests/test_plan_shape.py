@@ -158,7 +158,7 @@ def test_consume_delivery_is_one_grouped_pass(spark, tmp_path):
     q = run_consume_pipeline(spark, str(in_dir), sink, str(tmp_path / "poison"))
     q.awaitTermination(120)
     assert q.exception() is None
-    assert real.sent == {"a": 5, "b": 5}
+    assert real.metrics.sent == {"a": 5, "b": 5}
     # the micro-batch plan up to the sink: foreachBatch hands the sink a
     # scan over it, so its Python execs do not show in the action's plan
     upstream = q._jsq.streamingQuery().lastExecution().executedPlan().toString()

@@ -72,6 +72,8 @@ def test_tenant_sanitizer_never_escapes_spool(tenant):
         target = os.path.normpath(os.path.join(spool, tenant))
         assert target.startswith(spool + os.sep) and os.sep not in tenant
         assert "\x00" not in tenant and "\n" not in tenant
+        # Spark's file listing hides a spool dir named _x or .x
+        assert not tenant.startswith(("_", "."))
     # everything rejected is simply rejected -- nothing to assert beyond
     # the accepted side staying inside the spool
 

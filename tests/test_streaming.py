@@ -317,8 +317,8 @@ def test_consume_pipeline_delivers_batches(spark, tmp_path):
     q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"))
     q.awaitTermination(120)
 
-    assert sum(sink.sent.values()) == n_good
-    assert sink.sent == {"team-a": 7, "": 3}
+    assert sum(sink.metrics.sent.values()) == n_good
+    assert sink.metrics.sent == {"team-a": 7, "": 3}
     # team-a: 7 samples at batch_size=4 -> 2 requests; "": 1 request
     posted = []
     for name in os.listdir(post_dir):
@@ -359,8 +359,8 @@ def test_consume_unrecoverable_goes_to_dlq(spark, tmp_path):
     q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"))
     q.awaitTermination(120)  # D6: ack-and-drop -- the query completes
 
-    assert sum(sink.failed.values()) == n_good
-    assert not sink.sent
+    assert sum(sink.metrics.failed.values()) == n_good
+    assert not sink.metrics.sent
     names = [f for f in os.listdir(dlq) if f.endswith(".bin")]
     assert len(names) == 2  # one body per tenant
 
@@ -407,7 +407,7 @@ def test_consume_recoverable_replays_batch(spark, tmp_path):
         if q.exception() is not None:
             raise q.exception()
     assert "RecoverableError" in str(exc_info.value) or "503" in str(exc_info.value)
-    assert not bad.sent
+    assert not bad.metrics.sent
 
     good = RemoteWriteSink(
         url="http://sink", dlq_dir=str(tmp_path / "dlq"), post_fn=lambda u, b, h: 200
@@ -416,7 +416,7 @@ def test_consume_recoverable_replays_batch(spark, tmp_path):
         spark, in_dir, good, str(tmp_path / "poison"), checkpoint_dir=checkpoint
     )
     q2.awaitTermination(120)
-    assert sum(good.sent.values()) == n_good
+    assert sum(good.metrics.sent.values()) == n_good
 
 
 def _run_to_memory(df, name, tmp_path):
@@ -614,10 +614,110 @@ def test_sink_replay_skips_settled_batches(spark, tmp_path):
 
     # replay delivered ONLY the unsettled team-a batch; the settled ""
     # batch was not re-POSTed (no duplicate delivery)
-    assert ok.sent == {"team-a": 7}
-    assert sink.sent == {"": 3}
+    assert ok.metrics.sent == {"team-a": 7}
+    assert sink.metrics.sent == {"": 3}
     none_calls = [f for f in os.listdir(calls_dir) if f.startswith("_none-")]
     assert len(none_calls) == 1  # exactly one POST for the settled tenant
+
+
+def test_sink_replay_keeps_tenant_none_apart_from_anonymous(spark, tmp_path):
+    """A tenant literally named "_none" and the anonymous tenant "" settle
+    as two ledger pairs: when "_none" gets a 200 and "" a 503, the replay
+    POSTs exactly the "" batch and does not re-POST "_none"."""
+    in_dir = str(tmp_path / "in")
+    msgs = [(marshal_json(1000 + i, 1.0, {"__name__": "up"}, "_none"), "_none") for i in range(2)]
+    msgs += [(marshal_json(2000 + i, 2.0, {"__name__": "up"}, ""), "") for i in range(3)]
+    _write_messages(in_dir, msgs)
+    checkpoint = str(tmp_path / "ckpt")
+    dlq = str(tmp_path / "dlq")
+    calls_dir = str(tmp_path / "calls")
+
+    def post(status_for_anonymous):
+        def post_fn(url, body, headers):
+            import os as _os
+            import uuid as _uuid
+
+            org = headers.get("X-Scope-OrgID", "")
+            _os.makedirs(calls_dir, exist_ok=True)
+            with open(_os.path.join(calls_dir, f"[{org}]-{_uuid.uuid4().hex}"), "w"):
+                pass
+            return status_for_anonymous if org == "" else 200
+
+        return post_fn
+
+    first = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=post(503))
+    q = run_consume_pipeline(spark, in_dir, first, str(tmp_path / "poison"), checkpoint_dir=checkpoint)
+    with pytest.raises(Exception):
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise q.exception()
+    replay = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=post(200))
+    q2 = run_consume_pipeline(spark, in_dir, replay, str(tmp_path / "poison"), checkpoint_dir=checkpoint)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+
+    assert first.metrics.sent == {"_none": 2}
+    assert replay.metrics.sent == {"": 3}
+    calls = sorted(name.split("-", 1)[0] for name in os.listdir(calls_dir))
+    assert calls == ["[]", "[]", "[_none]"]
+
+
+def test_sink_ledger_is_one_file_per_query_holding_its_last_epoch(spark, tmp_path):
+    """Three epochs of one query leave one ledger file, named by the
+    query id, holding only the last epoch's settled pairs."""
+    in_dir = str(tmp_path / "in")
+    for epoch, tenant in enumerate(("t-a", "t-b", "t-c")):
+        _write_messages(
+            os.path.join(in_dir, f"f{epoch}"),
+            [(marshal_json(1000, 1.0, {"__name__": "up"}, tenant), tenant)],
+        )
+    source = (
+        spark.readStream.schema("key string, payload string, tenant_id string")
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .json(in_dir)
+    )
+    dlq = str(tmp_path / "dlq")
+    sink = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=lambda u, b, h: 200)
+    q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"), source=source)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sink.metrics.sent == {"t-a": 1, "t-b": 1, "t-c": 1}
+
+    ledger_dir = os.path.join(dlq, "_sent_ledger")
+    assert os.listdir(ledger_dir) == [f"{q.id}.json"]
+    with open(os.path.join(ledger_dir, f"{q.id}.json")) as fh:
+        ledger = json.load(fh)
+    assert ledger["epoch"] == q.lastProgress["batchId"] == 2
+    assert len(ledger["settled"]) == 1 and ledger["settled"][0][1] == 0
+
+
+def test_app_consume_subscriptions_share_a_work_dir(spark, tmp_path):
+    """Two consume subscriptions on one bus and one work dir are two
+    queries with two ledgers: the second delivers every sample even though
+    its epoch 0 is also the first's."""
+    from prometheus_pulsar_remote_write_spark.app import parse_args, run
+
+    bus = str(tmp_path / "bus")
+    _write_messages(
+        bus,
+        [(marshal_json(1000 + i, 1.0, {"__name__": "up"}, "team-a"), "team-a") for i in range(5)],
+    )
+    for subscription in ("sub-a", "sub-b"):
+        cfg = parse_args(
+            [
+                "consume",
+                f"--pulsar.topic={bus}",
+                "--remote-write.url=http://downstream/api/v1/push",
+                f"--pulsar.subscription={subscription}",
+                f"--work-dir={tmp_path / 'work'}",
+            ]
+        )
+        cfg.post_fn = lambda u, b, h: 200
+        q, sink = run(spark, cfg)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        assert sink.metrics.sent == {"team-a": 5}, subscription
 
 
 # --- executor-side delivery (post_batches_distributed) -----------------------
@@ -796,7 +896,7 @@ def test_consume_delivers_nan_sample(spark, tmp_path):
     q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"))
     q.awaitTermination(120)
     assert q.exception() is None
-    assert sink.sent == {"team-a": 2}
+    assert sink.metrics.sent == {"team-a": 2}
     (body,) = _posted_bodies(post_dir)
     samples = [s for ts in prompb.decode_body(body)["timeseries"] for s in ts["samples"]]
     assert [s["timestamp"] for s in samples] == [1000, 2000]
@@ -824,7 +924,7 @@ def test_consume_poison_written_once_across_replay(spark, tmp_path):
     q2 = run_consume_pipeline(spark, in_dir, good, poison_dir, checkpoint_dir=checkpoint)
     q2.awaitTermination(120)
     assert q2.exception() is None
-    assert sum(good.sent.values()) == n_good
+    assert sum(good.metrics.sent.values()) == n_good
 
     lines = []
     for name in os.listdir(poison_dir):
@@ -860,7 +960,7 @@ def test_consume_parks_mistyped_payloads_as_poison(spark, tmp_path, dedup_within
     q = run_consume_pipeline(spark, in_dir, sink, poison_dir, dedup_within=dedup_within)
     q.awaitTermination(120)
     assert q.exception() is None
-    assert sink.sent == {"team-a": 1}
+    assert sink.metrics.sent == {"team-a": 1}
     (body,) = _posted_bodies(post_dir)
     (series,) = prompb.decode_body(body)["timeseries"]
     assert series["samples"] == [{"value": 1.0, "timestamp": 1000}]
@@ -1066,8 +1166,8 @@ def test_app_config_entry_end_to_end(spark, drop_dir, tmp_path):
     q2, sink = run(spark, consume_cfg)
     q2.awaitTermination(120)
 
-    assert sum(sink.sent.values()) == n_samples
-    assert sink.sent == {"tenant-a": 3, "": 1}
+    assert sum(sink.metrics.sent.values()) == n_samples
+    assert sink.metrics.sent == {"tenant-a": 3, "": 1}
     assert sink.metrics.duration_count == 2  # one POST per tenant batch
     assert len(os.listdir(post_dir)) == 2
 
@@ -2944,9 +3044,9 @@ def test_consume_dedup_within_watermark_makes_delivery_effectively_once(
                 fh.write(body)
             return 200
 
-        # dlq (and its settled-batch ledger) is per-LEG: the ledger
-        # dedupes (epoch, tenant, batch) within one checkpoint lineage,
-        # and the two legs intentionally reuse the same epoch ids
+        # each leg keeps its own dlq dir for tidiness only: the replay
+        # ledger is one file per streaming query, so legs on separate
+        # checkpoints never share settled (epoch, tenant, batch) pairs
         sink = RemoteWriteSink(
             url="http://sink",
             dlq_dir=in_dir + "-dlq",
@@ -3233,4 +3333,4 @@ def test_app_consume_dedup_within_flag(spark, tmp_path):
         for op in p.get("stateOperators", [])
     ]
     assert any("dedupe" in o.lower() for o in ops), ops
-    assert sum(sink.sent.values()) == 3
+    assert sum(sink.metrics.sent.values()) == 3
