@@ -10,11 +10,11 @@ large-scale training-data operators (dedup, similarity search, multimodal
 columns, text analysis) that a 100 TB pipeline needs.
 
 Layout:
-    schema        -- canonical Spark schemas (sample, write_request)
+    schema        -- canonical Spark schemas (write_request)
     session       -- SparkSession builder tuned for the engine
     functions/    -- scalar-function surface (Go-parity formatting,
                      FNV-1 64 hashing, serializers C1-C4)
-    operators/    -- row transforms (flatten/nest/tenant/keys) and the
+    operators/    -- row transforms (flatten/nest) and the
                      extension operators (dedup/similarity/text/multimodal)
     sources/      -- wire-edge codecs (snappy, prompb) and decode operators
     streaming/    -- the produce/consume Structured Streaming pipelines

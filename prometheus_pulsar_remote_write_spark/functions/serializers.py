@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..schema import SAMPLE_SCHEMA
 from .gofmt import (
     go_float_str,
     go_time_sec_str,

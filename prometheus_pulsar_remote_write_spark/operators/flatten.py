@@ -6,10 +6,6 @@ Reference semantics:
   - re-nest (B2): ONE TimeSeries per sample -- no series merge -- with the
     labels map rendered as an array of (name, value) structs sorted
     byte-wise by name (pkg/remote/write.go:251-284).
-  - __name__ backfill (B6): if labels lack __name__ and a separate name
-    field is present, insert it (pkg/pulsar/serializers.go:49-51).
-  - replica-label projection-out (B7): drop configured replica labels
-    (pkg/pulsar/serializers.go:91-114).
 
 All pure Column expressions: explode/map_from_entries/array_sort stay inside
 whole-stage codegen, so flatten of a 100 TB ingest stream is a narrow
@@ -20,8 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from ..schema import DEFAULT_REPLICA_LABELS
 
 
 def flatten_write_requests(df: DataFrame, extra_cols: list[str] | None = None) -> DataFrame:
@@ -101,22 +95,3 @@ def nest_samples(
         .agg(F.collect_list("ts_entry").alias("timeseries"))
     )
 
-
-def backfill_name(df: DataFrame, name_col: str = "name") -> DataFrame:
-    """Insert labels['__name__'] from the separate name field if missing: B6."""
-    has_name = F.map_contains_key(F.col("labels"), "__name__")
-    non_empty = F.col(name_col).isNotNull() & (F.length(F.col(name_col)) > 0)
-    patched = F.when(
-        ~has_name & non_empty,
-        F.map_concat(F.col("labels"), F.create_map(F.lit("__name__"), F.col(name_col))),
-    ).otherwise(F.col("labels"))
-    return df.withColumn("labels", patched)
-
-
-def strip_replica_labels(labels: Column, replica_labels: list[str] | None = None) -> Column:
-    """Project out replica labels (B7) so HA pairs hash identically."""
-    replica = replica_labels if replica_labels is not None else DEFAULT_REPLICA_LABELS
-    if not replica:
-        return labels
-    replica_arr = F.array(*[F.lit(r) for r in replica])
-    return F.map_filter(labels, lambda k, _: ~F.array_contains(replica_arr, k))

@@ -6,15 +6,21 @@ histogram. The Spark-native mapping:
 
   - per-batch dataflow counts ride the query itself via ``observe()``
     (no extra action, no second scan): ``Observation`` for batch jobs,
-    ``StreamingQueryListener`` + named observations for streams;
+    named observations for streams, folded into counters by a
+    ``MetricsListener`` as each progress event arrives (no event is kept);
   - per-tenant delivery counters are a DeliveryMetrics, the consume
     sink's ``RemoteWriteSink.metrics`` (D2/D6 bookkeeping), read as
     snapshots or a Prometheus exposition;
-  - send-duration histogram: fixed buckets accumulated in the sink
-    (driver-side, one value per HTTP POST -- bounded cardinality).
+  - send-duration histogram: fixed buckets per tenant, accumulated in the
+    sink (driver-side, one value per HTTP POST -- bounded cardinality);
+  - every ``/metrics`` family, the listener's ingest counters included, is
+    written by one renderer (``render_exposition``) with one label-value
+    escaper.
 
 Nothing here touches the data path: observe() metrics are computed by the
-executors as a side output of the existing plan.
+executors as a side output of the existing plan. Spark is imported only
+inside the functions that build Columns, so the stdlib HTTP listener can
+render its counters with this module without loading Spark.
 """
 
 from __future__ import annotations
@@ -22,11 +28,11 @@ from __future__ import annotations
 import json
 import logging
 import re
-import time
 from dataclasses import dataclass, field
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame, Observation
-from pyspark.sql import functions as F
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, Observation
 
 _log = logging.getLogger(__name__)
 
@@ -36,6 +42,8 @@ DURATION_BUCKETS = (0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.
 
 def sample_metrics_exprs() -> list:
     """The observed-metric expressions attached to a sample DataFrame."""
+    from pyspark.sql import functions as F
+
     return [
         F.count(F.lit(1)).alias("n_samples"),
         # observe() rejects DISTINCT aggregates; approx is the idiom
@@ -53,6 +61,8 @@ def observe_samples(df: DataFrame, name: str = "samples") -> tuple[DataFrame, Ob
     action. Streaming: returns (df, None) -- metrics arrive per micro-batch
     in ``QueryProgressEvent.observedMetrics[name]`` (see MetricsListener).
     """
+    from pyspark.sql import Observation
+
     if df.isStreaming:
         return df.observe(name, *sample_metrics_exprs()), None
     obs = Observation(name)
@@ -80,6 +90,8 @@ def bucket_size_exprs(size_col, cap: int | None = None) -> list:
     comparison, ratio checks) must not TypeError on the empty edge
     (r13 advice).
     """
+    from pyspark.sql import functions as F
+
     exprs = [
         F.count(F.lit(1)).alias("n_buckets"),
         F.coalesce(F.max(size_col), F.lit(0)).alias("max_bucket"),
@@ -115,6 +127,8 @@ def lsh_bucket_histogram(banded: DataFrame, *key_cols: str, cap: int | None = No
     never materializes a grouped bucket relation (the embedding scorer
     goes straight into applyInPandas) and for operators' health checks.
     """
+    from pyspark.sql import functions as F
+
     keys = list(key_cols) or ["band_id", "bucket"]
     sizes = (
         banded.groupBy(*keys)
@@ -201,36 +215,44 @@ def warn_if_saturated(
 
 
 class MetricsListener:
-    """StreamingQueryListener capturing per-batch progress + observed metrics.
+    """StreamingQueryListener folding each progress event into counters.
 
-    Collects (batch_id, numInputRows, batchDuration, observedMetrics) per
-    progress event; ``totals()`` aggregates. Register with
-    ``spark.streams.addListener(listener.as_listener())``.
+    Every event adds its input rows, observed ``n_samples`` and one batch;
+    the dedup stage's dropped-late and evicted counts add up and its state
+    rows are kept as the latest gauge. No event is stored, so the listener
+    holds the same few integers however long its queries run. Register
+    with ``spark.streams.addListener(listener.as_listener())``. Spark's
+    listener bus delivers events one at a time, so one thread writes the
+    counters; a concurrent ``totals()`` reads each one whole.
     """
 
     def __init__(self) -> None:
-        self.progress: list[dict] = []
+        self.batches = 0
+        self._totals = {
+            "num_input_rows": 0,
+            "n_samples": 0,
+            "dedup_dropped_late": 0,
+            "dedup_evicted": 0,
+            "dedup_state_rows": 0,
+        }
 
     def _on_progress(self, event) -> None:
         p = event.progress
-        rec = {
-            "batch_id": p.batchId,
-            "num_input_rows": p.numInputRows,
-            "duration_ms": (p.durationMs or {}).get("triggerExecution"),
-            "observed": {k: v.asDict() for k, v in (p.observedMetrics or {}).items()},
-        }
-        for op in p.stateOperators or []:
+        t = self._totals
+        self.batches += 1
+        t["num_input_rows"] += p.numInputRows or 0
+        for row in (p.observedMetrics or {}).values():
+            t["n_samples"] += row.asDict().get("n_samples") or 0
+        dedup = [op for op in p.stateOperators or [] if "dedupe" in (op.operatorName or "")]
+        if dedup:
             # the dedup_within stage's loss/size counters (consume.py):
             # dropped_late is the ONLY trace a watermark-late sample
             # leaves -- it is neither POSTed nor DLQ'd, so it must be
             # scrapeable (round-10 advice)
-            if "dedupe" in (op.operatorName or ""):
-                rec["dedup"] = {
-                    "state_rows": op.numRowsTotal,
-                    "evicted": op.numRowsRemoved,
-                    "dropped_late": op.numRowsDroppedByWatermark,
-                }
-        self.progress.append(rec)
+            op = dedup[-1]
+            t["dedup_dropped_late"] += op.numRowsDroppedByWatermark or 0
+            t["dedup_evicted"] += op.numRowsRemoved or 0
+            t["dedup_state_rows"] = op.numRowsTotal or 0
 
     def as_listener(self):
         from pyspark.sql.streaming import StreamingQueryListener
@@ -253,69 +275,46 @@ class MetricsListener:
         return _L()
 
     def totals(self) -> dict:
-        out = {
-            "num_input_rows": 0,
-            "n_samples": 0,
-            "dedup_dropped_late": 0,
-            "dedup_evicted": 0,
-            "dedup_state_rows": 0,
-        }
-        for p in self.progress:
-            out["num_input_rows"] += p["num_input_rows"] or 0
-            for metrics in p["observed"].values():
-                out["n_samples"] += metrics.get("n_samples") or 0
-            if "dedup" in p:  # counters sum; the state size is a gauge
-                out["dedup_dropped_late"] += p["dedup"]["dropped_late"] or 0
-                out["dedup_evicted"] += p["dedup"]["evicted"] or 0
-                out["dedup_state_rows"] = p["dedup"]["state_rows"] or 0
-        return out
+        return dict(self._totals)
 
     def exposition(self) -> str:
         """Prometheus text exposition of the stream-side totals (the
         produce-path halves of the reference's received counter ride the
         query's observed metrics rather than sink callbacks)."""
         t = self.totals()
-        return (
-            "# HELP stream_input_rows_total Total rows ingested by the streaming query.\n"
-            "# TYPE stream_input_rows_total counter\n"
-            f"stream_input_rows_total {t['num_input_rows']}\n"
-            "# HELP stream_observed_samples_total Total samples observed by the plan's metrics.\n"
-            "# TYPE stream_observed_samples_total counter\n"
-            f"stream_observed_samples_total {t['n_samples']}\n"
-            "# HELP stream_batches_total Micro-batches processed.\n"
-            "# TYPE stream_batches_total counter\n"
-            f"stream_batches_total {len(self.progress)}\n"
-            "# HELP stream_dedup_dropped_late_total Samples dropped for trailing the"
-            " global watermark beyond the dedup horizon (neither POSTed nor DLQ'd;"
-            " alert on sustained growth if any tenant backfills).\n"
-            "# TYPE stream_dedup_dropped_late_total counter\n"
-            f"stream_dedup_dropped_late_total {t['dedup_dropped_late']}\n"
-            "# HELP stream_dedup_evicted_total Dedup state rows evicted by watermark advance.\n"
-            "# TYPE stream_dedup_evicted_total counter\n"
-            f"stream_dedup_evicted_total {t['dedup_evicted']}\n"
-            "# HELP stream_dedup_state_rows Live dedup state rows (bounded by rate x horizon).\n"
-            "# TYPE stream_dedup_state_rows gauge\n"
-            f"stream_dedup_state_rows {t['dedup_state_rows']}\n"
+        families = [
+            ("stream_input_rows_total", "Total rows ingested by the streaming query.",
+             "counter", t["num_input_rows"]),
+            ("stream_observed_samples_total", "Total samples observed by the plan's metrics.",
+             "counter", t["n_samples"]),
+            ("stream_batches_total", "Micro-batches processed.", "counter", self.batches),
+            ("stream_dedup_dropped_late_total",
+             "Samples dropped for trailing the global watermark beyond the dedup"
+             " horizon (neither POSTed nor DLQ'd; alert on sustained growth if any"
+             " tenant backfills).",
+             "counter", t["dedup_dropped_late"]),
+            ("stream_dedup_evicted_total", "Dedup state rows evicted by watermark advance.",
+             "counter", t["dedup_evicted"]),
+            ("stream_dedup_state_rows", "Live dedup state rows (bounded by rate x horizon).",
+             "gauge", t["dedup_state_rows"]),
+        ]
+        return render_exposition(
+            [(name, help_text, mtype, [("", (), v)]) for name, help_text, mtype, v in families]
         )
 
 
 @dataclass
 class DeliveryMetrics:
-    """Per-tenant delivery counters + send-duration histogram (the sink-side
-    half of the reference's metric families)."""
+    """Per-tenant delivery counters + send-duration histograms (the
+    sink-side half of the reference's metric families). The global
+    rollups in ``snapshot()`` are summed from the per-tenant data."""
 
     received: dict = field(default_factory=dict)
     sent: dict = field(default_factory=dict)
     failed: dict = field(default_factory=dict)
-    retries: int = 0
     retries_by_tenant: dict = field(default_factory=dict)
-    duration_buckets: list = field(
-        default_factory=lambda: [0] * (len(DURATION_BUCKETS) + 1)
-    )
-    duration_sum: float = 0.0
-    duration_count: int = 0
     #: per-tenant histograms (the reference keys SentBatchDuration by
-    #: (remote, tenant)); the flat fields above stay as the global rollup
+    #: (remote, tenant)): {"buckets": per-bucket counts, "sum", "count"}
     tenant_duration: dict = field(default_factory=dict)
 
     def count_received(self, tenant_id: str, n: int = 1) -> None:
@@ -328,42 +327,22 @@ class DeliveryMetrics:
         self.failed[tenant_id] = self.failed.get(tenant_id, 0) + n
 
     def count_retry(self, tenant_id: str = "") -> None:
-        self.retries += 1
         self.retries_by_tenant[tenant_id] = (
             self.retries_by_tenant.get(tenant_id, 0) + 1
         )
 
     def observe_duration(self, seconds: float, tenant_id: str = "") -> None:
-        self.duration_sum += seconds
-        self.duration_count += 1
         h = self.tenant_duration.setdefault(
             tenant_id,
             {"buckets": [0] * (len(DURATION_BUCKETS) + 1), "sum": 0.0, "count": 0},
         )
         h["sum"] += seconds
         h["count"] += 1
-        for i, bound in enumerate(DURATION_BUCKETS):
-            if seconds <= bound:
-                self.duration_buckets[i] += 1
-                h["buckets"][i] += 1
-                return
-        self.duration_buckets[-1] += 1
-        h["buckets"][-1] += 1
-
-    def time_send(self, tenant_id: str = ""):
-        """Context manager: times one POST into the histogram."""
-        metrics = self
-
-        class _Timer:
-            def __enter__(self):
-                self.t0 = time.monotonic()
-                return self
-
-            def __exit__(self, *exc):
-                metrics.observe_duration(time.monotonic() - self.t0, tenant_id)
-                return False
-
-        return _Timer()
+        bucket = next(
+            (i for i, bound in enumerate(DURATION_BUCKETS) if seconds <= bound),
+            len(DURATION_BUCKETS),
+        )
+        h["buckets"][bucket] += 1
 
     def exposition(self, remote: str = "remote") -> str:
         """Prometheus text exposition (format 0.0.4) of the reference's
@@ -374,92 +353,94 @@ class DeliveryMetrics:
         sent_batch_duration_seconds{remote,tenant} -- names, HELP strings
         and label keys byte-compatible with the reference's registry, so a
         Prometheus scraping this endpoint sees the same series."""
-        out = []
 
-        def fam(name, help_text, mtype):
-            out.append(f"# HELP {name} {help_text}")
-            out.append(f"# TYPE {name} {mtype}")
+        def per_tenant(counts: dict) -> list:
+            return [
+                ("", (("remote", remote), ("tenant", t)), counts[t]) for t in sorted(counts)
+            ]
 
-        def esc(v: str) -> str:
-            return v.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
-
-        def fmt_le(bound: float) -> str:
-            # Go's prometheus client renders integer-valued bounds without
-            # a trailing ".0" (le="1", le="5"); Python repr would emit
-            # le="1.0" and change the series identity.  %g matches Go for
-            # every bound in DURATION_BUCKETS.
-            return "%g" % bound
-
-        fam("received_samples_total", "Total number of received samples.", "counter")
-        for tenant in sorted(self.received):
-            out.append(
-                f'received_samples_total{{tenant="{esc(tenant)}"}} '
-                f"{self.received[tenant]}"
+        histograms = []
+        for t in sorted(self.tenant_duration):
+            h = self.tenant_duration[t]
+            histograms += histogram_samples(
+                (("remote", remote), ("tenant", t)), h["buckets"], h["sum"], h["count"]
             )
-        fam(
-            "sent_samples_total",
-            "Total number of processed samples sent to remote storage.",
-            "counter",
+        return render_exposition(
+            [
+                ("received_samples_total", "Total number of received samples.", "counter",
+                 [("", (("tenant", t),), self.received[t]) for t in sorted(self.received)]),
+                ("sent_samples_total",
+                 "Total number of processed samples sent to remote storage.",
+                 "counter", per_tenant(self.sent)),
+                ("failed_samples_total",
+                 "Total number of processed samples which failed on send to remote storage.",
+                 "counter", per_tenant(self.failed)),
+                ("retryable_failed_writes",
+                 "Number of retryable failures when sending to remote storage",
+                 "counter", per_tenant(self.retries_by_tenant)),
+                ("sent_batch_duration_seconds",
+                 "Duration of sample batch send calls to the remote storage.",
+                 "histogram", histograms),
+            ]
         )
-        for tenant in sorted(self.sent):
-            out.append(
-                f'sent_samples_total{{remote="{esc(remote)}",tenant="{esc(tenant)}"}} '
-                f"{self.sent[tenant]}"
-            )
-        fam(
-            "failed_samples_total",
-            "Total number of processed samples which failed on send to remote storage.",
-            "counter",
-        )
-        for tenant in sorted(self.failed):
-            out.append(
-                f'failed_samples_total{{remote="{esc(remote)}",tenant="{esc(tenant)}"}} '
-                f"{self.failed[tenant]}"
-            )
-        fam(
-            "retryable_failed_writes",
-            "Number of retryable failures when sending to remote storage",
-            "counter",
-        )
-        for tenant in sorted(self.retries_by_tenant):
-            out.append(
-                f'retryable_failed_writes{{remote="{esc(remote)}",tenant="{esc(tenant)}"}} '
-                f"{self.retries_by_tenant[tenant]}"
-            )
-        fam(
-            "sent_batch_duration_seconds",
-            "Duration of sample batch send calls to the remote storage.",
-            "histogram",
-        )
-        for tenant in sorted(self.tenant_duration):
-            h = self.tenant_duration[tenant]
-            labels = f'remote="{esc(remote)}",tenant="{esc(tenant)}"'
-            cum = 0
-            for i, bound in enumerate(DURATION_BUCKETS):
-                cum += h["buckets"][i]
-                out.append(
-                    f'sent_batch_duration_seconds_bucket{{{labels},le="{fmt_le(bound)}"}} {cum}'
-                )
-            cum += h["buckets"][-1]
-            out.append(
-                f'sent_batch_duration_seconds_bucket{{{labels},le="+Inf"}} {cum}'
-            )
-            out.append(f"sent_batch_duration_seconds_sum{{{labels}}} {h['sum']}")
-            out.append(f"sent_batch_duration_seconds_count{{{labels}}} {h['count']}")
-        return "\n".join(out) + "\n"
 
     def snapshot(self) -> dict:
+        hists = list(self.tenant_duration.values())
         return {
             "received": dict(self.received),
             "sent": dict(self.sent),
             "failed": dict(self.failed),
-            "retries": self.retries,
+            "retries": sum(self.retries_by_tenant.values()),
             "send_duration": {
-                "buckets": list(self.duration_buckets),
-                "sum": self.duration_sum,
-                "count": self.duration_count,
+                "buckets": [
+                    sum(h["buckets"][i] for h in hists)
+                    for i in range(len(DURATION_BUCKETS) + 1)
+                ],
+                "sum": sum(h["sum"] for h in hists),
+                "count": sum(h["count"] for h in hists),
             },
         }
+
+
+# --- the text exposition format -----------------------------------------------
+
+
+def escape_label_value(value: str) -> str:
+    """A label value as the text format quotes it: ``\\``, ``"`` and
+    newline escaped."""
+    return value.replace("\\", "\\\\").replace('"', '\\"').replace("\n", "\\n")
+
+
+def histogram_samples(labels: tuple, buckets: list, total: float, count: int) -> list:
+    """One histogram series' samples for :func:`render_exposition`: a
+    cumulative ``_bucket`` per ``DURATION_BUCKETS`` bound and ``+Inf``,
+    then ``_sum`` and ``_count``. ``buckets`` holds per-bucket counts."""
+    out, cum = [], 0
+    for i, n in enumerate(buckets):
+        cum += n
+        # Go's prometheus client renders integer-valued bounds without a
+        # trailing ".0" (le="1", le="5"); Python repr would emit le="1.0"
+        # and change the series identity. %g matches Go for every bound in
+        # DURATION_BUCKETS.
+        le = "%g" % DURATION_BUCKETS[i] if i < len(DURATION_BUCKETS) else "+Inf"
+        out.append(("_bucket", (*labels, ("le", le)), cum))
+    return out + [("_sum", labels, total), ("_count", labels, count)]
+
+
+def render_exposition(families: list) -> str:
+    """Prometheus text exposition (format 0.0.4) of ``families``, each a
+    ``(name, help, type, samples)`` tuple. A sample is ``(suffix, labels,
+    value)``: the sample name is ``name + suffix`` and ``labels`` is a
+    sequence of ``(key, value)`` pairs written in order."""
+    out = []
+    for name, help_text, mtype, samples in families:
+        out.append(f"# HELP {name} {help_text}")
+        out.append(f"# TYPE {name} {mtype}")
+        for suffix, labels, value in samples:
+            pairs = ",".join(f'{k}="{escape_label_value(v)}"' for k, v in labels)
+            series = f"{name}{suffix}{{{pairs}}}" if labels else f"{name}{suffix}"
+            out.append(f"{series} {value}")
+    return "\n".join(out) + "\n"
 
 
 # --- promlint-style exposition checks ----------------------------------------

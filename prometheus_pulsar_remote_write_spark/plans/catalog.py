@@ -39,38 +39,21 @@ for module in (pipeline, docs_vectors, events_batch, relational):
 #: locally strict-verified via scripts/check_oracle.py and the
 #: full-catalog pytest oracle run.
 _CHANGED: list = [
-    # round 14: the only entry whose OUTPUT FORMULA changed -- the LSH
-    # signature is now AUTO-SIZED from the corpus count (the r13 weak's
-    # cure, wired: suggest_signature_bits picks bits_per_band, the
-    # banded-stride prefix planes replace the flat 4x8 layout, and the
-    # DuckDB twin derives the same width from its own count(*)). q22's
-    # cent extraction moved to floor(x*100+0.5) on both engines (the
-    # +0.5-long-cast truncated toward zero on negative balances -- r13
-    # advice; provably output-identical here since the threshold is
-    # strictly positive, listed for the formula-evidence doctrine).
-    "emb_neardup_lsh",
-    "q22_dormant_rich_customers",
-    # NEW in r14: the saturation detector as an oracle-checked relation
-    # (exact discrete order statistics over the auto-sized banded
-    # relation; same planes, same width rule, same star cap).
-    "emb_lsh_bucket_stats",
-    # r14 oracle-side rewrite (values identical by construction, proven
-    # row-identical at sf0.01): JACCARD_INDEX_SQL is now the same
-    # inverted-index join the Spark operator runs instead of an n^2
-    # list_intersect cross join -- 322s -> 4s at sf0.1. Both entries
-    # share the string, so both lead the window.
-    "docs_jaccard_index_pairs",
-    "docs_jaccard_ppjoin",
-    # same rewrite class, same proof (row-identical at sf0.01):
-    # CONTAINMENT_SQL index-joined (279s -> 3s), which also carries
-    # DEDUP_SWEEP_SQL's containment leg (323s -> 4s).
-    "docs_containment_pairs",
-    "docs_dedup_sweep",
-    # Everything else this round is rotation: r13 spent two heavy
-    # changed-formula rounds' worth of window slots on the float
-    # exactness sweeps, leaving 20 entries' newest green at r8 and 37
-    # at r9 -- the stalest-tail sort below absorbs all 20 r8 entries
-    # plus the oldest r9 entries into r14's 48 remaining slots.
+    # round 15 re-planned these entries (plans/r15 holds most of their
+    # before/after plans), and each one's newest green record in
+    # CORRECTNESS_r*.json is older than that (rounds 10-14), so no record
+    # covers the plan that runs now. They lead the window: the produce
+    # serializers and partition key, the count-min key-drift and IVF
+    # nprobe sweeps, the consume deserialize round trip and the image
+    # near-dup pass.
+    "produce_serialize_json",
+    "produce_serialize_compat",
+    "produce_serialize_avro",
+    "produce_partition_key",
+    "events_cms_key_drift",
+    "emb_nprobe_sweep",
+    "consume_deserialize_roundtrip",
+    "multimodal_dhash_neardup",
 ]
 
 

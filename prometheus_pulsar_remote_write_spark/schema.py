@@ -16,17 +16,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: One time-series sample; the unit of data end-to-end.
-#: timestamp is epoch MILLISECONDS (Go model.Time), not micro/nano.
-SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("timestamp", T.LongType(), False),
-        T.StructField("value", T.DoubleType(), False),
-        T.StructField("labels", T.MapType(T.StringType(), T.StringType()), False),
-        T.StructField("tenant_id", T.StringType(), False),  # "" default
-    ]
-)
-
 #: prompb.Label
 LABEL_SCHEMA = T.StructType(
     [
@@ -55,25 +44,6 @@ TIMESERIES_SCHEMA = T.StructType(
 WRITE_REQUEST_SCHEMA = T.StructType(
     [
         T.StructField("timeseries", T.ArrayType(TIMESERIES_SCHEMA), False),
-    ]
-)
-
-#: A WriteRequest wrapped with the HTTP-edge context the produce path sees:
-#: auth-derived tenant inputs (reference pkg/context/handlers.go:29-40).
-HTTP_WRITE_REQUEST_SCHEMA = T.StructType(
-    [
-        T.StructField("basic_auth_user", T.StringType(), True),
-        T.StructField("x_scope_orgid", T.StringType(), True),
-        T.StructField("timeseries", T.ArrayType(TIMESERIES_SCHEMA), False),
-    ]
-)
-
-#: Serialized wire message (what a Pulsar message carries): the partition
-#: key (reference pkg/pulsar/serializers.go:91-114) plus the payload.
-WIRE_MESSAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("key", T.StringType(), False),
-        T.StructField("payload", T.StringType(), False),
     ]
 )
 

@@ -32,6 +32,7 @@ import time
 import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from ..operators.metrics import render_exposition
 from . import prompb
 
 #: The spool directory of a body that names no tenant; the produce
@@ -78,8 +79,9 @@ _TENANT_RE = re.compile(r"[A-Za-z0-9\-][A-Za-z0-9_.\-]{0,127}\Z")
 
 
 def tenant_is_safe(tenant: str) -> bool:
-    """True iff ``tenant`` is safe to use as a single spool path component."""
-    return _TENANT_RE.fullmatch(tenant) is not None
+    """True iff ``tenant`` is safe to use as a single spool path component.
+    ``TENANT_DIR_NONE`` is not: its bodies are published with no tenant."""
+    return tenant != TENANT_DIR_NONE and _TENANT_RE.fullmatch(tenant) is not None
 
 
 def _tenant_from_headers(headers) -> str:
@@ -136,22 +138,17 @@ class RemoteWriteListener:
         with self._lock:
             accepted_by_tenant = dict(self.accepted_by_tenant)
             rejected = self.rejected
-        out = [
-            "# HELP listener_accepted_requests_total Remote-write bodies accepted and spooled.",
-            "# TYPE listener_accepted_requests_total counter",
-        ]
-        for tenant in sorted(accepted_by_tenant):
-            safe = tenant.replace("\\", "\\\\").replace('"', '\\"')
-            out.append(
-                f'listener_accepted_requests_total{{tenant="{safe}"}} '
-                f"{accepted_by_tenant[tenant]}"
-            )
-        out += [
-            "# HELP listener_rejected_requests_total Bodies refused with 400 (undecodable or bad tenant).",
-            "# TYPE listener_rejected_requests_total counter",
-            f"listener_rejected_requests_total {rejected}",
-        ]
-        text = "\n".join(out) + "\n"
+        text = render_exposition(
+            [
+                ("listener_accepted_requests_total",
+                 "Remote-write bodies accepted and spooled.", "counter",
+                 [("", (("tenant", t),), accepted_by_tenant[t])
+                  for t in sorted(accepted_by_tenant)]),
+                ("listener_rejected_requests_total",
+                 "Bodies refused with 400 (undecodable or bad tenant).",
+                 "counter", [("", (), rejected)]),
+            ]
+        )
         if self.delivery_metrics is not None:
             text += self.delivery_metrics.exposition()
         return text

@@ -14,7 +14,7 @@ Spark mapping:
                                    # per tenant: unmarshal (C4), sort,
                                    # cut batch_size chunks (D1), sort
                                    # labels (B3), encode (A4), POST (D2)
-         poison rows        -> <poison_dir>/epoch=<id>.json (B9)
+         poison rows        -> <poison_dir>/epoch=<id>-query=<query id>.json (B9)
          recoverable error  -> raise => micro-batch replayed (D5):
                                checkpoint does not advance, intake halts
          unrecoverable      -> the rejected body to a DLQ file + continue
@@ -123,20 +123,31 @@ class RemoteWriteSink:
     user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0"
     metrics: DeliveryMetrics = field(default_factory=DeliveryMetrics)
 
-    def _dlq_write(self, epoch_id: int, tenant_id: str, batch_seq, body: bytes) -> None:
+    def _dlq_write(
+        self, query_id: str, epoch_id: int, tenant_id: str, batch_seq, body: bytes
+    ) -> None:
+        """D6: the rejected body, one flat file per (tenant, epoch, batch,
+        query). Only ``%``, ``/`` and NUL in the tenant are percent-escaped,
+        so every tenant string names its own file (``""`` stays empty) and
+        ``urllib.parse.unquote`` reads it back; escaping every non-ASCII
+        byte would triple its length against the 255-byte name limit."""
         os.makedirs(self.dlq_dir, exist_ok=True)
-        name = f"tenant={tenant_id or '_none'}-epoch={epoch_id}-batch={batch_seq}.bin"
+        tenant = tenant_id.replace("%", "%25").replace("/", "%2F").replace("\0", "%00")
+        name = f"tenant={tenant}-epoch={epoch_id}-batch={batch_seq}-query={query_id}.bin"
         with open(os.path.join(self.dlq_dir, name), "wb") as fh:
             fh.write(body)
 
-    def _poison_write(self, poison_dir: str, epoch_id: int, payloads: list) -> None:
+    def _poison_write(
+        self, poison_dir: str, query_id: str, epoch_id: int, payloads: list
+    ) -> None:
         """B9: one ``{"payload": ...}`` line per poison message, in one file
-        per epoch that a replay replaces whole."""
+        per (epoch, query) that a replay replaces whole."""
         lines = (
             json.dumps({"payload": None if p is None else p.decode()}) + "\n"
             for p in payloads
         )
-        _replace_file(os.path.join(poison_dir, f"epoch={epoch_id}.json"), "".join(lines))
+        path = os.path.join(poison_dir, f"epoch={epoch_id}-query={query_id}.json")
+        _replace_file(path, "".join(lines))
 
     def __call__(
         self, batch_df: DataFrame, epoch_id: int, poison_dir: str, fmt: str = "json"
@@ -179,7 +190,7 @@ class RemoteWriteSink:
         )
         poison = [s[5] for s in statuses if s[1] == POISON_SEQ]
         if poison:  # B9: log+ack+skip => park the payloads, keep going
-            self._poison_write(poison_dir, epoch_id, poison)
+            self._poison_write(poison_dir, query_id, epoch_id, poison)
         recoverable = []
         for tenant_id, batch_seq, status, n, elapsed, body in statuses:
             if batch_seq == POISON_SEQ:
@@ -190,7 +201,7 @@ class RemoteWriteSink:
                 recoverable.append((tenant_id, batch_seq, status))
                 continue
             if status >= 400:  # D6: the rejected body itself goes to the DLQ
-                self._dlq_write(epoch_id, tenant_id, batch_seq, body)
+                self._dlq_write(query_id, epoch_id, tenant_id, batch_seq, body)
                 self.metrics.count_failed(tenant_id, n)
             else:
                 self.metrics.count_sent(tenant_id, n)

@@ -153,6 +153,33 @@ def test_http_listener_rejects_bad_content_length(tmp_path, length):
     assert not any(p.is_file() for p in spool.rglob("*"))
 
 
+def _basic(user: str) -> str:
+    import base64
+
+    return "Basic " + base64.b64encode(f"{user}:pw".encode()).decode()
+
+
+@pytest.mark.parametrize(
+    "headers, tenant",
+    [
+        ({"Authorization": _basic("my-org-id")}, "my-org-id"),
+        ({"X-Scope-OrgID": "header-org"}, "header-org"),
+        ({"Authorization": _basic(""), "X-Scope-OrgID": "header-org"}, "header-org"),
+        ({}, ""),
+        ({"Authorization": _basic("user-org"), "X-Scope-OrgID": "header-org"}, "user-org"),
+    ],
+    ids=["basic-auth", "header", "empty-user-falls-back", "anonymous", "user-wins"],
+)
+def test_tenant_from_headers(headers, tenant):
+    """B4 (reference pkg/context/handlers.go:29-40): the Basic Auth
+    username, else X-Scope-OrgID, else ""."""
+    from prometheus_pulsar_remote_write_spark.sources.http_listener import (
+        _tenant_from_headers,
+    )
+
+    assert _tenant_from_headers(headers) == tenant
+
+
 def test_http_listener_rejects_traversal_tenants(tmp_path):
     """A hostile tenant string (Basic Auth username or X-Scope-OrgID) must
     not escape the spool: '../..'-style and absolute-path tenants get a
@@ -168,7 +195,10 @@ def test_http_listener_rejects_traversal_tenants(tmp_path):
     )
 
     assert tenant_is_safe("tenant-a") and tenant_is_safe("T_1.x")
-    bad_tenants = ("../../x", "a/b", "a\\b", "..", ".", "/abs", "", "x" * 129, "_foo", ".bar")
+    bad_tenants = (
+        "../../x", "a/b", "a\\b", "..", ".", "/abs", "", "x" * 129, "_foo", ".bar",
+        "no-tenant",  # the anonymous spool dir: published with no tenant
+    )
     for bad in bad_tenants:
         assert not tenant_is_safe(bad)
 
@@ -202,6 +232,8 @@ def test_http_listener_rejects_traversal_tenants(tmp_path):
     assert post({"X-Scope-OrgID": "/tmp/escaped"}) == 400
     # a name Spark's file listing hides would be acked and never published
     assert post({"X-Scope-OrgID": "_foo"}) == 400
+    # the anonymous spool dir's name would go downstream with no tenant
+    assert post({"X-Scope-OrgID": "no-tenant"}) == 400
     assert (
         post(
             {"Authorization": "Basic " + base64.b64encode(b"../escaped:pw").decode()}
@@ -212,7 +244,7 @@ def test_http_listener_rejects_traversal_tenants(tmp_path):
     listener.stop()
 
     assert not outside.exists()
-    assert listener.rejected == 4 and listener.accepted == 1
+    assert listener.rejected == 5 and listener.accepted == 1
     assert [p.name for p in spool.iterdir()] == ["tenant-ok"]
 
 

@@ -1,19 +1,16 @@
-"""Flatten / nest / tenant operator semantics (B1-B7)."""
+"""Flatten / nest operator semantics (B1-B3) and the B6 __name__ backfill."""
+
+import json
 
 from pyspark.sql import functions as F
 
+from prometheus_pulsar_remote_write_spark.functions.serializers import unmarshal_compat
 from prometheus_pulsar_remote_write_spark.operators.flatten import (
-    backfill_name,
     flatten_write_requests,
     nest_samples,
     sorted_label_entries,
-    strip_replica_labels,
 )
-from prometheus_pulsar_remote_write_spark.operators.tenant import with_tenant
-from prometheus_pulsar_remote_write_spark.schema import (
-    HTTP_WRITE_REQUEST_SCHEMA,
-    WRITE_REQUEST_SCHEMA,
-)
+from prometheus_pulsar_remote_write_spark.schema import WRITE_REQUEST_SCHEMA
 
 
 def _write_request_rows():
@@ -78,36 +75,16 @@ def test_sorted_label_entries_byte_order(spark):
     assert [x.name for x in row.e] == ["A", "__name__", "a", "b"]  # byte-wise
 
 
-def test_backfill_name(spark):
-    df = spark.createDataFrame(
-        [
-            ({"labelfoo": "x"}, "foo"),
-            ({"__name__": "keep", "labelfoo": "x"}, "foo"),
-            ({"labelfoo": "x"}, ""),
-        ],
-        "labels map<string,string>, name string",
-    )
-    rows = backfill_name(df).collect()
-    assert rows[0].labels["__name__"] == "foo"
-    assert rows[1].labels["__name__"] == "keep"
-    assert "__name__" not in rows[2].labels
+def test_backfill_name():
+    """B6 runs in the compat deserializer: the name field becomes __name__
+    only when the labels lack one and the name is non-empty."""
 
+    def labels(name, lbls):
+        payload = json.dumps(
+            {"value": "1", "timestamp": "1970-01-01T00:00:00Z", "name": name, "labels": lbls}
+        )
+        return unmarshal_compat(payload)[2]
 
-def test_strip_replica_labels(spark):
-    df = spark.createDataFrame(
-        [({"__name__": "m", "__replica__": "a", "x": "1"},)], "labels map<string,string>"
-    )
-    (row,) = df.select(strip_replica_labels(F.col("labels")).alias("l")).collect()
-    assert row.l == {"__name__": "m", "x": "1"}
-
-
-def test_tenant_from_auth(spark):
-    rows = [
-        ("my-org-id", None, []),
-        (None, "header-org", []),
-        ("", "header-org", []),
-        (None, None, []),
-    ]
-    df = spark.createDataFrame(rows, HTTP_WRITE_REQUEST_SCHEMA)
-    out = with_tenant(df).select("tenant_id").collect()
-    assert [r.tenant_id for r in out] == ["my-org-id", "header-org", "header-org", ""]
+    assert labels("foo", {"labelfoo": "x"})["__name__"] == "foo"
+    assert labels("foo", {"__name__": "keep", "labelfoo": "x"})["__name__"] == "keep"
+    assert "__name__" not in labels("", {"labelfoo": "x"})

@@ -5,6 +5,11 @@ from __future__ import annotations
 
 import json
 import os
+import pickle
+from types import SimpleNamespace
+
+import pytest
+from pyspark.sql import Row
 
 from prometheus_pulsar_remote_write_spark.operators.metrics import (
     DURATION_BUCKETS,
@@ -131,8 +136,7 @@ def test_exposition_matches_reference_families_and_lints_clean():
     m.count_sent("tenant-a", 5)
     m.count_failed("tenant-b", 3)
     m.count_retry("tenant-b")
-    with m.time_send("tenant-a"):
-        pass
+    m.observe_duration(0.001, "tenant-a")
     m.observe_duration(0.2, "tenant-b")
 
     text = m.exposition(remote="http://rw.example/api/v1/write")
@@ -196,16 +200,33 @@ def test_lint_exposition_catches_problems():
     assert any("missing +Inf bucket" in p for p in problems)
 
 
+def _progress_event(input_rows, observed, dedup=None):
+    """A QueryProgressEvent's shape as MetricsListener reads it; ``dedup``
+    is (state rows, evicted, dropped late) of a dedupe operator."""
+    ops = []
+    if dedup is not None:
+        ops.append(
+            SimpleNamespace(
+                operatorName="dedupeWithinWatermark",
+                numRowsTotal=dedup[0],
+                numRowsRemoved=dedup[1],
+                numRowsDroppedByWatermark=dedup[2],
+            )
+        )
+    return SimpleNamespace(
+        progress=SimpleNamespace(
+            numInputRows=input_rows, observedMetrics=observed, stateOperators=ops
+        )
+    )
+
+
 def test_metrics_listener_exposition_lints_clean():
     from prometheus_pulsar_remote_write_spark.operators.metrics import (
         lint_exposition,
     )
 
     listener = MetricsListener()
-    listener.progress.append(
-        {"batch_id": 0, "num_input_rows": 7, "duration_ms": 3,
-         "observed": {"samples": {"n_samples": 7}}}
-    )
+    listener._on_progress(_progress_event(7, {"samples": Row(n_samples=7)}))
     text = listener.exposition()
     assert "stream_input_rows_total 7" in text
     assert lint_exposition(text) == []
@@ -223,14 +244,8 @@ def test_metrics_listener_dedup_counters_and_lint():
     )
 
     listener = MetricsListener()
-    listener.progress.append(
-        {"batch_id": 0, "num_input_rows": 3, "duration_ms": 3, "observed": {},
-         "dedup": {"state_rows": 5, "evicted": 0, "dropped_late": 0}}
-    )
-    listener.progress.append(
-        {"batch_id": 1, "num_input_rows": 3, "duration_ms": 3, "observed": {},
-         "dedup": {"state_rows": 2, "evicted": 5, "dropped_late": 1}}
-    )
+    listener._on_progress(_progress_event(3, {}, dedup=(5, 0, 0)))
+    listener._on_progress(_progress_event(3, {}, dedup=(2, 5, 1)))
     t = listener.totals()
     assert t["dedup_dropped_late"] == 1
     assert t["dedup_evicted"] == 5
@@ -239,6 +254,50 @@ def test_metrics_listener_dedup_counters_and_lint():
     assert "stream_dedup_dropped_late_total 1" in text
     assert "stream_dedup_state_rows 2" in text
     assert lint_exposition(text) == []
+
+
+def test_metrics_listener_holds_no_per_event_state():
+    """Each progress event is folded into counters as it arrives: 10,000
+    events give exact totals, and the pickled listener grows only by the
+    width of its six counters, not by the event count."""
+
+    def feed(n):
+        listener = MetricsListener()
+        for i in range(n):
+            listener._on_progress(
+                _progress_event(7, {"samples": Row(n_samples=5)}, dedup=(i, 1, 2))
+            )
+        return listener
+
+    small, big = feed(10), feed(10_000)
+    assert big.totals() == {
+        "num_input_rows": 70_000,
+        "n_samples": 50_000,
+        "dedup_dropped_late": 20_000,
+        "dedup_evicted": 10_000,
+        "dedup_state_rows": 9_999,
+    }
+    assert "stream_batches_total 10000" in big.exposition()
+    assert not any(isinstance(v, (list, tuple)) for v in vars(big).values())
+    assert len(pickle.dumps(big)) - len(pickle.dumps(small)) <= 3 * 6
+
+
+def test_delivery_snapshot_rolls_up_per_tenant_data():
+    """snapshot()'s global retries and send-duration histogram are the
+    sums of the per-tenant series the exposition writes."""
+    m = DeliveryMetrics()
+    m.count_retry("a")
+    m.count_retry("b")
+    m.count_retry("a")
+    for seconds, tenant in ((0.001, "a"), (0.005, "b"), (0.3, "a"), (60.0, "b")):
+        m.observe_duration(seconds, tenant)
+    snap = m.snapshot()
+    assert snap["retries"] == 3
+    buckets = [0] * (len(DURATION_BUCKETS) + 1)
+    buckets[0], buckets[6], buckets[-1] = 2, 1, 1  # <=0.005, <=0.5, +Inf
+    assert snap["send_duration"]["buckets"] == buckets
+    assert snap["send_duration"]["count"] == 4
+    assert snap["send_duration"]["sum"] == pytest.approx(60.306)
 
 
 def test_lsh_bucket_histogram_detects_planted_hot_bucket(spark):

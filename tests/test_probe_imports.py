@@ -3,7 +3,8 @@ names it imports directly, e.g. the traced prefix probe in
 ``perfbench/sut.py``. A rename or deletion of one of those names breaks
 the benchmark, not the unit suite; these tests make it break the suite
 too, by name for every harness file and by a run of the probe's consume
-chain."""
+chain. The scripts, ``bench.py`` and ``__spark_entry__.py`` are checked by
+name the same way."""
 
 from __future__ import annotations
 
@@ -17,6 +18,12 @@ import pytest
 PACKAGE = "prometheus_pulsar_remote_write_spark"
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _HARNESS = sorted(glob.glob(os.path.join(_REPO, "perfbench", "*.py")))
+#: the other programs that import the package by name: the scripts, the
+#: catalog bench and the catalog's entry point
+_SCRIPTS = sorted(glob.glob(os.path.join(_REPO, "scripts", "*.py"))) + [
+    os.path.join(_REPO, "bench.py"),
+    os.path.join(_REPO, "__spark_entry__.py"),
+]
 
 
 def _package_imports(path: str) -> list[tuple[str, str | None]]:
@@ -36,9 +43,11 @@ def _package_imports(path: str) -> list[tuple[str, str | None]]:
 def test_harness_files_found():
     assert os.path.join(_REPO, "perfbench", "sut.py") in _HARNESS
     assert _package_imports(os.path.join(_REPO, "perfbench", "sut.py"))
+    assert all(os.path.exists(p) for p in _SCRIPTS)
+    assert len({os.path.basename(p) for p in _HARNESS + _SCRIPTS}) == len(_HARNESS + _SCRIPTS)
 
 
-@pytest.mark.parametrize("path", _HARNESS, ids=os.path.basename)
+@pytest.mark.parametrize("path", _HARNESS + _SCRIPTS, ids=os.path.basename)
 def test_harness_imports_resolve(path):
     for module, name in _package_imports(path):
         mod = importlib.import_module(module)

@@ -12,7 +12,7 @@ import wave
 import zlib
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from prometheus_pulsar_remote_write_spark.operators.multimodal import (
@@ -21,6 +21,7 @@ from prometheus_pulsar_remote_write_spark.operators.multimodal import (
     wav_bytes,
 )
 from prometheus_pulsar_remote_write_spark.sources.http_listener import (
+    TENANT_DIR_NONE,
     tenant_is_safe,
 )
 
@@ -66,6 +67,7 @@ def test_png_roundtrip_any_payload(pixels, width):
 
 @settings(max_examples=500, deadline=None)
 @given(st.text(max_size=64))
+@example(TENANT_DIR_NONE)
 def test_tenant_sanitizer_never_escapes_spool(tenant):
     spool = "/srv/spool"
     if tenant_is_safe(tenant):
@@ -74,6 +76,8 @@ def test_tenant_sanitizer_never_escapes_spool(tenant):
         assert "\x00" not in tenant and "\n" not in tenant
         # Spark's file listing hides a spool dir named _x or .x
         assert not tenant.startswith(("_", "."))
+        # the anonymous spool dir is published with no tenant
+        assert tenant != TENANT_DIR_NONE
     # everything rejected is simply rejected -- nothing to assert beyond
     # the accepted side staying inside the spool
 

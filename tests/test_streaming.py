@@ -338,6 +338,13 @@ def test_consume_pipeline_delivers_batches(spark, tmp_path):
     assert poison.count() == 1
 
 
+def _dlq_tenant(name: str) -> str:
+    """The tenant a DLQ file name encodes (``tenant=<quoted>-epoch=...``)."""
+    from urllib.parse import unquote
+
+    return unquote(name[len("tenant="):].rsplit("-epoch=", 1)[0])
+
+
 def test_consume_unrecoverable_goes_to_dlq(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     msgs, n_good = _sample_messages()
@@ -372,13 +379,13 @@ def test_consume_unrecoverable_goes_to_dlq(spark, tmp_path):
             received.add(fh.read())
     expected = {
         "team-a": {(1000 + i, float(i)) for i in range(7)},
-        "_none": {(2000 + i, float(i)) for i in range(3)},
+        "": {(2000 + i, float(i)) for i in range(3)},
     }
     for name in names:
         with open(os.path.join(dlq, name), "rb") as fh:
             body = fh.read()
         assert body in received
-        tenant = name[len("tenant="):].split("-epoch=")[0]
+        tenant = _dlq_tenant(name)
         req = prompb.decode_body(body)
         got = {
             (s["timestamp"], s["value"])
@@ -690,6 +697,81 @@ def test_sink_ledger_is_one_file_per_query_holding_its_last_epoch(spark, tmp_pat
         ledger = json.load(fh)
     assert ledger["epoch"] == q.lastProgress["batchId"] == 2
     assert len(ledger["settled"]) == 1 and ledger["settled"][0][1] == 0
+
+
+def _dlq_bodies(dlq: str) -> dict:
+    """{tenant: sorted sample timestamps} over every DLQ body in ``dlq``."""
+    out = {}
+    for name in sorted(os.listdir(dlq)):
+        if name.endswith(".bin"):
+            with open(os.path.join(dlq, name), "rb") as fh:
+                req = prompb.decode_body(fh.read())
+            out.setdefault(_dlq_tenant(name), []).extend(
+                s["timestamp"] for ts in req["timeseries"] for s in ts["samples"]
+            )
+    return {t: sorted(stamps) for t, stamps in out.items()}
+
+
+def test_dlq_keeps_tenant_none_apart_from_anonymous(spark, tmp_path):
+    """Rejected batches of a tenant named "_none" and of the anonymous
+    tenant in one epoch park two bodies, not one file written twice."""
+    in_dir = str(tmp_path / "in")
+    msgs = [(marshal_json(1000 + i, 1.0, {"__name__": "up"}, "_none"), "_none") for i in range(2)]
+    msgs += [(marshal_json(2000 + i, 2.0, {"__name__": "up"}, ""), "") for i in range(3)]
+    _write_messages(in_dir, msgs)
+    dlq = str(tmp_path / "dlq")
+    sink = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=lambda u, b, h: 400)
+    q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sink.metrics.failed == {"_none": 2, "": 3}
+    assert _dlq_bodies(dlq) == {"_none": [1000, 1001], "": [2000, 2001, 2002]}
+
+
+def test_queries_sharing_dlq_and_poison_dirs_keep_every_parked_file(spark, tmp_path):
+    """Two consume queries on one DLQ dir and one poison dir, each with a
+    rejected batch and a poison message in its epoch 0, keep both bodies
+    and both poison lines."""
+    dlq = str(tmp_path / "dlq")
+    poison_dir = str(tmp_path / "poison")
+    for leg, ts in (("a", 1000), ("b", 2000)):
+        in_dir = str(tmp_path / f"in-{leg}")
+        _write_messages(
+            in_dir,
+            [
+                (marshal_json(ts, 1.0, {"__name__": "up"}, "team-a"), "team-a"),
+                (f"poison {leg}", "team-a"),
+            ],
+        )
+        sink = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=lambda u, b, h: 400)
+        q = run_consume_pipeline(
+            spark, in_dir, sink, poison_dir,
+            checkpoint_dir=str(tmp_path / f"ckpt-{leg}"),
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None
+    assert _dlq_bodies(dlq) == {"team-a": [1000, 2000]}
+    lines = []
+    for name in os.listdir(poison_dir):
+        if name.startswith("epoch="):
+            with open(os.path.join(poison_dir, name)) as fh:
+                lines += [json.loads(line)["payload"] for line in fh]
+    assert sorted(lines) == ["poison a", "poison b"]
+
+
+def test_dlq_parks_a_tenant_holding_a_path_separator(spark, tmp_path):
+    """A bus message's tenant is not validated by every producer: a 4xx
+    for tenant "a/b" parks its body in the flat DLQ dir and the query
+    finishes."""
+    in_dir = str(tmp_path / "in")
+    _write_messages(in_dir, [(marshal_json(1000, 1.0, {"__name__": "up"}, "a/b"), "a/b")])
+    dlq = str(tmp_path / "dlq")
+    sink = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=lambda u, b, h: 400)
+    q = run_consume_pipeline(spark, in_dir, sink, str(tmp_path / "poison"))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert sink.metrics.failed == {"a/b": 1}
+    assert _dlq_bodies(dlq) == {"a/b": [1000]}
 
 
 def test_app_consume_subscriptions_share_a_work_dir(spark, tmp_path):
@@ -1168,7 +1250,7 @@ def test_app_config_entry_end_to_end(spark, drop_dir, tmp_path):
 
     assert sum(sink.metrics.sent.values()) == n_samples
     assert sink.metrics.sent == {"tenant-a": 3, "": 1}
-    assert sink.metrics.duration_count == 2  # one POST per tenant batch
+    assert sink.metrics.snapshot()["send_duration"]["count"] == 2  # one POST per tenant batch
     assert len(os.listdir(post_dir)) == 2
 
     # the reference's integration gate (consume_integration_test.go:235-253):
