@@ -5,6 +5,17 @@ cluster deployments override master/memory via spark-submit conf. The
 settings below are the scale-relevant ones: AQE for runtime re-planning
 (skew joins, partition coalescing), Arrow for every pandas-UDF edge, UTC
 session time so event-time semantics are zone-stable across engines.
+
+Python workers fork from this package's ``worker_daemon`` module, not from
+``pyspark.daemon``. Before CPython 3.13, the ``importlib.invalidate_caches()``
+call at the start of every task makes each of a worker's 14-16 zip importers
+re-read the 1,328-entry directory of ``pyspark.zip`` (0.11-0.14 CPU-s per
+task on a 4-vCPU host); the module makes that re-read happen only when the archive changed
+(3.13's own semantics, so it changes nothing there) and then runs
+``pyspark.daemon``. The workers must therefore be able to import this
+package, through the working directory (``python -m`` puts it first on
+``sys.path``) or ``PYTHONPATH``. They must already: the package's UDFs are
+pickled by reference.
 """
 
 from __future__ import annotations
@@ -39,6 +50,7 @@ def get_spark(
         # keep Python workers warm across pandas-UDF stages: re-forking per
         # stage made repeated mapInPandas plans (MinHash signatures) bimodal
         .config("spark.python.worker.reuse", "true")
+        .config("spark.python.daemon.module", "prometheus_pulsar_remote_write_spark.worker_daemon")
         # historical testdata carried TIMESTAMP(NANOS); the flag reads those
         # as epoch-nanos longs (schema.load_tables converts back to
         # TimestampType at micros, the same truncation DuckDB applies) and

@@ -37,6 +37,7 @@ an upper bound, not a wait.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
@@ -94,6 +95,41 @@ def _replace_file(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
+#: bytes in a file name on common file systems (ext4, xfs, tmpfs)
+_NAME_MAX = 255
+
+
+def _escape_tenant(tenant: str) -> str:
+    return tenant.replace("%", "%25").replace("/", "%2F").replace("\0", "%00")
+
+
+def _dlq_name(query_id: str, epoch_id: int, tenant_id: str, batch_seq) -> str:
+    """``tenant=<t>-epoch=<e>-batch=<b>-query=<query id>.bin``.
+
+    Only ``%``, ``/`` and NUL in the tenant are percent-escaped, so every
+    tenant string names its own file (``""`` stays empty) and
+    ``urllib.parse.unquote`` reads it back; escaping every non-ASCII byte
+    would triple its length against the 255-byte name limit. A name over
+    that limit keeps the longest prefix of whole escaped characters that
+    fits, then ``%%`` and 32 hex digits of the full tenant's SHA-256. An
+    escaped tenant holds no ``%%`` (each ``%`` there starts ``%25``,
+    ``%2F`` or ``%00``), so a shortened name never equals a full one."""
+    tail = f"-epoch={epoch_id}-batch={batch_seq}-query={query_id}.bin"
+    name = f"tenant={_escape_tenant(tenant_id)}{tail}"
+    if len(name.encode()) <= _NAME_MAX:
+        return name
+    digest = hashlib.sha256(tenant_id.encode()).hexdigest()[:32]
+    room = _NAME_MAX - len(f"tenant=%%{digest}{tail}".encode())
+    prefix = ""
+    for ch in tenant_id:
+        piece = _escape_tenant(ch)
+        room -= len(piece.encode())
+        if room < 0:
+            break
+        prefix += piece
+    return f"tenant={prefix}%%{digest}{tail}"
+
+
 @dataclass
 class RemoteWriteSink:
     """A4 + D2/D5/D6: per-tenant POST with retry/DLQ semantics.
@@ -127,13 +163,9 @@ class RemoteWriteSink:
         self, query_id: str, epoch_id: int, tenant_id: str, batch_seq, body: bytes
     ) -> None:
         """D6: the rejected body, one flat file per (tenant, epoch, batch,
-        query). Only ``%``, ``/`` and NUL in the tenant are percent-escaped,
-        so every tenant string names its own file (``""`` stays empty) and
-        ``urllib.parse.unquote`` reads it back; escaping every non-ASCII
-        byte would triple its length against the 255-byte name limit."""
+        query), named by ``_dlq_name``."""
         os.makedirs(self.dlq_dir, exist_ok=True)
-        tenant = tenant_id.replace("%", "%25").replace("/", "%2F").replace("\0", "%00")
-        name = f"tenant={tenant}-epoch={epoch_id}-batch={batch_seq}-query={query_id}.bin"
+        name = _dlq_name(query_id, epoch_id, tenant_id, batch_seq)
         with open(os.path.join(self.dlq_dir, name), "wb") as fh:
             fh.write(body)
 

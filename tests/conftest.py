@@ -78,8 +78,9 @@ def _restore_package_logger():
 
 @pytest.fixture(scope="session")
 def spark():
-    # local[4]: tiny unit-test rows would otherwise fan out to 32 partitions
-    # and pay 32 Python-worker forks per pandas-UDF stage (~15-30s/job).
+    # local[4]: on local[32] tiny unit-test rows would fan out to 32
+    # partitions, and a pandas-UDF stage pays a fixed Python cost per task
+    # (its partition), not per row; the reused workers fork only once.
     # Scale behavior is exercised by bench.py on local[32] at sf0.1.
     spark = get_spark(
         app_name="engine-tests",

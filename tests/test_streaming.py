@@ -774,6 +774,37 @@ def test_dlq_parks_a_tenant_holding_a_path_separator(spark, tmp_path):
     assert _dlq_bodies(dlq) == {"a/b": [1000]}
 
 
+def test_dlq_parks_tenants_too_long_for_a_file_name(spark, tmp_path):
+    """Two 300-byte tenants that share their first 250 bytes, both
+    rejected in one epoch, park two bodies under names within the 255-byte
+    limit, and the epoch commits."""
+    in_dir = str(tmp_path / "in")
+    tenants = ["t" * 250 + "a" * 50, "t" * 250 + "b" * 50]
+    _write_messages(
+        in_dir,
+        [(marshal_json(1000 + i, 1.0, {"__name__": "up"}, t), t) for i, t in enumerate(tenants)],
+    )
+    dlq = str(tmp_path / "dlq")
+    checkpoint = str(tmp_path / "ckpt")
+    sink = RemoteWriteSink(url="http://s", dlq_dir=dlq, post_fn=lambda u, b, h: 400)
+    q = run_consume_pipeline(
+        spark, in_dir, sink, str(tmp_path / "poison"), checkpoint_dir=checkpoint
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    assert os.path.exists(os.path.join(checkpoint, "commits", "0"))
+    assert sink.metrics.failed == {t: 1 for t in tenants}
+    names = sorted(f for f in os.listdir(dlq) if f.endswith(".bin"))
+    assert len(names) == 2
+    assert all(len(name.encode()) <= 255 for name in names)
+    stamps = []
+    for name in names:
+        with open(os.path.join(dlq, name), "rb") as fh:
+            req = prompb.decode_body(fh.read())
+        stamps += [s["timestamp"] for ts in req["timeseries"] for s in ts["samples"]]
+    assert sorted(stamps) == [1000, 1001]
+
+
 def test_app_consume_subscriptions_share_a_work_dir(spark, tmp_path):
     """Two consume subscriptions on one bus and one work dir are two
     queries with two ledgers: the second delivers every sample even though
