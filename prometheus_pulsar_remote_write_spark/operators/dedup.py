@@ -1,8 +1,11 @@
 """Deduplication operators (SURVEY.md §2.F F1/F2).
 
-Exact dedup, MinHash+LSH near-dup, SimHash, and n-gram Jaccard -- all
-expressed as DataFrame ops so Catalyst plans them (hash-aggregate with
-partial/final phases, broadcast where small).
+Exact dedup, MinHash+LSH near-dup, SimHash, and n-gram Jaccard and
+containment -- all expressed as DataFrame ops so Catalyst plans them
+(hash-aggregate with partial/final phases, broadcast where small).
+MinHash signatures come from one Arrow pass (``minhash_signatures``) or
+one JVM aggregation (``minhash_signatures_agg``); the inverted-index
+Jaccard and containment joins share one shingle-overlap prefix.
 
 Scale notes (100 TB):
   - exact dedup is one hash-shuffle on the dedup key; use a digest column
@@ -58,40 +61,20 @@ def _base_hash28(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
 
 
-def minhash_signature_cols(text: Column, num_hashes: int, shingle_k: int = 3) -> list[Column]:
-    """MinHash signature columns: per seed i, min over shingles of
-    (A_i * md5_28(shingle) + B_i) mod P. Pure built-ins, reproducible in
-    ANSI SQL oracles; semantics identical to ``minhash_signatures``.
-    """
-    assert num_hashes <= len(MINHASH_A)
-    hashes = F.transform(shingles_col(text, shingle_k), _base_hash28)
-    return [
-        F.array_min(
-            F.transform(
-                hashes,
-                lambda h: (h * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P,
-            )
-        ).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-
-
 def minhash_signatures_agg(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     num_hashes: int = 8, shingle_k: int = 3,
 ) -> DataFrame:
     """All-JVM MinHash tier: explode shingles, hash each ONCE with the
     built-in md5, take the ``num_hashes`` affine minima as ONE hash
-    aggregation. Semantics identical to :func:`minhash_signatures` /
-    ``minhash_signature_cols`` (same tokenizer, shingle set, hash
-    family; docs with < k tokens yield all-null signatures).
+    aggregation. Semantics identical to :func:`minhash_signatures` (same
+    tokenizer, shingle set, hash family; docs with < k tokens yield
+    all-null signatures).
 
-    Why a third tier: the expression tier re-evaluates the md5 transform
-    once per signature column (higher-order exprs are not CSE'd), and
-    the pandas tier runs on Python workers. Partial aggregation folds
-    the per-shingle rows map-side, so the groupBy shuffle carries ~8
-    partial minima per (doc, partition) and every operator is
-    whole-stage codegen. Measured at sf0.1 (local[16], warm): 0.59s/run
+    Why a second tier: the pandas tier runs on Python workers. Partial
+    aggregation folds the per-shingle rows map-side, so the groupBy
+    shuffle carries ~8 partial minima per (doc, partition) and every
+    operator is whole-stage codegen. Measured at sf0.1 (local[16], warm): 0.59s/run
     vs the pandas tier's 0.35s -- the vectorized numpy affine pass beats
     JVM md5-per-row once workers are warm, so the pandas tier stays the
     default; use this tier where Python workers are unavailable or
@@ -118,9 +101,9 @@ def minhash_signatures(
 ) -> DataFrame:
     """One Arrow-batched pass computing all ``num_hashes`` signatures.
 
-    Semantically identical to ``minhash_signature_cols`` (same tokenizer,
-    shingles, hash family -- the DuckDB oracle reproduces it bit-for-bit),
-    but much faster: each document is shingled and md5-hashed ONCE, then
+    Semantically identical to :func:`minhash_signatures_agg` (same
+    tokenizer, shingles, hash family -- the DuckDB oracle reproduces it
+    bit-for-bit): each document is shingled and md5-hashed ONCE, then
     all ``num_hashes`` signatures come from vectorized numpy affine
     transforms of the base-hash array. Narrow stage, no shuffle; scales
     with input partitions.
@@ -403,6 +386,40 @@ def simhash_band_pairs(
     )
 
 
+def _shingle_overlap(
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int
+) -> DataFrame:
+    """(id_a < id_b, n_common, n_a, n_b) for every pair of documents that
+    share a shingle: explode(shingles) -> self-equi-join on the shingle
+    (the inverted index) -> count common shingles per pair -> join both
+    set sizes. The prefix of :func:`jaccard_index_pairs` and
+    :func:`containment_pairs`."""
+    sets = df.select(
+        F.col(id_col), shingles_col(F.col(text_col), shingle_k).alias("sh")
+    ).filter(F.size("sh") > 0)
+    counts = sets.select(F.col(id_col), F.size("sh").alias("n_sh"))
+    inv = sets.select(F.col(id_col), F.explode("sh").alias("shingle"))
+    common = (
+        inv.alias("a")
+        .join(
+            inv.alias("b"),
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        )
+        .groupBy(
+            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+        )
+        .agg(F.count("*").alias("n_common"))
+    )
+    return common.join(
+        counts.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"),
+        "id_a",
+    ).join(
+        counts.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"),
+        "id_b",
+    )
+
+
 def jaccard_index_pairs(
     df: DataFrame,
     threshold: float = 0.7,
@@ -421,26 +438,8 @@ def jaccard_index_pairs(
     add a document-frequency cap on boilerplate shingles (candidate
     recall is preserved for any pair that shares one sub-cap shingle).
     """
-    sets = df.select(
-        F.col(id_col), shingles_col(F.col(text_col), shingle_k).alias("sh")
-    ).filter(F.size("sh") > 0)
-    counts = sets.select(F.col(id_col), F.size("sh").alias("n_sh"))
-    inv = sets.select(F.col(id_col), F.explode("sh").alias("shingle"))
-    common = (
-        inv.alias("a")
-        .join(
-            inv.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("n_common"))
-    )
     return (
-        common.join(counts.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(counts.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
+        _shingle_overlap(df, text_col, id_col, shingle_k)
         .withColumn(
             "jaccard",
             floor_quant_expr(
@@ -544,32 +543,8 @@ def containment_pairs(
     milli-units (floor(common * 1000 / n_small) on integer inputs) so
     the threshold compare is bit-deterministic cross-engine.
     """
-    sets = df.select(
-        F.col(id_col), shingles_col(F.col(text_col), shingle_k).alias("sh")
-    ).filter(F.size("sh") > 0)
-    counts = sets.select(F.col(id_col), F.size("sh").alias("n_sh"))
-    inv = sets.select(F.col(id_col), F.explode("sh").alias("shingle"))
-    common = (
-        inv.alias("a")
-        .join(
-            inv.alias("b"),
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .agg(F.count("*").alias("n_common"))
-    )
     scored = (
-        common.join(
-            counts.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_sh", "n_a"),
-            "id_a",
-        )
-        .join(
-            counts.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_sh", "n_b"),
-            "id_b",
-        )
+        _shingle_overlap(df, text_col, id_col, shingle_k)
         .select(
             # orient: contained = smaller shingle set (ties -> lower id)
             F.when(

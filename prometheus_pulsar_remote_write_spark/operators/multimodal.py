@@ -20,6 +20,10 @@ WAV that the stdlib ``wave`` module accepts; zlib-compressed 8-bit
 grayscale PNG) so the real tier is exercised end-to-end on genuine media
 bytes, not just synthetic markers.
 
+Image near-dup runs one decode -> dHash pass: ``image_dhash`` over PNG
+payloads, and ``image_dhash_codec`` over raw pixels, which it first
+encodes to PNG inside the same pass.
+
 At 100 TB the binary payloads dominate I/O: keep them in their own
 parquet column (never a join key), filter on the metadata struct first so
 column pruning skips payload pages for rows the query rejects.
@@ -35,14 +39,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("checksum", T.StringType(), False),
-    ]
-)
 
 DECODED_FIELDS = [
     T.StructField("width", T.IntegerType(), True),
@@ -489,16 +485,10 @@ def dhash64(width: int, height: int, pixels: bytes) -> int:
     return h
 
 
-def image_dhash(
-    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-image 64-bit dHash over REAL PNG payloads: full zlib decode ->
-    9x8 grid -> difference bits, one Arrow-batched narrow pass (the
-    image half of the multimodal dedup funnel; pair generation on the
-    hash is a plain groupBy downstream). Returns (id, width, height,
-    dhash)."""
-    from typing import Iterator
-
+def _dhash_pass(df: DataFrame, col: str, id_col: str, to_png) -> DataFrame:
+    """One Arrow-batched narrow pass: ``to_png`` turns each ``col`` value
+    into PNG bytes, which are fully decoded and dHashed. Returns (id,
+    width, height, dhash_hi, dhash_lo)."""
     out_schema = T.StructType(
         [
             df.schema[id_col],
@@ -515,8 +505,8 @@ def image_dhash(
     def _dhash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ws, hs, his, los = [], [], [], []
-            for payload in pdf[payload_col]:
-                w, h, px = decode_png_pixels(bytes(payload))
+            for value in pdf[col]:
+                w, h, px = decode_png_pixels(to_png(bytes(value)))
                 ws.append(w)
                 hs.append(h)
                 d = dhash64(w, h, px)
@@ -532,7 +522,18 @@ def image_dhash(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(_dhash, out_schema)
+    return df.select(id_col, col).mapInPandas(_dhash, out_schema)
+
+
+def image_dhash(
+    df: DataFrame, payload_col: str = "payload", id_col: str = "doc_id"
+) -> DataFrame:
+    """Per-image 64-bit dHash over REAL PNG payloads: full zlib decode ->
+    9x8 grid -> difference bits, one Arrow-batched narrow pass (the
+    image half of the multimodal dedup funnel; pair generation on the
+    hash is a plain groupBy downstream). Returns (id, width, height,
+    dhash_hi, dhash_lo)."""
+    return _dhash_pass(df, payload_col, id_col, lambda payload: payload)
 
 
 def image_dhash_codec(
@@ -550,34 +551,4 @@ def image_dhash_codec(
     two stages (two Arrow (de)serializations of the heaviest column for
     zero benefit -- guide §4.1/§8: only the tiny hash rows need to come
     back). Returns (id, width, height, dhash_hi, dhash_lo)."""
-    out_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("dhash_hi", T.LongType(), True),
-            T.StructField("dhash_lo", T.LongType(), True),
-        ]
-    )
-
-    def _roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ws, hs, his, los = [], [], [], []
-            for pixels in pdf[pixels_col]:
-                w, h, px = decode_png_pixels(png_bytes(bytes(pixels), width))
-                ws.append(w)
-                hs.append(h)
-                d = dhash64(w, h, px)
-                his.append(d >> 32)
-                los.append(d & 0xFFFFFFFF)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "width": ws,
-                    "height": hs,
-                    "dhash_hi": his,
-                    "dhash_lo": los,
-                }
-            )
-
-    return df.select(id_col, pixels_col).mapInPandas(_roundtrip, out_schema)
+    return _dhash_pass(df, pixels_col, id_col, lambda pixels: png_bytes(pixels, width))

@@ -1,7 +1,18 @@
 """Similarity search over embedding columns (SURVEY.md §2.F F3).
 
-Brute-force cosine top-k as the exact baseline, and an IVF-style
-(inverted-file) variant as the 100 TB scale path.
+Brute-force cosine top-k as the exact baseline, IVF (inverted-file) and
+PQ (product-quantization) search as the 100 TB scale path, and sign-LSH
+near-dup pairs.
+
+Each search step has one implementation, which the in-query and the
+persisted-index operators share: the IVF probe (``ivf_probe``), the cell
+scoring (``ivf_score``), the PQ subvector split and codebook, the
+squared-L2 fold, the ADC distance table and the top-k tail. An indexed
+search differs from its in-query twin only in reading its centroids,
+codebook and cell assignment from parquet. The sign-LSH operators share
+one signature sizing and one Arrow banding pass
+(``signlsh_buckets_batch``); ``signlsh_bits`` is the interpreted fold it
+is tested against.
 
 Scale notes:
   - brute force is a broadcast nested-loop: fine when the *query* side is
@@ -134,12 +145,7 @@ def cosine_topk(
             ).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _top_k(scored, "cosine", k, descending=True)
 
 
 def _hyperplane_signs(dim: int, n_bits: int, seed: str = "lsh") -> list[list[int]]:
@@ -197,7 +203,10 @@ def auto_banded_signs(
 
 
 def signlsh_bits(vec: Column, signs: list[list[int]]) -> list[Column]:
-    """Random-hyperplane (SimHash) bits: sign of <vec, r_j> per plane."""
+    """Random-hyperplane (SimHash) bits: sign of <vec, r_j> per plane, one
+    interpreted fold per bit -- the reference that
+    ``signlsh_buckets_batch`` is tested against (the DuckDB oracle
+    computes the same fold)."""
     return [
         F.when(
             F.aggregate(
@@ -219,10 +228,10 @@ def signlsh_bits(vec: Column, signs: list[list[int]]) -> list[Column]:
 def signlsh_buckets_batch(
     vec_col: str, signs: list[list[int]], bands: int, bits_per_band: int
 ) -> Column:
-    """Arrow-tier twin of ``signlsh_bits``: all band buckets in ONE
+    """The sign-LSH signature: all band buckets of ``signlsh_bits`` in ONE
     vectorized pass, returned as an ``array<string>`` (index = band_id).
 
-    Bit-exact with the expression tier BY CONSTRUCTION: the fold
+    Bit-exact with ``signlsh_bits`` BY CONSTRUCTION: the fold
     ``aggregate(zip_with(v, plane, (x, s) -> double(x) * s), 0.0, +)`` is
     a strict left-to-right IEEE-754 double accumulation, and
     ``np.cumsum`` (``np.add.accumulate``) performs the identical
@@ -231,10 +240,10 @@ def signlsh_buckets_batch(
     bucket needs) cannot diverge even at a 1e-16 boundary. Parity is
     pytest-pinned (test_similarity).
 
-    Why it exists: each expression-tier bit is an interpreted
-    higher-order aggregate, so 32 bits (the measured-safe 4x8 sizing)
-    cost ~4.3s at sf0.1 vs 0.9s for 8 bits -- the signature stage went
-    expression-bound. One Arrow batch accumulates the (rows x n_bits)
+    Why not the expression fold: each ``signlsh_bits`` bit is an
+    interpreted higher-order aggregate, so 32 bits (the measured-safe
+    4x8 sizing) cost ~4.3s at sf0.1 vs 0.9s for 8 bits -- the signature
+    stage went expression-bound. One Arrow batch accumulates the (rows x n_bits)
     dot block in ~ms and scales linearly with input partitions
     (narrow, no shuffle).
 
@@ -262,7 +271,7 @@ def signlsh_buckets_batch(
         plane_cols = [np.ascontiguousarray(planes[:, d]) for d in range(dim)]
         dots_buf = np.empty((0, n_bits), dtype=np.float64)
         tmp_buf = np.empty((0, n_bits), dtype=np.float64)
-        # a NULL embedding folds to NULL in the expression tier, and
+        # a NULL embedding folds to NULL in signlsh_bits, and
         # NULL >= 0 falls through to the otherwise("0") branch -- mirror
         # that here (and keep the ragged row out of np.array)
         null_bands = ["0" * bits_per_band] * bands
@@ -378,17 +387,34 @@ def _quant_cosines_exact(fast_dots, lhs, rhs, denom, round_to: int):
     return _floor_quant(x, round_to)
 
 
+def _signature(
+    emb: DataFrame, bands: int, bits_per_band: int | None, dim: int, n: int | None = None
+) -> tuple[int, list[list[int]]]:
+    """(bits_per_band, hyperplanes) of the sign-LSH signature shared by
+    the pair scorer and both bucket detectors. ``bits_per_band=None``
+    sizes it from the corpus count ``n`` (counted here only when the
+    caller has not) under the banded-stride prefix convention
+    (MAX_AUTO_BITS); an explicit width keeps the flat plane layout and
+    counts nothing."""
+    if bits_per_band is None:
+        if n is None:
+            n = emb.count()
+        bits_per_band, signs = auto_banded_signs(n, bands=bands, dim=dim)
+        _log_auto_size(n, bands, bits_per_band)
+        return bits_per_band, signs
+    return bits_per_band, _hyperplane_signs(dim, bands * bits_per_band)
+
+
 def _banded_embeddings(
     emb: DataFrame,
     signs: list[list[int]],
     bands: int,
     bits_per_band: int,
-    signature_tier: str,
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
     """(id, vec, band_id, bucket) rows -- the sign-LSH banded relation
-    shared by the pair scorer and the bucket-histogram detector."""
+    shared by the pair scorer and both bucket detectors."""
     # Under-parallel input guard (guide §2.5 "one huge unsplittable
     # file ... repartition immediately after the read"): a single-row-
     # group parquet -- the local testdata layout -- scans as ONE task,
@@ -402,38 +428,15 @@ def _banded_embeddings(
         want = emb.sparkSession.sparkContext.defaultParallelism
         if emb.rdd.getNumPartitions() < want:
             emb = emb.repartition(want)
-    if signature_tier == "arrow":
-        # one vectorized Arrow pass for ALL sign bits (see
-        # signlsh_buckets_batch -- bit-exact with the expression tier)
-        return (
-            emb.select(
-                F.col(id_col),
-                F.col(vec_col),
-                signlsh_buckets_batch(vec_col, signs, bands, bits_per_band).alias(
-                    "__buckets"
-                ),
-            )
-            .select(
-                id_col, vec_col, F.posexplode("__buckets").alias("band_id", "bucket")
-            )
-        )
-    bits = signlsh_bits(F.col(vec_col), signs)
-    band_entries = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat(*bits[b * bits_per_band : (b + 1) * bits_per_band]).alias(
-                    "bucket"
-                ),
-            )
-            for b in range(bands)
-        ]
-    )
+    # one vectorized Arrow pass for ALL sign bits (see
+    # signlsh_buckets_batch -- bit-exact with signlsh_bits)
     return emb.select(
         F.col(id_col),
         F.col(vec_col),
-        F.explode(band_entries).alias("band"),
-    ).select(id_col, vec_col, "band.band_id", "band.bucket")
+        signlsh_buckets_batch(vec_col, signs, bands, bits_per_band).alias(
+            "__buckets"
+        ),
+    ).select(id_col, vec_col, F.posexplode("__buckets").alias("band_id", "bucket"))
 
 
 def embedding_lsh_bucket_histogram(
@@ -443,7 +446,6 @@ def embedding_lsh_bucket_histogram(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    signature_tier: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> dict:
     """Saturation-regime detector for the sign-LSH path (SCALE.md §10):
@@ -470,13 +472,9 @@ def embedding_lsh_bucket_histogram(
     from .metrics import lsh_bucket_histogram, warn_if_saturated
 
     n = emb.count()
-    if bits_per_band is None:
-        bits_per_band, signs = auto_banded_signs(n, bands=bands, dim=dim)
-        _log_auto_size(n, bands, bits_per_band)
-    else:
-        signs = _hyperplane_signs(dim, bands * bits_per_band)
+    bits_per_band, signs = _signature(emb, bands, bits_per_band, dim, n)
     banded = _banded_embeddings(
-        emb, signs, bands, bits_per_band, signature_tier, id_col, vec_col
+        emb, signs, bands, bits_per_band, id_col, vec_col
     ).select(id_col, "band_id", "bucket")
     hist = lsh_bucket_histogram(banded, "band_id", "bucket", cap=max_bucket_size)
     hist["n_vectors"] = n
@@ -493,7 +491,6 @@ def embedding_lsh_bucket_stats_df(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    signature_tier: str = "arrow",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """The saturation detector as an ORACLE-CHECKED relation (r14): one
@@ -523,13 +520,9 @@ def embedding_lsh_bucket_stats_df(
     like the production pair plan. All counts are BIGINT.
     """
     n = emb.count()
-    if bits_per_band is None:
-        bits_per_band, signs = auto_banded_signs(n, bands=bands, dim=dim)
-        _log_auto_size(n, bands, bits_per_band)
-    else:
-        signs = _hyperplane_signs(dim, bands * bits_per_band)
+    bits_per_band, signs = _signature(emb, bands, bits_per_band, dim, n)
     banded = _banded_embeddings(
-        emb, signs, bands, bits_per_band, signature_tier, id_col, vec_col
+        emb, signs, bands, bits_per_band, id_col, vec_col
     ).select(id_col, "band_id", "bucket")
     sizes = (
         banded.groupBy("band_id", "bucket")
@@ -635,7 +628,6 @@ def embedding_neardup_pairs(
     vec_col: str = "embedding",
     round_to: int = 6,
     max_bucket_size: int | None = None,
-    signature_tier: str = "arrow",
 ) -> DataFrame:
     """F2 embedding near-dup: sign-LSH band buckets prune the O(n^2) pair
     space; exact cosine filters the candidates.
@@ -687,15 +679,8 @@ def embedding_neardup_pairs(
     """
     import numpy as np
 
-    if bits_per_band is None:
-        n = emb.count()
-        bits_per_band, signs = auto_banded_signs(n, bands=bands, dim=dim)
-        _log_auto_size(n, bands, bits_per_band)
-    else:
-        signs = _hyperplane_signs(dim, bands * bits_per_band)
-    banded = _banded_embeddings(
-        emb, signs, bands, bits_per_band, signature_tier, id_col, vec_col
-    )
+    bits_per_band, signs = _signature(emb, bands, bits_per_band, dim)
+    banded = _banded_embeddings(emb, signs, bands, bits_per_band, id_col, vec_col)
 
     out_schema = T.StructType(
         [
@@ -855,17 +840,19 @@ def cosine_pairs_exact(
     return qside.mapInPandas(_pairs, out_schema)
 
 
-def ivf_assign(
-    corpus: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Assign every corpus vector to its nearest centroid (one broadcast pass).
-
-    Returns (id, vec, cell). At scale, persist this partitioned by cell so
-    probes prune at the file level.
-    """
-    cent = centroids.select(
+def _cells(centroids: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Centroid vectors as the index's (cell, cent_vec) rows: a cell is
+    named by its centroid's vector id."""
+    return centroids.select(
         F.col(id_col).alias("cell"), F.col(vec_col).alias("cent_vec")
     )
+
+
+def _assign_cells(
+    corpus: DataFrame, cent: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vec, cell): each vector's nearest of the (cell, cent_vec)
+    rows, by 9-digit-quantized cosine with the lower cell winning ties."""
     scored = corpus.select(F.col(id_col), F.col(vec_col)).join(F.broadcast(cent))
     w = Window.partitionBy(id_col).orderBy(
         F.desc(floor_quant_expr(cosine_expr(F.col(vec_col), F.col("cent_vec")), 9)),
@@ -875,6 +862,184 @@ def ivf_assign(
         scored.withColumn("__r", F.row_number().over(w))
         .filter(F.col("__r") == 1)
         .select(id_col, vec_col, "cell")
+    )
+
+
+def ivf_assign(
+    corpus: DataFrame, centroids: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> DataFrame:
+    """Assign every corpus vector to its nearest centroid (one broadcast pass).
+
+    Returns (id, vec, cell). At scale, persist this partitioned by cell so
+    probes prune at the file level.
+    """
+    return _assign_cells(corpus, _cells(centroids, id_col, vec_col), id_col, vec_col)
+
+
+def ivf_probe(
+    queries: DataFrame,
+    cent: DataFrame,
+    nprobe: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    rank_col: str | None = None,
+) -> DataFrame:
+    """The ``nprobe`` cells nearest each query, from (cell, cent_vec)
+    rows: (query_id, query_vec, cell), ranked by 9-digit-quantized cosine
+    to the centroid with the lower cell winning ties. ``rank_col`` keeps
+    the probe rank (1 = nearest) under that name -- nprobe=k probes
+    exactly the cells ranked <= k, so one ranked probe serves a sweep."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(
+            floor_quant_expr(cosine_expr(F.col("query_vec"), F.col("cent_vec")), 9)
+        ),
+        F.asc("cell"),
+    )
+    rank = rank_col or "__r"
+    return (
+        q.join(F.broadcast(cent))
+        .withColumn(rank, F.row_number().over(w))
+        .filter(F.col(rank) <= nprobe)
+        .select("query_id", "query_vec", "cell", *([rank_col] if rank_col else []))
+    )
+
+
+def ivf_score(
+    assigned: DataFrame,
+    probes: DataFrame,
+    round_to: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    keep: tuple = (),
+) -> DataFrame:
+    """Every member of each probed cell but the query itself, scored by
+    its quantized cosine to the query: (query_id, *keep, match_id,
+    cosine), ``keep`` naming probe columns to carry along."""
+    return (
+        assigned.join(F.broadcast(probes), "cell")
+        .filter(F.col(id_col) != F.col("query_id"))
+        .select(
+            "query_id",
+            *keep,
+            F.col(id_col).alias("match_id"),
+            floor_quant_expr(
+                cosine_expr(F.col("query_vec"), F.col(vec_col)), round_to
+            ).alias("cosine"),
+        )
+    )
+
+
+def _ivf_search(
+    cent: DataFrame,
+    assigned: DataFrame,
+    queries: DataFrame,
+    nprobe: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    round_to: int,
+) -> DataFrame:
+    """IVF top-k: probe the nprobe nearest cells, score their members,
+    keep the k best per query."""
+    probes = ivf_probe(queries, cent, nprobe, id_col, vec_col)
+    scored = ivf_score(assigned, probes, round_to, id_col, vec_col)
+    return _top_k(scored, "cosine", k, descending=True)
+
+
+def _pq_split(
+    df: DataFrame,
+    keys: dict,
+    vec_col: str,
+    n_sub: int,
+    sub_dim: int,
+    field: str,
+    out: str | None = None,
+) -> DataFrame:
+    """One row per (row, subspace s): the ``keys`` columns ({name:
+    source column}), s, and the s-th ``sub_dim``-wide slice of
+    ``vec_col`` -- named ``field`` inside the exploded struct and ``out``
+    (default ``field``) in the result."""
+    subs = F.array(
+        *[
+            F.struct(
+                F.lit(s).alias("s"),
+                F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(field),
+            )
+            for s in range(n_sub)
+        ]
+    )
+    cols = [
+        F.col(src) if src == name else F.col(src).alias(name)
+        for name, src in keys.items()
+    ]
+    return df.select(*cols, F.explode(subs).alias("e")).select(
+        *keys, F.col("e.s").alias("s"), F.col(f"e.{field}").alias(out or field)
+    )
+
+
+def _pq_codebook(
+    corpus: DataFrame,
+    n_codes: int,
+    n_sub: int,
+    sub_dim: int,
+    id_col: str,
+    vec_col: str,
+    field: str = "cv",
+) -> DataFrame:
+    """The deterministic PQ codebook (no RNG): the ``n_codes`` lowest-id
+    vectors' subvectors as (code, s, cv) rows. ``field`` is the struct
+    field the split carries them in (``pq_assign`` splits the corpus and
+    its codebook under one name, ``sub``)."""
+    return _pq_split(
+        corpus.orderBy(id_col).limit(n_codes),
+        {"code": id_col},
+        vec_col,
+        n_sub,
+        sub_dim,
+        field,
+        "cv",
+    )
+
+
+def _sq_l2(a: str, b: str) -> Column:
+    """Squared L2 distance of two float-array columns, folded left to
+    right in double."""
+    return F.aggregate(
+        F.zip_with(
+            F.col(a),
+            F.col(b),
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _adc_table(qsub: DataFrame, codebook: DataFrame, *keys: str) -> DataFrame:
+    """The ADC distance table: per query subvector (``qv``) and code, the
+    squared L2 to the code's subvector, micro-quantized to an exact
+    BIGINT (floor(d * 1e9)) -- (*keys, s, code, d_micro)."""
+    return qsub.join(F.broadcast(codebook), "s").select(
+        *keys,
+        "s",
+        "code",
+        F.floor(_sq_l2("qv", "cv") * 1e9).cast("bigint").alias("d_micro"),
+    )
+
+
+def _top_k(scored: DataFrame, score_col: str, k: int, descending: bool) -> DataFrame:
+    """The k best-scored matches per query, ties to the lower match id:
+    (query_id, match_id, score_col, rank)."""
+    order = F.desc(score_col) if descending else F.asc(score_col)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("match_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "match_id", score_col, "rank")
     )
 
 
@@ -906,41 +1071,14 @@ def pq_assign(
 
     Returns (id, s, code, dist_r) -- one row per vector per subspace.
     """
-    sub_structs = F.array(
-        *[
-            F.struct(
-                F.lit(s).alias("s"),
-                F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias("sub"),
-            )
-            for s in range(n_sub)
-        ]
-    )
-    corpus_sub = corpus.select(
-        F.col(id_col), F.explode(sub_structs).alias("e")
-    ).select(id_col, F.col("e.s").alias("s"), F.col("e.sub").alias("sub"))
+    corpus_sub = _pq_split(corpus, {id_col: id_col}, vec_col, n_sub, sub_dim, "sub")
     if codebook is not None:
         cb_sub = codebook.select("code", "s", "cv")
     else:
-        cb_sub = (
-            corpus.orderBy(id_col)
-            .limit(n_codes)
-            .select(F.col(id_col).alias("code"), F.explode(sub_structs).alias("e"))
-            .select("code", F.col("e.s").alias("s"), F.col("e.sub").alias("cv"))
-        )
-    dist = floor_quant_expr(
-        F.aggregate(
-            F.zip_with(
-                F.col("sub"),
-                F.col("cv"),
-                lambda a, b: (a.cast("double") - b.cast("double"))
-                * (a.cast("double") - b.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        9,
+        cb_sub = _pq_codebook(corpus, n_codes, n_sub, sub_dim, id_col, vec_col, "sub")
+    scored = corpus_sub.join(F.broadcast(cb_sub), "s").withColumn(
+        "dist_r", floor_quant_expr(_sq_l2("sub", "cv"), 9)
     )
-    scored = corpus_sub.join(F.broadcast(cb_sub), "s").withColumn("dist_r", dist)
     w = Window.partitionBy(id_col, "s").orderBy(F.asc("dist_r"), F.asc("code"))
     return (
         scored.withColumn("__r", F.row_number().over(w))
@@ -974,68 +1112,25 @@ def pq_adc_topk(
     codes = pq_assign(corpus, n_sub, sub_dim, n_codes, id_col, vec_col).select(
         F.col(id_col).alias("match_id"), "s", "code"
     )
-    cb_sub = (
-        corpus.orderBy(id_col)
-        .limit(n_codes)
-        .select(
-            F.col(id_col).alias("code"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(
-                                "cv"
-                            ),
-                        )
-                        for s in range(n_sub)
-                    ]
-                )
-            ).alias("e"),
-        )
-        .select("code", F.col("e.s").alias("s"), F.col("e.cv").alias("cv"))
-    )
-    qsub = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias("qv"),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("e"),
-    ).select("query_id", F.col("e.s").alias("s"), F.col("e.qv").alias("qv"))
-    d = F.aggregate(
-        F.zip_with(
-            F.col("qv"),
-            F.col("cv"),
-            lambda a, b: (a.cast("double") - b.cast("double"))
-            * (a.cast("double") - b.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    dtab = qsub.join(F.broadcast(cb_sub), "s").select(
-        "query_id",
-        "s",
-        "code",
-        F.floor(d * 1e9).cast("bigint").alias("d_micro"),
-    )
+    cb_sub = _pq_codebook(corpus, n_codes, n_sub, sub_dim, id_col, vec_col)
+    qsub = _pq_split(queries, {"query_id": id_col}, vec_col, n_sub, sub_dim, "qv")
     scored = (
-        codes.join(F.broadcast(dtab), ["s", "code"])
+        codes.join(F.broadcast(_adc_table(qsub, cb_sub, "query_id")), ["s", "code"])
         .filter(F.col("match_id") != F.col("query_id"))
         .groupBy("query_id", "match_id")
         .agg(F.sum("d_micro").alias("adist_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist_micro"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "adist_micro", "rank")
+    return _top_k(scored, "adist_micro", k, descending=False)
+
+
+def _write_index(
+    rows: DataFrame, centroids: DataFrame, path: str, id_col: str, vec_col: str
+) -> None:
+    """Overwrite ``path`` with ``rows`` partitioned by cell, then write the
+    centroids beside them in `_centroids`."""
+    rows.write.mode("overwrite").partitionBy("cell").parquet(path)
+    _cells(centroids, id_col, vec_col).coalesce(1).write.mode("overwrite").parquet(
+        f"{path}/_centroids"
     )
 
 
@@ -1054,10 +1149,7 @@ def persist_ivf_index(
     opened). Centroids ride along in a `_centroids` subdir."""
     centroids = corpus.orderBy(id_col).limit(n_cells)
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-    centroids.select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("cent_vec")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
+    _write_index(assigned, centroids, path, id_col, vec_col)
 
 
 def ivf_topk_indexed(
@@ -1070,45 +1162,16 @@ def ivf_topk_indexed(
     vec_col: str = "embedding",
     round_to: int = 4,
 ) -> DataFrame:
-    """Approximate top-k over a persisted IVF index (see persist_ivf_index).
+    """Approximate top-k over a persisted IVF index (see persist_ivf_index):
+    :func:`ivf_topk` with the centroids and cell assignment read from
+    the index.
 
     The probe filter is a partition-level predicate on the index scan --
     at scale this is the difference between reading nprobe cells and
     re-scoring the whole corpus."""
     cent = spark.read.parquet(f"{index_path}/_centroids")
     assigned = spark.read.parquet(index_path)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc(
-            floor_quant_expr(cosine_expr(F.col("query_vec"), F.col("cent_vec")), 9)
-        ),
-        F.asc("cell"),
-    )
-    probes = (
-        q.join(F.broadcast(cent))
-        .withColumn("__r", F.row_number().over(probe_w))
-        .filter(F.col("__r") <= nprobe)
-        .select("query_id", "query_vec", "cell")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("match_id"),
-            floor_quant_expr(
-                cosine_expr(F.col("query_vec"), F.col(vec_col)), round_to
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    return _ivf_search(cent, assigned, queries, nprobe, k, id_col, vec_col, round_to)
 
 
 def persist_ivfpq_index(
@@ -1133,36 +1196,33 @@ def persist_ivfpq_index(
     codes = _pq_code_words(
         pq_assign(corpus, n_sub, sub_dim, n_codes, id_col, vec_col), id_col
     )
-    assigned.select(id_col, "cell").join(codes, id_col).write.mode(
-        "overwrite"
-    ).partitionBy("cell").parquet(path)
-    centroids.select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("cent_vec")
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/_centroids")
-    (
-        corpus.orderBy(id_col)
-        .limit(n_codes)
-        .select(
-            F.col(id_col).alias("code"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.slice(F.col(vec_col), s * sub_dim + 1, sub_dim).alias(
-                                "cv"
-                            ),
-                        )
-                        for s in range(n_sub)
-                    ]
-                )
-            ).alias("e"),
-        )
-        .select("code", F.col("e.s").alias("s"), F.col("e.cv").alias("cv"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{path}/_codebook")
+    rows = assigned.select(id_col, "cell").join(codes, id_col)
+    _write_index(rows, centroids, path, id_col, vec_col)
+    codebook = _pq_codebook(corpus, n_codes, n_sub, sub_dim, id_col, vec_col)
+    codebook.coalesce(1).write.mode("overwrite").parquet(f"{path}/_codebook")
+
+
+def _frozen_cells(
+    spark, path: str, new_vectors: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vec, cell): new vectors assigned to the index's frozen
+    `_centroids` (re-training them is the offline rebuild's job)."""
+    cent = spark.read.parquet(f"{path}/_centroids")
+    return _assign_cells(new_vectors, cent, id_col, vec_col)
+
+
+def _append_to_cells(spark, rows: DataFrame, path: str, id_col: str) -> list:
+    """Append ``rows`` to the index at ``path``, reading and writing only
+    the cells they touch. Ids already in a touched cell are anti-joined
+    out first, so a replayed append is a no-op. Returns the touched cell
+    ids."""
+    cells = sorted(r[0] for r in rows.select("cell").distinct().collect())
+    existing_ids = (
+        spark.read.parquet(path).where(F.col("cell").isin(cells)).select(id_col)
     )
+    fresh = rows.join(existing_ids, id_col, "left_anti").localCheckpoint(eager=True)
+    fresh.write.mode("append").partitionBy("cell").parquet(path)
+    return cells
 
 
 def append_ivf_index(
@@ -1185,20 +1245,8 @@ def append_ivf_index(
     split real ANN serving uses.
 
     Returns the list of touched cell ids."""
-    cent = spark.read.parquet(f"{path}/_centroids")
-    centroids = cent.select(
-        F.col("cell").alias(id_col), F.col("cent_vec").alias(vec_col)
-    )
-    assigned = ivf_assign(new_vectors, centroids, id_col, vec_col)
-    cells = sorted(r[0] for r in assigned.select("cell").distinct().collect())
-    existing_ids = (
-        spark.read.parquet(path).where(F.col("cell").isin(cells)).select(id_col)
-    )
-    fresh = assigned.join(existing_ids, id_col, "left_anti").localCheckpoint(
-        eager=True
-    )
-    fresh.write.mode("append").partitionBy("cell").parquet(path)
-    return cells
+    assigned = _frozen_cells(spark, path, new_vectors, id_col, vec_col)
+    return _append_to_cells(spark, assigned, path, id_col)
 
 
 def _pq_code_words(codes_long: DataFrame, id_col: str) -> DataFrame:
@@ -1229,12 +1277,8 @@ def append_ivfpq_index(
     8-byte code rows to the touched cell partitions only. Same
     idempotence contract as :func:`append_ivf_index`. Returns touched
     cells."""
-    cent = spark.read.parquet(f"{path}/_centroids")
-    centroids = cent.select(
-        F.col("cell").alias(id_col), F.col("cent_vec").alias(vec_col)
-    )
     codebook = spark.read.parquet(f"{path}/_codebook")
-    assigned = ivf_assign(new_vectors, centroids, id_col, vec_col)
+    assigned = _frozen_cells(spark, path, new_vectors, id_col, vec_col)
     codes = _pq_code_words(
         pq_assign(
             new_vectors, n_sub, sub_dim, 0, id_col, vec_col, codebook=codebook
@@ -1242,13 +1286,7 @@ def append_ivfpq_index(
         id_col,
     )
     rows = assigned.select(id_col, "cell").join(codes, id_col)
-    cells = sorted(r[0] for r in rows.select("cell").distinct().collect())
-    existing_ids = (
-        spark.read.parquet(path).where(F.col("cell").isin(cells)).select(id_col)
-    )
-    fresh = rows.join(existing_ids, id_col, "left_anti").localCheckpoint(eager=True)
-    fresh.write.mode("append").partitionBy("cell").parquet(path)
-    return cells
+    return _append_to_cells(spark, rows, path, id_col)
 
 
 def ivfpq_topk_indexed(
@@ -1269,55 +1307,11 @@ def ivfpq_topk_indexed(
     cent = spark.read.parquet(f"{index_path}/_centroids")
     cb = spark.read.parquet(f"{index_path}/_codebook")
     index = spark.read.parquet(index_path)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+    probes = ivf_probe(queries, cent, nprobe, id_col, vec_col)
+    qsub = _pq_split(
+        probes, {"query_id": "query_id", "cell": "cell"}, "query_vec", n_sub, sub_dim, "qv"
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc(
-            floor_quant_expr(cosine_expr(F.col("query_vec"), F.col("cent_vec")), 9)
-        ),
-        F.asc("cell"),
-    )
-    probes = (
-        q.join(F.broadcast(cent))
-        .withColumn("__r", F.row_number().over(probe_w))
-        .filter(F.col("__r") <= nprobe)
-        .select("query_id", "query_vec", "cell")
-    )
-    qsub = probes.select(
-        "query_id",
-        "cell",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice(F.col("query_vec"), s * sub_dim + 1, sub_dim).alias(
-                            "qv"
-                        ),
-                    )
-                    for s in range(n_sub)
-                ]
-            )
-        ).alias("e"),
-    ).select("query_id", "cell", F.col("e.s").alias("s"), F.col("e.qv").alias("qv"))
-    d = F.aggregate(
-        F.zip_with(
-            F.col("qv"),
-            F.col("cv"),
-            lambda a, b: (a.cast("double") - b.cast("double"))
-            * (a.cast("double") - b.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    dtab = qsub.join(F.broadcast(cb), "s").select(
-        "query_id",
-        "cell",
-        "s",
-        "code",
-        F.floor(d * 1e9).cast("bigint").alias("d_micro"),
-    )
+    dtab = _adc_table(qsub, cb, "query_id", "cell")
     cand = index.join(
         F.broadcast(dtab.select("query_id", "cell").distinct()), "cell"
     ).filter(F.col(id_col) != F.col("query_id"))
@@ -1332,12 +1326,7 @@ def ivfpq_topk_indexed(
         .groupBy("query_id", "match_id")
         .agg(F.sum("d_micro").alias("adist_micro"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist_micro"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "adist_micro", "rank")
-    )
+    return _top_k(scored, "adist_micro", k, descending=False)
 
 
 def ivf_topk(
@@ -1362,40 +1351,5 @@ def ivf_topk(
     centroids = corpus.orderBy(id_col).limit(n_cells)
     if assigned is None:
         assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-
-    cent = centroids.select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("cent_vec")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc(
-            floor_quant_expr(cosine_expr(F.col("query_vec"), F.col("cent_vec")), 9)
-        ),
-        F.asc("cell"),
-    )
-    probes = (
-        q.join(F.broadcast(cent))
-        .withColumn("__r", F.row_number().over(probe_w))
-        .filter(F.col("__r") <= nprobe)
-        .select("query_id", "query_vec", "cell")
-    )
-
-    scored = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col(id_col) != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col(id_col).alias("match_id"),
-            floor_quant_expr(
-                cosine_expr(F.col("query_vec"), F.col(vec_col)), round_to
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("match_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "match_id", "cosine", "rank")
-    )
+    cent = _cells(centroids, id_col, vec_col)
+    return _ivf_search(cent, assigned, queries, nprobe, k, id_col, vec_col, round_to)

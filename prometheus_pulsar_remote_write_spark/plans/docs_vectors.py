@@ -706,9 +706,6 @@ SELECT query_id, match_id, cosine, rank FROM (
 #: by construction AT EVERY SF with one static SQL string. The star cap
 #: stays as the OOM backstop only and remains mirrored in the oracle.
 EMB_LSH_BANDS = 4
-#: kept for ladder replays / explicit-width callers; the catalog entry
-#: no longer uses it (auto-sized since r14)
-EMB_LSH_BITS = 8
 EMB_LSH_MAX_BUCKET = 2000
 
 
@@ -4018,7 +4015,7 @@ def emb_nprobe_sweep(spark, sf_dir):
     -- the same rows rank in the same (cosine DESC, match_id ASC)
     order; a settings spine left-join keeps the 0-candidate row shape
     the old one-row aggregates produced."""
-    from ..operators.similarity import cosine_expr, floor_quant_expr, ivf_assign
+    from ..operators.similarity import ivf_assign, ivf_probe, ivf_score
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -4043,33 +4040,8 @@ def emb_nprobe_sweep(spark, sf_dir):
     cent = centroids.select(
         F.col("vec_id").alias("cell"), F.col("embedding").alias("cent_vec")
     )
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc(
-            floor_quant_expr(cosine_expr(F.col("query_vec"), F.col("cent_vec")), 9)
-        ),
-        F.asc("cell"),
-    )
-    probes = (
-        q.join(F.broadcast(cent))
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= max(settings))
-        .select("query_id", "query_vec", "cell", "pr")
-    )
-    cand = (
-        assigned.join(F.broadcast(probes), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "pr",
-            F.col("vec_id").alias("match_id"),
-            floor_quant_expr(
-                cosine_expr(F.col("query_vec"), F.col("embedding")), 4
-            ).alias("cosine"),
-        )
-    )
+    probes = ivf_probe(queries, cent, max(settings), rank_col="pr")
+    cand = ivf_score(assigned, probes, 4, keep=("pr",))
     # each candidate belongs to every setting that probes at least its
     # cell's rank
     cand_s = cand.withColumn(

@@ -1856,10 +1856,6 @@ FROM folded
 
 
 
-_CUSUM_K_CENTI = 50      # slack: half a unit in centi
-_CUSUM_H_CENTI = 2000    # decision threshold: 20 units of accumulated drift
-
-
 def events_cusum_changepoints(spark, sf_dir):
     """CUSUM change-point detection per (user, event_type) series: the
     classic tabular cumulative-sum control chart. Against the series'
@@ -1886,7 +1882,9 @@ def events_cusum_changepoints(spark, sf_dir):
         # mu2 = min+max = 2x the mid-range: keeping the DOUBLED value
         # avoids integer division entirely (floor-vs-trunc semantics
         # diverge across engines on negative odd sums); the fold then
-        # compares 2*x against mu2 with doubled slack/threshold
+        # compares 2*x against mu2 with doubled slack/threshold: 100 is
+        # twice the half-unit slack of 50 centi, and 4000 twice the
+        # 20-unit decision threshold
         (
             F.min(F.round(F.col("value") * 100).cast("bigint"))
             + F.max(F.round(F.col("value") * 100).cast("bigint"))

@@ -41,7 +41,6 @@ import hashlib
 import json
 import os
 import time
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,8 +49,12 @@ from pyspark.sql import functions as F
 from ..functions.serializers import deserialize, resolve_unmarshaler
 from ..operators.metrics import DeliveryMetrics
 from ..sources import prompb
-from . import TRIGGER_INTERVAL_MS
+from .. import __version__
+from . import TRIGGER_INTERVAL_MS, start_query
 from .batcher import DEFAULT_BATCH_SIZE
+
+#: the User-Agent header of every remote-write POST
+USER_AGENT = f"prometheus-pulsar-remote-write-spark/{__version__}"
 
 #: ``batch_seq`` of the status row a poison sample comes back as
 POISON_SEQ = -1
@@ -156,7 +159,6 @@ class RemoteWriteSink:
     post_fn: object = None
     batch_size: int = 100
     send_timeout_s: float = 30.0  # reference --send-timeout (consume.go:40-41)
-    user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0"
     metrics: DeliveryMetrics = field(default_factory=DeliveryMetrics)
 
     def _dlq_write(
@@ -214,7 +216,6 @@ class RemoteWriteSink:
             batch_df,
             self.url,
             fmt=fmt,
-            user_agent=self.user_agent,
             post_fn=self.post_fn,
             send_timeout_s=self.send_timeout_s,
             batch_size=self.batch_size,
@@ -314,9 +315,6 @@ def run_consume_pipeline(
       broker replays always match; a producer that re-serializes labels
       in a different order would escape dedup (and land as an ordinary
       at-least-once duplicate, never lose data)."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        poison_dir, f"_checkpoint-{uuid.uuid4().hex[:8]}"
-    )
     messages = source if source is not None else read_payload_stream(spark, in_dir)
     if dedup_within is not None:
         # the dedup key and event time need a parse before the state
@@ -336,16 +334,10 @@ def run_consume_pipeline(
         # upstream plan, including the stateful dedup subtree
         sink(batch_df, epoch_id, poison_dir, fmt)
 
-    writer = (
-        messages.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    writer = messages.writeStream.foreachBatch(process)
+    return start_query(
+        writer, poison_dir, checkpoint_dir, trigger_once, trigger_interval_ms
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_interval_ms} milliseconds")
-    return writer.start()
 
 
 def dedup_state_metrics(query) -> dict:
@@ -393,7 +385,6 @@ def worker_client(url: str):
 def post_batches_distributed(
     batch_df: DataFrame,
     url: str,
-    user_agent: str = "prometheus-pulsar-remote-write-spark/0.1.0",
     post_fn=None,
     send_timeout_s: float = 30.0,
     batch_size: int = DEFAULT_BATCH_SIZE,
@@ -485,7 +476,7 @@ def post_batches_distributed(
         headers = {
             "Content-Encoding": "snappy",
             "Content-Type": "application/x-protobuf",
-            "User-Agent": user_agent,
+            "User-Agent": USER_AGENT,
         }
         if tenant_id:
             headers["X-Scope-OrgID"] = tenant_id  # reference write.go:83-94

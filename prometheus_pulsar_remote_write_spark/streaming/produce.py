@@ -27,7 +27,6 @@ shuffle between the body and the publisher.
 from __future__ import annotations
 
 import os
-import uuid
 from typing import Iterator
 
 import pandas as pd
@@ -40,7 +39,7 @@ from ..functions.serializers import resolve_marshaler
 from ..schema import DEFAULT_REPLICA_LABELS
 from ..sources import prompb
 from ..sources.http_listener import TENANT_DIR_NONE
-from . import TRIGGER_INTERVAL_MS
+from . import start_query
 
 
 def read_request_stream(
@@ -299,18 +298,6 @@ class FanoutPublisher:
             batch_df.unpersist()
 
 
-def _start(writer, out_dir: str, checkpoint_dir: str | None, trigger_once: bool):
-    """Start a produce query: drain the drop dir once, or poll it every
-    ``TRIGGER_INTERVAL_MS``."""
-    checkpoint_dir = checkpoint_dir or os.path.join(
-        out_dir, f"_checkpoint-{uuid.uuid4().hex[:8]}"
-    )
-    writer = writer.option("checkpointLocation", checkpoint_dir).outputMode("append")
-    if trigger_once:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime=f"{TRIGGER_INTERVAL_MS} milliseconds").start()
-
-
 def run_produce_pipeline(
     spark: SparkSession,
     drop_dir: str,
@@ -326,4 +313,4 @@ def run_produce_pipeline(
         read_request_stream(spark, drop_dir), serializer_format, replica_labels
     )
     writer = messages.writeStream.foreachBatch(publisher or FilePublisher(out_dir))
-    return _start(writer, out_dir, checkpoint_dir, trigger_once)
+    return start_query(writer, out_dir, checkpoint_dir, trigger_once)

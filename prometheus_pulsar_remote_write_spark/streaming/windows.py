@@ -1387,7 +1387,7 @@ def _transition_fold_kwargs() -> dict:
         # the carried last event seeding row 0 -- per-batch cost is a
         # few array ops + one frame build, not a per-row Python loop (a
         # hot key seeing thousands of rows per micro-batch folds at
-        # columnar speed; scripts/bench_fold.py tracks the ratio)
+        # columnar speed; SCALE.md's round-9 entry has the measured ratio)
         import numpy as np
         import pandas as pd
 
@@ -1484,7 +1484,7 @@ def _scrape_gap_fold_kwargs() -> dict:
     def _fold(key, pdf, prior):
         # vectorized shift-fold: gap[i] = ts[i] - ts[i-1] with the
         # carried last timestamp seeding row 0 -- pure int64 array ops,
-        # no per-row Python (scripts/bench_fold.py tracks the ratio)
+        # no per-row Python (SCALE.md's round-9 entry has the ratio)
         import numpy as np
         import pandas as pd
 
@@ -1684,7 +1684,7 @@ def _path_trigram_fold_kwargs() -> dict:
         # and the 'p2>p1>cur' strings are built only for the DISTINCT
         # code triples present (a per-unique-path lookup table), then
         # gathered -- elementwise string concat over object arrays was
-        # the fold's dominant cost (scripts/bench_fold.py tracks it).
+        # the fold's dominant cost (SCALE.md's round-9 entry measures it).
         # The state invariant p2-set => p1-set makes the emission
         # boundary a plain slice: rows before `start` lack a second
         # predecessor.

@@ -5,6 +5,8 @@ Usage:
     python scripts/plan_capture.py r14 before q1_pricing_summary ...
     python scripts/plan_capture.py r14 after --headline
 
+``--headline`` captures bench.py's HEADLINE queries.
+
 Writes plans/<round>/<name>_<tag>.txt (the judge checks plan claims in
 OPTIMIZATION_r*.md against these files). SF_DIR picks the corpus the
 plan is built against (default the bench's sf0.1, so PushedFilters /
@@ -18,21 +20,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import HEADLINE
 from prometheus_pulsar_remote_write_spark.plans import catalog
 from prometheus_pulsar_remote_write_spark.session import get_spark
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
-
-HEADLINE = [
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier_volume",
-    "q10_returned_items", "window_top3_orders_per_segment",
-    "events_sessionization", "produce_flatten", "produce_serialize_json",
-    "consume_batching", "consume_rate_5m", "docs_token_stats",
-    "events_hll_user_estimate", "docs_mixture_sample",
-    "docs_curation_pipeline", "docs_neardup_pairs", "docs_fingerprints",
-    "emb_cosine_topk", "emb_neardup_lsh", "emb_int8_quantize",
-    "docs_char_entropy", "multimodal_dhash_neardup", "docs_phrase_search",
-]
 
 
 def main() -> None:

@@ -816,44 +816,16 @@ def test_text_lsh_star_guard_sql_mirror_bit_exact(spark):
     assert recall >= 0.95, f"capped drop-set recall too low: {recall:.3f}"
 
 
-def test_signlsh_arrow_tier_parity_with_expression_tier(spark):
-    """The Arrow signature tier (np.cumsum sequential fold) must produce
-    byte-identical buckets — and therefore identical pair sets — to the
-    interpreted expression tier, on both float32 and float64 vectors."""
-    import numpy as np
-
-    from prometheus_pulsar_remote_write_spark.operators.similarity import (
-        embedding_neardup_pairs,
-    )
-
-    rng = np.random.default_rng(3)
-    rows = [(i, [float(x) for x in rng.normal(size=64)]) for i in range(300)]
-    for typ in ("float", "double"):
-        emb = spark.createDataFrame(
-            rows, f"vec_id long, embedding array<{typ}>"
-        )
-        kw = dict(threshold=0.1, bands=3, bits_per_band=3)
-        arrow = sorted(
-            tuple(r)
-            for r in embedding_neardup_pairs(
-                emb, signature_tier="arrow", **kw
-            ).collect()
-        )
-        expr = sorted(
-            tuple(r)
-            for r in embedding_neardup_pairs(
-                emb, signature_tier="expr", **kw
-            ).collect()
-        )
-        assert arrow == expr and arrow
-
-
 def test_signlsh_arrow_tier_nan_and_null_match_expression_tier(spark):
-    """NaN folds take the engines' NaN-above-everything branch ('1'), not
+    """``signlsh_buckets_batch`` (the Arrow pass every sign-LSH operator
+    runs) produces byte-identical buckets to the interpreted
+    ``signlsh_bits`` fold, row by row: on 300 random 64-dim vectors as
+    both array<float> and array<double> (pair sets are a function of the
+    buckets, so bucket parity carries pair parity), and at the edges --
+    NaN folds take the engines' NaN-above-everything branch ('1'), not
     numpy's IEEE NaN >= 0 == False; a NULL embedding yields all-'0'
-    buckets (the expression tier's otherwise branch) instead of crashing
-    the Arrow batch. Pinned by comparing the two tiers' raw bucket
-    arrays row by row."""
+    buckets (the fold's otherwise branch) instead of crashing the Arrow
+    batch."""
     import math
 
     import numpy as np
@@ -864,6 +836,41 @@ def test_signlsh_arrow_tier_nan_and_null_match_expression_tier(spark):
         signlsh_buckets_batch,
     )
 
+    def both_tiers(emb, dim, bands, bits_per_band):
+        signs = _hyperplane_signs(dim, bands * bits_per_band)
+        arrow = {
+            r.vec_id: r.b
+            for r in emb.select(
+                "vec_id",
+                signlsh_buckets_batch("embedding", signs, bands, bits_per_band).alias(
+                    "b"
+                ),
+            ).collect()
+        }
+        bits = signlsh_bits(F.col("embedding"), signs)
+        expr = {
+            r.vec_id: r.b
+            for r in emb.select(
+                "vec_id",
+                F.array(
+                    *[
+                        F.concat(*bits[b * bits_per_band : (b + 1) * bits_per_band])
+                        for b in range(bands)
+                    ]
+                ).alias("b"),
+            ).collect()
+        }
+        return arrow, expr
+
+    rng = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in rng.normal(size=64)]) for i in range(300)]
+    for typ in ("float", "double"):
+        emb = spark.createDataFrame(rows, f"vec_id long, embedding array<{typ}>")
+        arrow, expr = both_tiers(emb, 64, 3, 3)
+        assert arrow == expr and len(arrow) == 300
+        # the planes split the random vectors: more than one bucket per band
+        assert all(len({r[b] for r in arrow.values()}) > 1 for b in range(3))
+
     rng = np.random.default_rng(11)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(20)]
     nan_vec = [float(x) for x in rng.normal(size=8)]
@@ -871,29 +878,7 @@ def test_signlsh_arrow_tier_nan_and_null_match_expression_tier(spark):
     rows.append((100, nan_vec))
     rows.append((101, None))
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    bands, bits_per_band = 2, 3
-    signs = _hyperplane_signs(8, bands * bits_per_band)
-    arrow = {
-        r.vec_id: r.b
-        for r in emb.select(
-            "vec_id",
-            signlsh_buckets_batch("embedding", signs, bands, bits_per_band).alias("b"),
-        ).collect()
-    }
-    bits = signlsh_bits(F.col("embedding"), signs)
-    expr = {
-        r.vec_id: r.b
-        for r in emb.select(
-            "vec_id",
-            F.array(
-                *[
-                    F.concat(*bits[b * bits_per_band : (b + 1) * bits_per_band])
-                    for b in range(bands)
-                ]
-            ).alias("b"),
-        ).collect()
-    }
+    arrow, expr = both_tiers(emb, 8, 2, 3)
     assert arrow == expr
     assert arrow[101] == ["000", "000"]
     # the NaN fold really does take the '1' branch on the planes that
@@ -1071,7 +1056,7 @@ def test_emb_lsh_bucket_stats_exact_order_statistics(spark):
     bits, signs = auto_banded_signs(n, bands=4)
     sizes = np.sort(
         np.array(
-            _banded_embeddings(emb, signs, 4, bits, "arrow", "vec_id", "embedding")
+            _banded_embeddings(emb, signs, 4, bits, "vec_id", "embedding")
             .groupBy("band_id", "bucket")
             .count()
             .filter(F.col("count") >= 2)
@@ -1266,15 +1251,11 @@ def test_banded_embeddings_spreads_underparallel_scan(spark):
     signs = _hyperplane_signs(64, 6)
 
     narrow = emb.coalesce(1)
-    banded_narrow = _banded_embeddings(
-        narrow, signs, 2, 3, "arrow", "vec_id", "embedding"
-    )
+    banded_narrow = _banded_embeddings(narrow, signs, 2, 3, "vec_id", "embedding")
     assert banded_narrow.rdd.getNumPartitions() == want
 
     wide = emb.repartition(want + 2)
-    banded_wide = _banded_embeddings(
-        wide, signs, 2, 3, "arrow", "vec_id", "embedding"
-    )
+    banded_wide = _banded_embeddings(wide, signs, 2, 3, "vec_id", "embedding")
     assert banded_wide.rdd.getNumPartitions() == want + 2
 
     kw = dict(threshold=0.1, bands=2, bits_per_band=3)

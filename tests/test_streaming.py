@@ -299,6 +299,7 @@ def test_consume_pipeline_delivers_batches(spark, tmp_path):
     # POSTs happen on the executors (distributed default), so record them
     # via the filesystem, not a driver-local closure list
     post_dir = str(tmp_path / "posts")
+    agent_dir = str(tmp_path / "agents")
 
     def post_fn(url, body, headers):
         import hashlib
@@ -309,6 +310,9 @@ def test_consume_pipeline_delivers_batches(spark, tmp_path):
         name = f"{org or '_none'}-{hashlib.md5(body).hexdigest()}"
         with open(_os.path.join(post_dir, name), "wb") as fh:
             fh.write(body)
+        _os.makedirs(agent_dir, exist_ok=True)
+        with open(_os.path.join(agent_dir, name), "w") as fh:
+            fh.write(headers["User-Agent"])
         return 200
 
     sink = RemoteWriteSink(
@@ -325,6 +329,10 @@ def test_consume_pipeline_delivers_batches(spark, tmp_path):
         with open(os.path.join(post_dir, name), "rb") as fh:
             posted.append((name.split("-", 1)[0], fh.read()))
     assert len(posted) == 3
+    for name in os.listdir(agent_dir):
+        with open(os.path.join(agent_dir, name)) as fh:
+            assert fh.read() == "prometheus-pulsar-remote-write-spark/0.1.0"
+    assert len(os.listdir(agent_dir)) == 3
     total = 0
     for org, body in posted:
         req = prompb.decode_write_request(snappy_codec.decompress(body))
