@@ -5,15 +5,18 @@ The reference computes the Pulsar message key as FNV-1 64-bit (Go
 sorted (k, v) byte concatenation of the non-replica labels followed by the
 tenant id, rendered ``"hex %016x"`` (reference pkg/pulsar/serializers.go:91-114).
 
-Two tiers, by design:
-  - ``colocation_key_col``: Spark-native ``xxhash64`` -- JVM-side, codegen'd,
-    zero Python cost. Partitioning only needs *consistency* (equal label
-    sets -> equal key), not byte-parity with Go, so this is the hot path
-    used for repartitioning inside the engine at scale.
-  - ``sample_partition_key``: exact FNV-1 in Python, where byte-equality
-    with the reference's message keys matters. The produce edge calls it
-    once per series; ``partition_key_col`` wraps it in an Arrow-batched
-    pandas UDF for DataFrames of flat samples.
+``fnv1_64`` is the one scalar FNV-1 fold. Around it:
+  - ``sample_partition_key``: the reference's message key, ``fnv1_64``
+    over the canonical bytes, where byte-equality with the reference
+    matters. The produce edge calls it once per series;
+    ``partition_key_col`` wraps it in an Arrow-batched pandas UDF for
+    DataFrames of flat samples.
+  - ``fnv1_64_key_col``: the same fold vectorized in numpy over a column
+    of pre-built canonical strings, for the catalog's static label sets.
+  - ``colocation_key_col``: Spark-native ``xxhash64`` -- JVM-side,
+    codegen'd, zero Python cost. Partitioning only needs *consistency*
+    (equal label sets -> equal key), not byte-parity with Go, so this is
+    the hot path used for repartitioning inside the engine at scale.
 """
 
 from __future__ import annotations
@@ -35,26 +38,24 @@ _MASK64 = 0xFFFFFFFFFFFFFFFF
 
 def fnv1_64(data: bytes) -> int:
     """FNV-1 64-bit (multiply then xor), as Go hash/fnv.New64."""
-    h = FNV1_64_OFFSET
+    h, prime, mask = FNV1_64_OFFSET, FNV1_64_PRIME, _MASK64
     for b in data:
-        h = ((h * FNV1_64_PRIME) & _MASK64) ^ b
+        h = ((h * prime) & mask) ^ b
     return h
 
 
 def sample_partition_key(
     labels: dict | None, tenant_id: str, replica_labels: Iterable[str] = ()
 ) -> str:
-    """Pure-Python reference implementation of the reference's partitionKey."""
+    """The reference's partitionKey: ``fnv1_64`` over the name-sorted
+    (name, value) bytes of the non-replica labels, then the tenant."""
     replica = set(replica_labels)
-    h = FNV1_64_OFFSET
+    parts = []
     if labels:
         for k in sorted(k for k in labels if k not in replica):
-            for part in (k, labels[k]):
-                for b in part.encode("utf-8"):
-                    h = ((h * FNV1_64_PRIME) & _MASK64) ^ b
-    for b in (tenant_id or "").encode("utf-8"):
-        h = ((h * FNV1_64_PRIME) & _MASK64) ^ b
-    return f"hex {h:016x}"
+            parts += (k, labels[k])
+    parts.append(tenant_id or "")
+    return f"hex {fnv1_64(''.join(parts).encode('utf-8')):016x}"
 
 
 def partition_key_col(

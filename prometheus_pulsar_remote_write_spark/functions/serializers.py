@@ -17,12 +17,15 @@ Two tiers:
 
   * ``marshal_*`` / ``unmarshal_*`` pure-Python functions: byte-parity with
     the Go implementation (golden vectors from serializers_test.go pass
-    verbatim). The produce edge calls them per sample; ``serialize_col``
-    and ``deserialize`` wrap them in Arrow-batched pandas stages.
+    verbatim), every format including a custom Avro schema. The produce
+    edge calls them per sample; ``serialize_col`` and ``deserialize`` wrap
+    them in Arrow-batched pandas stages.
   * ``serialize_json_expr`` and friends: pure Column expressions (JVM-side,
-    codegen'd) for the analytics catalog, where both the Spark query and
-    its DuckDB oracle apply the same formatting rules. These cover values
-    with bounded decimal precision; arbitrary doubles need the UDF tier.
+    codegen'd) in the one form the analytics catalog runs -- a static,
+    byte-sorted label set (``label_entries``) and the default Avro
+    schema -- where both the Spark query and its DuckDB oracle apply the
+    same formatting rules. They cover values with at most 6 decimal
+    places; arbitrary doubles need the UDF tier.
 
 Note one deliberate divergence: Go's encoding/json HTML-escapes ``< > &``
 inside strings; we don't (the reference's own golden tests compare with
@@ -360,43 +363,24 @@ def go_sec_expr(timestamp_ms: Column) -> Column:
     return _trim_fixed_scale_expr(dec.cast(T.StringType()))
 
 
-def go_float_expr(value: Column, scale: int = 6) -> Column:
+def go_float_expr(value: Column) -> Column:
     """Bounded-precision 'f'-format rendering for doubles (no exponent).
 
-    Exact for values with <= ``scale`` decimal places and |v| < 10^(38-scale);
-    arbitrary doubles (and Inf/NaN) need ``serialize_col``'s UDF tier.
+    Exact for values with <= 6 decimal places and |v| < 10^32; arbitrary
+    doubles (and Inf/NaN) need ``serialize_col``'s UDF tier.
     """
-    dec = value.cast(T.DecimalType(38, scale))
+    dec = value.cast(T.DecimalType(38, 6))
     return _trim_fixed_scale_expr(dec.cast(T.StringType()))
 
 
-def labels_json_expr(labels: Column) -> Column:
-    """Render a string map as compact sorted JSON (no escaping -- for data
-    known to be quote-free, e.g. catalog-constructed label maps)."""
-    return F.concat(
-        F.lit("{"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.map_entries(labels)),
-                lambda e: F.concat(
-                    F.lit('"'), e["key"], F.lit('":"'), e["value"], F.lit('"')
-                ),
-            ),
-            ",",
-        ),
-        F.lit("}"),
-    )
-
-
 def labels_json_entries_expr(entries) -> Column:
-    """``labels_json_expr`` twin for a STATICALLY KNOWN label set:
+    """Compact sorted label JSON for a STATICALLY KNOWN label set:
     ``entries`` is a ((key, value Column), ...) sequence whose literal
-    keys are already in byte order. Skips the per-row
-    create_map -> map_entries -> array_sort -> transform chain (r15 wire
-    A/B: -0.27s/100k rows); a NULL value drops its entry exactly as the
-    map path does (concat -> NULL element -> array_join skip), so the
-    rendering is byte-identical for any data. Keys must be quote-free
-    literals (same caveat as labels_json_expr)."""
+    keys are already in byte order, so no per-row map is built, sorted or
+    transformed (r15 wire A/B: -0.27s/100k rows against that chain). A
+    NULL value drops its entry (concat -> NULL element -> array_join
+    skip), as a label missing from a map would. No escaping: keys and
+    values must be quote-free, as catalog-constructed labels are."""
     keys = [k for k, _ in entries]
     if keys != sorted(keys):
         raise ValueError(f"label entry keys must be byte-sorted, got {keys}")
@@ -443,29 +427,23 @@ def rfc3339_expr(timestamp_ms: Column) -> Column:
     return F.concat(base, frac, F.lit("Z"))
 
 
-def _labels_render(labels: Column, label_entries) -> tuple[Column, Column]:
-    """(labels JSON, __name__ value) from either the map column or a
-    static entry list (r15: the entries form skips the per-row map
-    build; byte-identical rendering either way)."""
-    if label_entries is not None:
-        name = dict(label_entries).get("__name__")
-        if name is None:
-            name = F.lit(None).cast(T.StringType())
-        return labels_json_entries_expr(label_entries), name
-    return labels_json_expr(labels), labels["__name__"]
+def _labels_render(label_entries) -> tuple[Column, Column]:
+    """(labels JSON, __name__ value) from a static entry list."""
+    name = dict(label_entries).get("__name__")
+    if name is None:
+        name = F.lit(None).cast(T.StringType())
+    return labels_json_entries_expr(label_entries), name
 
 
 def serialize_json_compat_expr(
-    timestamp: Column, value: Column, labels: Column, tenant_id: Column,
-    label_entries=None,
+    timestamp: Column, value: Column, tenant_id: Column, label_entries
 ) -> Column:
     """C2-shaped payload as a pure expression (keys in Go map-marshal sort
     order: labels < name < tenant_id < timestamp < value). Non-empty tenant
-    only -- the empty-tenant omission branch lives in the UDF tier.
-    ``label_entries`` renders the labels from a static byte-sorted
-    (key, Column) list instead of the map column (see
+    only -- the empty-tenant omission branch lives in the UDF tier. The
+    labels render from a static byte-sorted (key, Column) list (see
     labels_json_entries_expr)."""
-    lbl_json, name_val = _labels_render(labels, label_entries)
+    lbl_json, name_val = _labels_render(label_entries)
     return F.concat(
         F.lit('{"labels":'),
         lbl_json,
@@ -482,77 +460,40 @@ def serialize_json_compat_expr(
 
 
 def serialize_avro_json_expr(
-    timestamp: Column, value: Column, labels: Column, tenant_id: Column, schema=None,
-    label_entries=None,
+    timestamp: Column, value: Column, tenant_id: Column, label_entries
 ) -> Column:
-    """C3-shaped payload as a pure expression: the C2 fields in Avro
-    schema declaration order; default schema keeps tenant_id always
-    present (schema default '').
-
-    ``schema`` (JSON string/dict) swaps in a custom schema while staying
-    in whole-stage codegen: known fields render from their columns, a
-    field absent from the sample model renders its schema default as a
-    literal, and a missing-with-no-default field is a build-time error
-    (the reference's goavro encoder fails at encode time;
-    serializers.go:202-222)."""
-    fields = parse_avro_schema(schema) if schema is not None else AVRO_DEFAULT_PARSED
-    lbl_json, name_val = _labels_render(labels, label_entries)
-
-    def _field_value(name: str, default) -> Column:
-        if name == "timestamp":
-            return F.concat(F.lit('"'), rfc3339_expr(timestamp), F.lit('"'))
-        if name == "value":
-            return F.concat(F.lit('"'), go_float_expr(value), F.lit('"'))
-        if name == "name":
-            return F.concat(
-                F.lit('"'), F.coalesce(name_val, F.lit("")), F.lit('"')
-            )
-        if name == "labels":
-            return lbl_json
-        if name == "tenant_id":
-            ten = F.coalesce(tenant_id, F.lit(""))
-            if default is AVRO_NO_DEFAULT:
-                # datum carries tenant only when non-empty; no default =>
-                # an empty tenant cannot encode under this schema
-                ten = F.when(F.length(ten) > 0, ten).otherwise(
-                    F.raise_error(
-                        F.lit("avro schema field 'tenant_id' has no default "
-                              "and the sample has no tenant")
-                    )
-                )
-                return F.concat(F.lit('"'), ten, F.lit('"'))
-            return F.concat(
-                F.lit('"'),
-                F.when(F.length(ten) > 0, ten).otherwise(F.lit(str(default))),
-                F.lit('"'),
-            )
-        # schema-declared field outside the sample model: literal default
-        if default is AVRO_NO_DEFAULT:
-            raise ValueError(
-                f"avro schema field {name!r} has no default and is not a "
-                "sample field"
-            )
-        return F.lit(json.dumps(default, **_COMPACT))
-
+    """C3-shaped payload under the default schema as a pure expression:
+    the C2 fields in schema declaration order, tenant_id always present
+    (schema default ''). A custom schema is the UDF tier's
+    (``serialize_col("avro-json-compat=<schema>")``)."""
+    lbl_json, name_val = _labels_render(label_entries)
+    ten = F.coalesce(tenant_id, F.lit(""))
+    rendered = {
+        "timestamp": F.concat(F.lit('"'), rfc3339_expr(timestamp), F.lit('"')),
+        "value": F.concat(F.lit('"'), go_float_expr(value), F.lit('"')),
+        "name": F.concat(F.lit('"'), F.coalesce(name_val, F.lit("")), F.lit('"')),
+        "labels": lbl_json,
+        # the schema default for a sample with no tenant
+        "tenant_id": F.concat(
+            F.lit('"'), F.when(F.length(ten) > 0, ten).otherwise(F.lit("")), F.lit('"')
+        ),
+    }
     parts = [F.lit("{")]
-    for i, (name, default) in enumerate(fields):
+    for i, name in enumerate(AVRO_DEFAULT_FIELDS):
         if i:
             parts.append(F.lit(","))
-        parts.append(F.lit(json.dumps(name, **_COMPACT) + ":"))
-        parts.append(_field_value(name, default))
+        parts += [F.lit(f'"{name}":'), rendered[name]]
     parts.append(F.lit("}"))
     return F.concat(*parts)
 
 
 def serialize_json_expr(
-    timestamp: Column, value: Column, labels: Column, tenant_id: Column,
-    label_entries=None,
+    timestamp: Column, value: Column, tenant_id: Column, label_entries
 ) -> Column:
-    """C1-shaped payload as a pure expression (JVM hot path).
-    ``label_entries`` renders the labels from a static byte-sorted
-    (key, Column) list instead of the map column (see
+    """C1-shaped payload as a pure expression (JVM hot path). The labels
+    render from a static byte-sorted (key, Column) list (see
     labels_json_entries_expr)."""
-    lbl_json, _ = _labels_render(labels, label_entries)
+    lbl_json, _ = _labels_render(label_entries)
     tenant_part = F.when(
         F.length(tenant_id) > 0,
         F.concat(F.lit(',"tenant_id":"'), tenant_id, F.lit('"')),

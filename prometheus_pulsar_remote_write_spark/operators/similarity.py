@@ -852,16 +852,9 @@ def _assign_cells(
     corpus: DataFrame, cent: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
     """(id, vec, cell): each vector's nearest of the (cell, cent_vec)
-    rows, by 9-digit-quantized cosine with the lower cell winning ties."""
-    scored = corpus.select(F.col(id_col), F.col(vec_col)).join(F.broadcast(cent))
-    w = Window.partitionBy(id_col).orderBy(
-        F.desc(floor_quant_expr(cosine_expr(F.col(vec_col), F.col("cent_vec")), 9)),
-        F.asc("cell"),
-    )
-    return (
-        scored.withColumn("__r", F.row_number().over(w))
-        .filter(F.col("__r") == 1)
-        .select(id_col, vec_col, "cell")
+    rows, which is its one-cell ``ivf_probe``."""
+    return ivf_probe(corpus, cent, 1, id_col, vec_col).select(
+        F.col("query_id").alias(id_col), F.col("query_vec").alias(vec_col), "cell"
     )
 
 

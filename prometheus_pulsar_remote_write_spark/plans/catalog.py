@@ -39,6 +39,11 @@ for module in (pipeline, docs_vectors, events_batch, relational):
 #: locally strict-verified via scripts/check_oracle.py and the
 #: full-catalog pytest oracle run.
 _CHANGED: list = [
+    # the IVF cell assignment became the one-cell IVF probe: the executed
+    # plans of these two entries keep ``__r <= 1`` where they kept
+    # ``__r = 1``, and rank under the probe's column names
+    "emb_ivf_topk",
+    "emb_ivf_recall",
     # round 15 re-planned these entries (plans/r15 holds most of their
     # before/after plans), and each one's newest green record in
     # CORRECTNESS_r*.json is older than that (rounds 10-14), so no record

@@ -168,7 +168,6 @@ def produce_serialize_json(spark, sf_dir):
         serialize_json_expr(
             F.col("timestamp"),
             F.col("value"),
-            None,
             F.col("tenant_id"),
             label_entries=_flat_label_entries(),
         ).alias("payload"),
@@ -217,7 +216,6 @@ def produce_serialize_compat(spark, sf_dir):
         serialize_json_compat_expr(
             F.col("timestamp"),
             F.col("value"),
-            None,
             F.col("tenant_id"),
             label_entries=_flat_label_entries(),
         ).alias("payload"),
@@ -244,7 +242,6 @@ def produce_serialize_avro(spark, sf_dir):
         serialize_avro_json_expr(
             F.col("timestamp"),
             F.col("value"),
-            None,
             F.col("tenant_id"),
             label_entries=_flat_label_entries(),
         ).alias("payload"),

@@ -7,9 +7,10 @@ that receives snappy(proto(WriteRequest)) bodies and answers 400 on
 undecodable input (reference pkg/app/produce.go:124-181); the tenant is
 taken from the Basic Auth username or the X-Scope-OrgID header
 (pkg/context/handlers.go:8-40). Here the accepted body is spooled as
-``<spool>/<tenant>/<blob>.bin`` (atomic temp+rename; dot-prefixed temp
-names are hidden from Spark's file listing), and a body with no tenant
-goes under ``<spool>/TENANT_DIR_NONE/``. The produce pipeline takes the
+``<spool>/<tenant>/<blob>.bin`` (``streaming.replace_file``: atomic
+temp+rename, the temp name dot-prefixed and so hidden from Spark's file
+listing), and a body with no tenant goes under
+``<spool>/TENANT_DIR_NONE/``. The produce pipeline takes the
 tenant from that parent directory, so a stock Prometheus can
 remote-write at this listener and the Spark pipeline consumes it with no
 format shim. This module owns the spool layout.
@@ -33,6 +34,7 @@ import uuid
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from ..operators.metrics import render_exposition
+from ..streaming import replace_file
 from . import prompb
 
 #: The spool directory of a body that names no tenant; the produce
@@ -238,13 +240,8 @@ class RemoteWriteListener:
                         outer.rejected += 1
                     self._finish(400)
                     return
-                os.makedirs(target_dir, exist_ok=True)
                 # .bin suffix: the produce source's pathGlobFilter
-                name = f"{uuid.uuid4().hex}.bin"
-                tmp = os.path.join(target_dir, f".{name}")
-                with open(tmp, "wb") as fh:
-                    fh.write(body)
-                os.rename(tmp, os.path.join(target_dir, name))
+                replace_file(os.path.join(target_dir, f"{uuid.uuid4().hex}.bin"), body)
                 with outer._lock:
                     outer.accepted += 1
                     outer.accepted_by_tenant[tenant] = (

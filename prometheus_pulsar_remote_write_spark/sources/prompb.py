@@ -10,8 +10,11 @@ The wire schema (public prometheus/prompb/types.proto + remote.proto):
 
 The package needs no protobuf runtime: this hand-rolls the proto3
 wire format (varint tags, length-delimited messages, fixed64 doubles).
-Unknown fields are skipped, so richer senders (exemplars, metadata fields)
-still decode. The decoded Python shape matches WRITE_REQUEST_SCHEMA:
+Varints are read by ``snappy_codec.read_varint``, which refuses one
+longer than 10 bytes; an int64 field whose varint carries bits past 64
+raises too, so a malformed body is refused whole. Unknown fields are
+skipped, so richer senders (exemplars, metadata fields) still decode.
+The decoded Python shape matches WRITE_REQUEST_SCHEMA:
 
     {"timeseries": [{"labels": [{"name":..., "value":...}, ...],
                      "samples": [{"value":..., "timestamp":...}, ...]}]}
@@ -29,25 +32,10 @@ from __future__ import annotations
 import struct
 
 from . import snappy_codec
+from .snappy_codec import read_varint
 
 
 # --- low-level wire helpers -------------------------------------------------
-
-
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("prompb: truncated varint")
-        b = data[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("prompb: varint too long")
 
 
 def _write_varint(n: int) -> bytes:
@@ -62,10 +50,13 @@ def _write_varint(n: int) -> bytes:
             return bytes(out)
 
 
-def _zigzag_to_int64(n: int) -> int:
-    # proto3 int64 is plain two's-complement varint (NOT zigzag); negative
-    # values arrive as 10-byte varints. Normalize to signed.
+def _to_int64(n: int) -> int:
+    # proto3 int64 is plain two's-complement varint (NOT zigzag): a
+    # negative value arrives as a 10-byte varint ending in 0x01. A 10th
+    # byte above 1 sets bits past 64, which no int64 has.
     if n >= 1 << 63:
+        if n >> 64:
+            raise ValueError("prompb: int64 field needs more than 64 bits")
         n -= 1 << 64
     return n
 
@@ -87,13 +78,13 @@ def _fields(data: bytes):
     pos = 0
     n = len(data)
     while pos < n:
-        key, pos = _read_varint(data, pos)
+        key, pos = read_varint(data, pos)
         field, wire = key >> 3, key & 0x07
         if wire == 0:
-            value, pos = _read_varint(data, pos)
+            value, pos = read_varint(data, pos)
         else:
             if wire == 2:  # length-delimited
-                length, pos = _read_varint(data, pos)
+                length, pos = read_varint(data, pos)
             elif wire in _FIXED_WIDTH:
                 length = _FIXED_WIDTH[wire]
             else:
@@ -125,7 +116,7 @@ def _decode_sample(data: bytes) -> dict:
         if field == 1 and wire == 1:
             value = struct.unpack("<d", val)[0]
         elif field == 2 and wire == 0:
-            timestamp = _zigzag_to_int64(val)
+            timestamp = _to_int64(val)
     return {"value": value, "timestamp": timestamp}
 
 

@@ -10,6 +10,10 @@ pyarrow wants the uncompressed size from the caller, and zero-pads the
 output when it is given a larger one. So ``decompress`` reads the
 preamble itself, refuses a claim that no body of this length can
 decode to, and passes pyarrow exactly the claimed size.
+
+``read_varint`` is the package's one base-128 varint reader: the
+preamble here and every protobuf field in ``prompb`` (which imports this
+module) go through it.
 """
 
 from __future__ import annotations
@@ -19,12 +23,16 @@ import pyarrow as pa
 _CODEC = pa.Codec("snappy")
 
 
-def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
+def read_varint(data: bytes, pos: int) -> tuple[int, int]:
+    """(value, next position) of the varint at ``pos``; ``ValueError`` when
+    it is truncated or runs past 10 bytes, the most a 64-bit value takes.
+    The 10th byte may still carry bits above 64; a caller that needs a
+    64-bit value checks it once per field."""
     result = 0
     shift = 0
     while True:
         if pos >= len(data):
-            raise ValueError("snappy: truncated varint")
+            raise ValueError("truncated varint")
         b = data[pos]
         pos += 1
         result |= (b & 0x7F) << shift
@@ -32,12 +40,12 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
             return result, pos
         shift += 7
         if shift > 63:
-            raise ValueError("snappy: varint too long")
+            raise ValueError("varint longer than 10 bytes")
 
 
 def decompress(data: bytes) -> bytes:
     """One snappy block -> its bytes; ``ValueError`` on any malformed block."""
-    size, pos = _read_varint(data, 0)
+    size, pos = read_varint(data, 0)
     # No element expands more than a 3-byte copy writing 64 bytes, so a
     # larger claim is forged: refuse it before allocating anything for it.
     if size * 3 > (len(data) - pos) * 64:

@@ -1,4 +1,5 @@
-"""Structured Streaming pipelines: the reference's produce/consume loops."""
+"""Structured Streaming pipelines: the reference's produce/consume loops,
+and the file and client primitives both edges share."""
 
 import os
 import uuid
@@ -25,3 +26,35 @@ def start_query(
     if trigger_once:
         return writer.trigger(availableNow=True).start()
     return writer.trigger(processingTime=f"{trigger_interval_ms} milliseconds").start()
+
+
+def replace_file(path: str, data: bytes) -> None:
+    """Write ``path`` whole or not at all: the bytes go to a dot-named
+    temp file beside it (hidden from Spark's file listing, and short
+    whatever ``path``'s name), which is then renamed over ``path``. No
+    fsync: a crash may lose the file, never leave half of it."""
+    folder = os.path.dirname(path)
+    os.makedirs(folder, exist_ok=True)
+    tmp = os.path.join(folder, f".{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "wb") as fh:
+            fh.write(data)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
+#: the clients a Python worker keeps across tasks and micro-batches
+_WORKER_CACHE: dict = {}
+
+
+def worker_cached(key, factory):
+    """The object this Python worker keeps under ``key``, built by
+    ``factory()`` on first use (A5 connection reuse: the reference keeps
+    ONE shared producer and HTTP client per process, CHANGELOG.md:20-21;
+    in Spark that is one per executor Python worker)."""
+    obj = _WORKER_CACHE.get(key)
+    if obj is None:
+        obj = _WORKER_CACHE[key] = factory()
+    return obj

@@ -50,7 +50,7 @@ from ..functions.serializers import deserialize, resolve_unmarshaler
 from ..operators.metrics import DeliveryMetrics
 from ..sources import prompb
 from .. import __version__
-from . import TRIGGER_INTERVAL_MS, start_query
+from . import TRIGGER_INTERVAL_MS, replace_file, start_query, worker_cached
 from .batcher import DEFAULT_BATCH_SIZE
 
 #: the User-Agent header of every remote-write POST
@@ -85,17 +85,6 @@ def parse_samples(messages: DataFrame, fmt: str = "json") -> DataFrame:
     benchmark's traced probe."""
     parsed = deserialize(messages, fmt, keep_cols=["payload"])
     return parsed.withColumn("labels_json", F.to_json(F.col("labels")))
-
-
-def _replace_file(path: str, text: str) -> None:
-    """Replace ``path`` whole: write a dot-named sibling (hidden from
-    Spark's file listing), then rename it over ``path``."""
-    folder, name = os.path.split(path)
-    os.makedirs(folder, exist_ok=True)
-    tmp = os.path.join(folder, "." + name)
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(text)
-    os.replace(tmp, path)
 
 
 #: bytes in a file name on common file systems (ext4, xfs, tmpfs)
@@ -165,11 +154,9 @@ class RemoteWriteSink:
         self, query_id: str, epoch_id: int, tenant_id: str, batch_seq, body: bytes
     ) -> None:
         """D6: the rejected body, one flat file per (tenant, epoch, batch,
-        query), named by ``_dlq_name``."""
-        os.makedirs(self.dlq_dir, exist_ok=True)
+        query), named by ``_dlq_name`` and written whole or not at all."""
         name = _dlq_name(query_id, epoch_id, tenant_id, batch_seq)
-        with open(os.path.join(self.dlq_dir, name), "wb") as fh:
-            fh.write(body)
+        replace_file(os.path.join(self.dlq_dir, name), body)
 
     def _poison_write(
         self, poison_dir: str, query_id: str, epoch_id: int, payloads: list
@@ -181,7 +168,7 @@ class RemoteWriteSink:
             for p in payloads
         )
         path = os.path.join(poison_dir, f"epoch={epoch_id}-query={query_id}.json")
-        _replace_file(path, "".join(lines))
+        replace_file(path, "".join(lines).encode())
 
     def __call__(
         self, batch_df: DataFrame, epoch_id: int, poison_dir: str, fmt: str = "json"
@@ -239,7 +226,8 @@ class RemoteWriteSink:
             else:
                 self.metrics.count_sent(tenant_id, n)
             settled.add((tenant_id, batch_seq))
-        _replace_file(ledger, json.dumps({"epoch": epoch_id, "settled": sorted(settled)}))
+        ledger_json = json.dumps({"epoch": epoch_id, "settled": sorted(settled)})
+        replace_file(ledger, ledger_json.encode())
         if recoverable:
             t, b, code = recoverable[0]
             self.metrics.count_retry(t)
@@ -365,21 +353,10 @@ def dedup_state_metrics(query) -> dict:
 # Executor-side delivery (the 100 TB path)
 # ---------------------------------------------------------------------------
 
-#: per-worker singleton HTTP session (A5 connection reuse: the reference
-#: keeps ONE shared producer/consumer per process, CHANGELOG.md:20-21 --
-#: the Spark idiom is one client per executor python worker, created
-#: lazily and reused across partitions/micro-batches).
-_WORKER_CLIENTS: dict = {}
+def _http_session():
+    import requests
 
-
-def worker_client(url: str):
-    client = _WORKER_CLIENTS.get(url)
-    if client is None:
-        import requests
-
-        client = requests.Session()
-        _WORKER_CLIENTS[url] = client
-    return client
+    return requests.Session()
 
 
 def post_batches_distributed(
@@ -415,7 +392,7 @@ def post_batches_distributed(
     import pandas as pd
 
     post = post_fn or (
-        lambda u, body, headers: worker_client(u)
+        lambda u, body, headers: worker_cached(("http", u), _http_session)
         .post(u, data=body, headers=headers, timeout=send_timeout_s)
         .status_code
     )

@@ -39,7 +39,7 @@ from ..functions.serializers import resolve_marshaler
 from ..schema import DEFAULT_REPLICA_LABELS
 from ..sources import prompb
 from ..sources.http_listener import TENANT_DIR_NONE
-from . import start_query
+from . import start_query, worker_cached
 
 
 def read_request_stream(
@@ -171,23 +171,6 @@ class FilePublisher:
         )
 
 
-#: per-worker broker producer cache (A5 connection reuse, one client per
-#: executor python worker -- the same idiom as consume.worker_client)
-_WORKER_PRODUCERS: dict = {}
-
-
-def worker_producer(factory, cache_key: str):
-    """Get-or-create the worker-local producer for ``cache_key`` (A5:
-    the reference keeps ONE shared producer per process,
-    CHANGELOG.md:20-21 -- repeated partitions/micro-batches on the same
-    python worker reuse the same client/connection pool)."""
-    producer = _WORKER_PRODUCERS.get(cache_key)
-    if producer is None:
-        producer = factory()
-        _WORKER_PRODUCERS[cache_key] = producer
-    return producer
-
-
 class BrokerPublisher:
     """A2 on a REAL message broker: the adapter seam where a broker client
     (e.g. an Apache Pulsar producer) drops into the produce pipeline in
@@ -227,7 +210,7 @@ class BrokerPublisher:
         factory, key, do_flush = self.client_factory, self.cache_key, self.flush
 
         def _send_partition(rows) -> None:
-            producer = worker_producer(factory, key)
+            producer = worker_cached(("producer", key), factory)
             n = 0
             for row in rows:
                 payload = row.payload

@@ -658,7 +658,7 @@ def test_pulsar_adapter_pool_option_and_one_client_per_worker(monkeypatch):
     producer). An SDK whose Client lacks the pool kwarg still works."""
     import sys
 
-    from prometheus_pulsar_remote_write_spark.streaming import produce
+    from prometheus_pulsar_remote_write_spark import streaming
     from prometheus_pulsar_remote_write_spark.streaming.pulsar_adapter import (
         make_pulsar_bus,
     )
@@ -668,10 +668,12 @@ def test_pulsar_adapter_pool_option_and_one_client_per_worker(monkeypatch):
     options = {"url": "pulsar://b:6650", "max_connections_per_broker": 3}
     publisher = make_pulsar_bus("metrics", options).sink()
 
-    monkeypatch.setattr(produce, "_WORKER_PRODUCERS", {}, raising=True)
+    monkeypatch.setattr(streaming, "_WORKER_CACHE", {}, raising=True)
     # simulate 4 partition tasks landing on the same python worker
     producers = [
-        produce.worker_producer(publisher.client_factory, publisher.cache_key)
+        streaming.worker_cached(
+            ("producer", publisher.cache_key), publisher.client_factory
+        )
         for _ in range(4)
     ]
     assert len(calls["clients"]) == 1, "A5 violated: one client per worker"

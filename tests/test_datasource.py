@@ -10,6 +10,8 @@ import pytest
 
 from prometheus_pulsar_remote_write_spark.sources import prompb
 
+from tests.test_wire_codecs import OVERLONG_TIMESTAMP_VARINTS, body_with_timestamp_varint
+
 
 def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     """A1 transport end-to-end: real HTTP remote-write POSTs (Basic Auth /
@@ -65,10 +67,14 @@ def test_http_listener_bridges_posts_into_blob_source(spark, tmp_path):
     # valid snappy around a request cut short inside a sample
     truncated = snappy_codec.decompress(body("m5", 1))[:-3]
     assert post(snappy_codec.compress(truncated)) == 400
+    # a sample timestamp whose varint carries bits past 64
+    for varint in OVERLONG_TIMESTAMP_VARINTS:
+        assert post(body_with_timestamp_varint(varint)) == 400
     assert post(body("m4", 1), path="/nope") == 404
-    assert listener.accepted == 3 and listener.rejected == 2
+    assert listener.accepted == 3 and listener.rejected == 4
     assert listener.accepted_by_tenant == {"tenant-a": 1, "tenant-b": 1, "": 1}
     listener.stop()
+    assert len(list((tmp_path / "spool").rglob("*.bin"))) == 3
 
     bodies = (
         spark.read.format("binaryFile")

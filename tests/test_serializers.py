@@ -194,9 +194,21 @@ def test_deserialize_keeps_nan_sample_nan(spark):
     assert rows[None] is None
 
 
+def _label_entries(rows):
+    """The rows' label maps as the static entry list the catalog passes
+    the expression tier: every key any row holds, in byte order, each
+    read from the ``labels`` column, so a key a row lacks reads NULL and
+    drops out of that row's JSON."""
+    from pyspark.sql import functions as F
+
+    keys = sorted({k for row in rows for k in row[2]})
+    return tuple((k, F.col("labels")[k]) for k in keys)
+
+
 def test_serialize_json_expr_matches_udf(spark):
-    """The JVM expression tier agrees with the byte-parity tier on
-    bounded-precision data (the catalog's operating envelope)."""
+    """The JVM expression tier, in the static label-entry form the catalog
+    runs, agrees with the byte-parity tier on bounded-precision data (the
+    catalog's operating envelope), an empty tenant included."""
     from prometheus_pulsar_remote_write_spark.functions.serializers import (
         serialize_col,
         serialize_json_expr,
@@ -214,7 +226,7 @@ def test_serialize_json_expr_matches_udf(spark):
     out = df.select(
         serialize_col("json").alias("exact"),
         serialize_json_expr(
-            F.col("timestamp"), F.col("value"), F.col("labels"), F.col("tenant_id")
+            F.col("timestamp"), F.col("value"), F.col("tenant_id"), _label_entries(rows)
         ).alias("expr"),
     ).collect()
     for r in out:
@@ -222,8 +234,9 @@ def test_serialize_json_expr_matches_udf(spark):
 
 
 def test_serialize_compat_avro_expr_match_udf(spark):
-    """C2/C3 expression tiers agree with the golden-byte UDF tier on
-    bounded-precision, non-empty-tenant data (the catalog envelope)."""
+    """C2/C3 expression tiers, in the static label-entry form the catalog
+    runs, agree with the golden-byte UDF tier on bounded-precision,
+    non-empty-tenant data (the catalog envelope)."""
     from prometheus_pulsar_remote_write_spark.functions.serializers import (
         serialize_avro_json_expr,
         serialize_col,
@@ -240,7 +253,7 @@ def test_serialize_compat_avro_expr_match_udf(spark):
     df = spark.createDataFrame(
         rows, "timestamp long, value double, labels map<string,string>, tenant_id string"
     )
-    args = (F.col("timestamp"), F.col("value"), F.col("labels"), F.col("tenant_id"))
+    args = (F.col("timestamp"), F.col("value"), F.col("tenant_id"), _label_entries(rows))
     out = df.select(
         serialize_col("json-compat").alias("compat_exact"),
         serialize_json_compat_expr(*args).alias("compat_expr"),
@@ -380,13 +393,12 @@ def test_marshal_avro_custom_schema_missing_field_errors():
 
 
 def test_serialize_custom_avro_expr_and_udf_match(spark):
-    """Both tiers honor the custom schema and agree byte-for-byte; the
-    fmt string 'avro-json-compat=<inline json>' resolves like the
-    reference's serializer config."""
-    from pyspark.sql import functions as F
-
+    """The UDF tier honors a custom schema given as the fmt string
+    'avro-json-compat=<inline json>', resolved like the reference's
+    serializer config, to the golden bytes. A custom schema has no
+    expression form: the catalog runs only the default one."""
     from prometheus_pulsar_remote_write_spark.functions.serializers import (
-        serialize_avro_json_expr,
+        make_avro_marshaler,
         serialize_col,
     )
 
@@ -397,17 +409,15 @@ def test_serialize_custom_avro_expr_and_udf_match(spark):
     df = spark.createDataFrame(
         rows, "timestamp long, value double, labels map<string,string>, tenant_id string"
     )
-    args = (F.col("timestamp"), F.col("value"), F.col("labels"), F.col("tenant_id"))
     out = df.select(
-        serialize_col("avro-json-compat=" + CUSTOM_AVRO_SCHEMA).alias("exact"),
-        serialize_avro_json_expr(*args, schema=CUSTOM_AVRO_SCHEMA).alias("expr"),
+        serialize_col("avro-json-compat=" + CUSTOM_AVRO_SCHEMA).alias("exact")
     ).collect()
-    for r in out:
-        assert r.exact == r.expr
-    # spot-check the golden bytes for the first fixture row
+    # the golden bytes for the first fixture row
     assert out[0].exact == GOLDEN_CUSTOM_AVRO[TENANT].replace(
         '"1970-01-01T00:00:00Z"', '"1970-01-01T00:00:01Z"'
     )
+    marshal = make_avro_marshaler(CUSTOM_AVRO_SCHEMA)
+    assert out[1].exact == marshal(*rows[1])
 
 
 def test_avro_schema_file_resolution(tmp_path):

@@ -34,6 +34,7 @@ from prometheus_pulsar_remote_write_spark.streaming.produce import (
 
 from tests.conftest import SF_SMOKE as SF
 from tests.test_serializers import CUSTOM_AVRO_SCHEMA
+from tests.test_wire_codecs import OVERLONG_TIMESTAMP_VARINTS, body_with_timestamp_varint
 
 
 def _write_body(path: str, series: list[tuple[dict, list[tuple[float, int]]]]) -> int:
@@ -117,6 +118,32 @@ def test_produce_skips_body_repeating_a_label_name(spark, drop_dir, tmp_path):
     rows = spark.read.json(os.path.join(out_dir, "epoch=*")).collect()
     assert len(rows) == n_samples
     assert all('"a":' not in r["payload"] for r in rows)
+
+
+def test_produce_skips_bodies_with_timestamps_past_int64(spark, tmp_path):
+    """A body whose sample timestamp does not fit an int64 is skipped like
+    any undecodable body, and the good body beside it is published. The
+    json-compat marshaler cannot render such a timestamp, so a body that
+    reached it would fail the query on every replay."""
+    d = tmp_path / "drop"
+    n_good = _write_body(
+        str(d / "tenant-a" / "good.bin"),
+        [({"__name__": "up", "job": "api"}, [(1.0, 1000), (2.0, 2000)])],
+    )
+    for i, varint in enumerate(OVERLONG_TIMESTAMP_VARINTS):
+        (d / "tenant-a" / f"overlong-{i}.bin").write_bytes(
+            body_with_timestamp_varint(varint)
+        )
+    out_dir = str(tmp_path / "out")
+    q = run_produce_pipeline(
+        spark, str(d), out_dir, serializer_format="json-compat", trigger_once=True
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    rows = spark.read.json(os.path.join(out_dir, "epoch=*")).collect()
+    assert len(rows) == n_good
+    stamps = sorted(json.loads(r["payload"])["timestamp"] for r in rows)
+    assert stamps == ["1970-01-01T00:00:01Z", "1970-01-01T00:00:02Z"]
 
 
 #: label sets for the produce parity test: replica labels, a series with
@@ -811,6 +838,48 @@ def test_dlq_parks_tenants_too_long_for_a_file_name(spark, tmp_path):
             req = prompb.decode_body(fh.read())
         stamps += [s["timestamp"] for ts in req["timeseries"] for s in ts["samples"]]
     assert sorted(stamps) == [1000, 1001]
+
+
+def test_dlq_write_interrupted_mid_file_parks_nothing(tmp_path, monkeypatch):
+    """A DLQ body whose write fails half-way (a full disk) leaves nothing
+    under a ``tenant=...bin`` name, so no half body is ever parked as if it
+    were the rejected one."""
+    import builtins
+    import errno
+
+    dlq = str(tmp_path / "dlq")
+    real_open = builtins.open
+
+    class _HalfWriter:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, data):
+            self.fh.write(data[: len(data) // 2])
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+    def _open(path, mode="r", *args, **kwargs):
+        fh = real_open(path, mode, *args, **kwargs)
+        return _HalfWriter(fh) if "w" in mode and str(path).startswith(dlq) else fh
+
+    body = prompb.encode_body(
+        [{"labels": [{"name": "__name__", "value": "up"}],
+          "samples": [{"value": 1.0, "timestamp": 1000}]}]
+    )
+    sink = RemoteWriteSink(url="http://s", dlq_dir=dlq)
+    monkeypatch.setattr(builtins, "open", _open)
+    try:
+        with pytest.raises(OSError):
+            sink._dlq_write("q", 3, "team-a", 0, body)
+    finally:
+        monkeypatch.undo()
+    assert os.listdir(dlq) == []
 
 
 def test_app_consume_subscriptions_share_a_work_dir(spark, tmp_path):

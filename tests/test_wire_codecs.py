@@ -68,7 +68,7 @@ def test_snappy_codec_error_surfaces_as_value_error():
 
 def _element_kinds(block: bytes) -> list[int]:
     """The low two tag bits of each element of a snappy block."""
-    _, pos = snappy_codec._read_varint(block, 0)
+    _, pos = snappy_codec.read_varint(block, 0)
     kinds = []
     while pos < len(block):
         tag = block[pos]
@@ -96,6 +96,21 @@ def test_snappy_compress_emits_copies():
 
 
 # --- prompb ------------------------------------------------------------------
+
+
+#: sample-timestamp varints that no int64 has: 10 bytes ending in 0x7f,
+#: and 11 bytes
+OVERLONG_TIMESTAMP_VARINTS = [b"\xff" * 9 + b"\x7f", b"\x80" * 10 + b"\x01"]
+
+
+def body_with_timestamp_varint(varint: bytes) -> bytes:
+    """A one-sample remote-write body (series ``up``, value 1.0) whose
+    timestamp field holds ``varint`` verbatim."""
+    sample = b"\x09" + struct.pack("<d", 1.0) + b"\x10" + varint
+    series = prompb._len_delimited(
+        1, prompb._encode_label({"name": "__name__", "value": "up"})
+    ) + prompb._len_delimited(2, sample)
+    return snappy_codec.compress(prompb._len_delimited(1, series))
 
 
 def _req(n_series=3, n_samples=2):
@@ -136,6 +151,15 @@ def test_prompb_negative_timestamp_and_specials():
     out = prompb.decode_write_request(prompb.encode_write_request(req))
     assert out["timeseries"][0]["samples"][0]["timestamp"] == -1
     assert out["timeseries"][0]["samples"][0]["value"] == float("inf")
+    # -1 is the 10-byte varint ending in 0x01; a 10th byte above 1, or an
+    # 11th byte, carries bits past 64 that no int64 has
+    (sample,) = prompb.decode_body(body_with_timestamp_varint(b"\xff" * 9 + b"\x01"))[
+        "timeseries"
+    ][0]["samples"]
+    assert sample["timestamp"] == -1
+    for varint in OVERLONG_TIMESTAMP_VARINTS:
+        with pytest.raises(ValueError):
+            prompb.decode_body(body_with_timestamp_varint(varint))
 
 
 def test_prompb_skips_unknown_fields():
